@@ -151,17 +151,15 @@ def test_accessibility_index_duplicate_edges_no_fanout(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").limit(50)
     edges = knn.knn_edges(emb, k=3).select("src", "dst", "dist")
     clean = graph.accessibility_index(edges, emb).orderBy("vec_id").collect()
-    # duplicating every edge row must not change bidir counts or the
-    # edge-length average via join fan-out (it doubles both the raw
-    # rows and the flags consistently, leaving per-src aggregates'
-    # bidir SUM doubled if rev fans out — guard against regression)
+    # duplicating every edge row must leave both per-node metrics as
+    # they were: the mutual count is duplicate-safe by construction,
+    # and the average sees every distance exactly twice
     dup = edges.unionByName(edges)
     doubled = graph.accessibility_index(dup, emb).orderBy("vec_id").collect()
+    assert len(clean) == len(doubled) == 50
     for a, b in zip(clean, doubled):
-        # duplicated input doubles each src's rows; counts double but
-        # averages and mutual-flag SEMANTICS stay consistent: bidir
-        # must be exactly 2x (each row flagged once), never 4x (fanout)
-        assert b["bidir_edges"] == 2 * a["bidir_edges"], (a, b)
+        assert a["vec_id"] == b["vec_id"]
+        assert b["bidir_edges"] == a["bidir_edges"], (a, b)
         if a["avg_edge_len"] is not None:
             assert abs(b["avg_edge_len"] - a["avg_edge_len"]) < 1e-12
 
@@ -265,11 +263,10 @@ def test_k_core_matches_bruteforce_and_tiers(spark, monkeypatch):
 
 
 def test_mutual_edges_match_reverse_semi_join(spark, sf_dir):
-    """Optimization round 13: the one-pass canonical-pair-count mutual
+    """Optimization round 13: the one-pass canonical-pair mutual
     graph must equal the reverse-semi-join formulation it replaced —
     on the real kNN edge table AND on a crafted table with one-way
-    edges, self-loops excluded by construction, and (for dedup=True)
-    duplicated rows."""
+    edges and duplicated rows."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     e = knn.knn_edges(emb, k=5).select("src", "dst").localCheckpoint(eager=True)
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -292,19 +289,106 @@ def test_mutual_edges_match_reverse_semi_join(spark, sf_dir):
     assert new_und == old_und
 
     # crafted multigraph: (1,2) mutual, (3,4) one-way, (5,6) mutual but
-    # duplicated on one side — dedup=True must not let the duplicate
-    # fake a count of 2
+    # duplicated on one side — the duplicate must not change the pair set
     rows = [(1, 2), (2, 1), (3, 4), (5, 6), (5, 6), (6, 5)]
     m = spark.createDataFrame(rows, "src long, dst long")
-    got = {
-        (r["a"], r["b"])
-        for r in graph.mutual_undirected(m, dedup=True).collect()
-    }
+    got = {(r["a"], r["b"]) for r in graph.mutual_undirected(m).collect()}
     assert got == {(1, 2), (5, 6)}
-    # without dedup the contract requires unique input; the duplicated
-    # (5,6) row would otherwise double-count — assert the documented
-    # failure mode stays (a one-way duplicate must NOT appear mutual)
+    # a one-way duplicate must NOT appear mutual
     one_way_dup = spark.createDataFrame(
         [(7, 8), (7, 8)], "src long, dst long"
     )
-    assert graph.mutual_undirected(one_way_dup, dedup=True).count() == 0
+    assert graph.mutual_undirected(one_way_dup).count() == 0
+
+
+# float64 tolerance for ``ai`` and ``avg_edge_len``: each z-score sums
+# at most a few thousand float64 terms (relative error ~ n·eps ≈ 1e-13
+# at eps = 2.2e-16); 1e-9 keeps a wide margin yet is orders of magnitude
+# below the ~1e-2 shift any one-off mutual count or dropped edge row
+# causes
+AI_TOL = 1e-9
+
+
+def _reference_accessibility(edge_rows, node_ids):
+    """``{node: (bidir_edges, avg_edge_len, ai)}`` from collected
+    ``(src, dst, dist)`` rows, in plain Python/NumPy: mutuality is read
+    off the SET of directed pairs (self-loops excluded), the average
+    over every out-edge row, z-scores with population std skipping
+    nodes without out-edges."""
+    pairs = {(s, d) for s, d, _ in edge_rows}
+    bidir = {u: 0 for u in node_ids}
+    for s, d in pairs:
+        if s != d and (d, s) in pairs:
+            bidir[s] += 1
+    dists = {u: [] for u in node_ids}
+    for s, _, w in edge_rows:
+        dists[s].append(w)
+    avg = {u: float(np.mean(v)) if v else None for u, v in dists.items()}
+    e = np.array([bidir[u] for u in node_ids], dtype=np.float64)
+    d = np.array([a for a in avg.values() if a is not None], dtype=np.float64)
+    return {
+        u: (
+            bidir[u],
+            avg[u],
+            None
+            if avg[u] is None
+            else 0.5 * (avg[u] - d.mean()) / d.std()
+            - 0.5 * (bidir[u] - e.mean()) / e.std(),
+        )
+        for u in node_ids
+    }
+
+
+def _assert_matches_reference(edges, nodes):
+    edge_rows = [(r["src"], r["dst"], r["dist"]) for r in edges.collect()]
+    node_ids = [r["vec_id"] for r in nodes.collect()]
+    want = _reference_accessibility(edge_rows, node_ids)
+    got = {
+        r["vec_id"]: (r["bidir_edges"], r["avg_edge_len"], r["ai"])
+        for r in graph.accessibility_index(edges, nodes).collect()
+    }
+    bidir = {
+        r["vec_id"]: r["bidir_edges"]
+        for r in graph.bidirectional_edge_counts(edges, nodes).collect()
+    }
+    assert set(got) == set(bidir) == set(want)
+    for u, (w_bidir, w_avg, w_ai) in want.items():
+        g_bidir, g_avg, g_ai = got[u]
+        assert g_bidir == bidir[u] == w_bidir, (u, got[u], bidir[u], want[u])
+        if w_avg is None:
+            assert g_avg is None and g_ai is None, (u, got[u])
+        else:
+            assert abs(g_avg - w_avg) <= AI_TOL, (u, got[u], want[u])
+            assert abs(g_ai - w_ai) <= AI_TOL, (u, got[u], want[u])
+    return want
+
+
+def test_accessibility_matches_reference_on_knn_edges(spark, sf_dir):
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    edges = knn.knn_edges(emb, k=5).select("src", "dst", "dist")
+    edges = edges.localCheckpoint(eager=True)
+    want = _assert_matches_reference(edges, emb.select("vec_id"))
+    assert any(b > 0 for b, _, _ in want.values())
+
+
+def test_accessibility_matches_reference_on_crafted_edges(spark):
+    """Self-loop (0,0), one-way edge 1→2, mutual pair (3,4) whose 3→4
+    row is duplicated, node 5 with edges only into the others, and an
+    isolated node 6. Self-loops count 0 and the duplicate must not fake
+    mutuality for anyone."""
+    rows = [
+        (0, 0, 0.5),
+        (0, 1, 1.0),
+        (1, 2, 1.0),
+        (3, 4, 2.0),
+        (3, 4, 2.0),
+        (4, 3, 2.0),
+        (5, 0, 3.0),
+        (5, 3, 1.5),
+    ]
+    edges = spark.createDataFrame(rows, "src long, dst long, dist double")
+    nodes = spark.createDataFrame([(i,) for i in range(7)], "vec_id long")
+    want = _assert_matches_reference(edges, nodes)
+    assert {u: b for u, (b, _, _) in want.items()} == {
+        0: 0, 1: 0, 2: 0, 3: 1, 4: 1, 5: 0, 6: 0
+    }

@@ -1,0 +1,50 @@
+import os
+
+import pytest
+
+from vector_database_watermarking_spark import session
+
+pytestmark = pytest.mark.skipif(
+    not os.path.exists("/proc/meminfo"), reason="needs /proc/meminfo"
+)
+
+
+def _mem_total_mb() -> int:
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) // 1024
+    raise AssertionError("no MemTotal in /proc/meminfo")
+
+
+def test_default_driver_heap_fits_physical_ram():
+    heap = session.default_driver_memory()
+    assert heap.endswith("m")
+    mb = int(heap[:-1])
+    assert 0 < mb <= min(_mem_total_mb() // 2, session.DRIVER_MEM_CAP_MB)
+
+
+def test_session_heap_fits_physical_ram(spark):
+    """The running JVM's max heap, whatever configured it, stays below
+    the host's physical RAM."""
+    max_heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    assert 0 < max_heap <= _mem_total_mb() * 1024 * 1024
+    if not os.environ.get("SPARK_DRIVER_MEM"):
+        conf = spark.sparkContext.getConf().get("spark.driver.memory")
+        assert conf == session.default_driver_memory()
+
+
+def test_scratch_dir_under_spark_local_dirs(tmp_path, monkeypatch):
+    """Query scratch lives under the first SPARK_LOCAL_DIRS entry, one
+    dir per process; dirs left by dead processes are swept."""
+    from vector_database_watermarking_spark.registry_more import _scratch_dir
+
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", f"{tmp_path},/nonexistent")
+    with open("/proc/sys/kernel/pid_max") as f:
+        dead_pid = int(f.read()) + 1  # above pid_max: never a live process
+    base = tmp_path / "vdb_wm_scratch"
+    dead = base / f"t_sf0.001_pid{dead_pid}"
+    dead.mkdir(parents=True)
+    got = _scratch_dir("t", "/data/sf0.001/")
+    assert got == str(base / f"t_sf0.001_pid{os.getpid()}")
+    assert not dead.exists()

@@ -21,6 +21,7 @@ wrapper (reads .parsed if present).
 from __future__ import annotations
 
 import json
+import math
 import statistics
 import sys
 
@@ -49,22 +50,28 @@ def main() -> int:
         rows = []
         for q, t_new in new["queries"].items():
             t_old = old.get("queries", {}).get(q)
-            if t_old is None:
+            # skip rows with no old time, a non-positive time (no
+            # speedup exists) or no positive sentinel to normalize by
+            if t_old is None or t_old <= 0 or t_new <= 0 or sent.get(q, 0) <= 0:
                 continue
             burst = sent[q] / med  # >1: this row measured in a burst
             rows.append((t_old / t_new, t_old / (t_new / burst), burst, q, t_old, t_new))
+        if not rows:
+            print("no common queries")
+            return 1
         rows.sort()
         print(f"{'query':28s} {'old':>7s} {'new':>7s} {'raw':>6s} {'norm':>6s} {'burst':>6s}")
         for raw, norm, burst, q, t_old, t_new in rows:
             print(f"{q:28s} {t_old:7.3f} {t_new:7.3f} {raw:6.2f} {norm:6.2f} {burst:6.2f}")
-        import math
-
         g_raw = math.exp(sum(math.log(r[0]) for r in rows) / len(rows))
         g_norm = math.exp(sum(math.log(r[1]) for r in rows) / len(rows))
         print(f"geomean speedup: raw={g_raw:.3f}  sentinel-normalized={g_norm:.3f}")
     else:
         print(f"{'query':28s} {'sec':>7s} {'sentinel':>8s} {'burst':>6s}")
         for q, t in sorted(new["queries"].items(), key=lambda kv: -kv[1]):
+            if q not in sent:
+                print(f"{q:28s} {t:7.3f} {'-':>8s} {'-':>6s}")
+                continue
             print(f"{q:28s} {t:7.3f} {sent[q]:8.3f} {sent[q] / med:6.2f}")
     return 0
 

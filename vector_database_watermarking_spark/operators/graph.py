@@ -1,12 +1,17 @@
 """Graph analytics over the kNN-edges table (SURVEY §2.8, G1-G7 /
 J2 / J3 / A5).
 
-The reference walks faiss HNSW CSR arrays with Python loops
-(``/root/reference/watermarking.py:168-201``, ``:249-272``); here the
-graph IS a DataFrame ``edges(src, dst, dist, rank)`` and every metric
-is a join + aggregation that Catalyst plans (self-joins on (src,dst)
-hash-partition by key; the z-scoring global aggregate is a 1-row
-broadcast).
+The reference walks faiss HNSW CSR arrays with Python loops (its
+``watermarking.py:168-201``, ``:249-272``); here the graph IS a
+DataFrame ``edges(src, dst, dist, rank)`` and every metric is an
+aggregation (plus per-node joins) that Catalyst plans.
+
+Edge contract: the input is kNN-shaped — directed, one row per
+(query, rank), no self-loops — but the mutual-graph operators do not
+rely on it. Mutual pairs come from one canonical-pair aggregation in
+which duplicate rows cannot fake the reverse direction and self-loops
+drop, so every operator built on :func:`mutual_undirected` is
+duplicate-safe and counts a self-loop as 0.
 
 Scale notes: all per-node metrics shuffle once on ``src``; reusing one
 partitioning across J2/J3/A5 means AQE coalesces the exchanges. The
@@ -19,43 +24,38 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def mutual_undirected(edges: DataFrame, dedup: bool = False) -> DataFrame:
+def mutual_undirected(edges: DataFrame) -> DataFrame:
     """(a, b) with ``a < b`` for every mutually-linked pair of the
-    directed edge table — the single-pass form of
-    ``e ⋉ reverse(e)`` + ``src < dst`` (optimization round 13).
+    directed edge table: both ``a→b`` and ``b→a`` occur.
 
-    Canonicalize each directed edge to ``(least, greatest)`` and count:
-    exactly 2 hits ⟺ both directions present. One map-side-combinable
-    aggregation instead of a self-semi-join — which matters because the
-    edge input is usually the kNN build (an opaque ``mapInPandas``
-    subtree that ``ReuseExchange`` cannot dedup), so the join shape
-    evaluated the whole kNN TWICE in the one job that materializes the
-    mutual graph (guide §2.4).
-
-    Requires the input unique per ``(src, dst)`` (every kNN edge table
-    is: one row per (query, rank)); pass ``dedup=True`` to pay a
-    distinct first on multigraph input. Self-loops canonicalize to one
-    occurrence (count 1) and drop, matching the ``src < dst`` filter.
+    Each directed edge is canonicalized to ``(least, greatest)`` and
+    tagged with its direction bit ``src < dst``; a pair is mutual when
+    its group holds both bit values (``min < max``). Duplicate rows only
+    repeat a bit, so they cannot fake mutuality, and a self-loop only
+    ever carries bit 0, so it drops. One map-side-combinable aggregation
+    instead of a self-semi-join — which matters because the edge input
+    is usually the kNN build (an opaque ``mapInPandas`` subtree that
+    ``ReuseExchange`` cannot dedup), so the join shape evaluated the
+    whole kNN TWICE in the one job that materializes the mutual graph.
     """
-    e = edges.select("src", "dst")
-    if dedup:
-        e = e.distinct()
-    canon = e.select(
-        F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+    canon = edges.select(
+        F.least("src", "dst").alias("a"),
+        F.greatest("src", "dst").alias("b"),
+        (F.col("src") < F.col("dst")).cast("int").alias("_up"),
     )
     return (
         canon.groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .filter(F.col("_c") == 2)
+        .agg(F.min("_up").alias("_lo"), F.max("_up").alias("_hi"))
+        .filter(F.col("_lo") < F.col("_hi"))
         .select("a", "b")
     )
 
 
-def mutual_edges(edges: DataFrame, dedup: bool = False) -> DataFrame:
+def mutual_edges(edges: DataFrame) -> DataFrame:
     """Both directions of every mutual pair — the single-pass form of
-    ``e.join(reverse(e), how='left_semi')`` for (src,dst)-unique input
-    (see :func:`mutual_undirected`). Output is duplicate-free per
-    (src, dst).
+    ``e.join(reverse(e), how='left_semi')`` (see
+    :func:`mutual_undirected`). Output is duplicate-free per
+    (src, dst), whatever the input multiplicity.
 
     The flip is an ``explode`` of a 2-struct array, NOT a union of two
     selects (optimization round 14): the union duplicated the whole
@@ -67,7 +67,7 @@ def mutual_edges(edges: DataFrame, dedup: bool = False) -> DataFrame:
     list, so the InferFiltersFromGenerate hazard (r13, word_shingles)
     does not apply — any inferred ``size(array(..)) > 0`` is a trivial
     predicate over two already-computed columns."""
-    und = mutual_undirected(edges, dedup=dedup)
+    und = mutual_undirected(edges)
     return und.select(
         F.explode(
             F.array(
@@ -78,35 +78,21 @@ def mutual_edges(edges: DataFrame, dedup: bool = False) -> DataFrame:
     ).select("_e.src", "_e.dst")
 
 
-def bidirectional_edge_counts(
-    edges: DataFrame, nodes: DataFrame, unique_edges: bool = False
-) -> DataFrame:
-    """J2/G2: per node, number of neighbors v with the reverse edge
-    v→u also present (``count_bidirectional_edges``,
+def bidirectional_edge_counts(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """J2/G2: per node, the number of distinct neighbors v with both
+    u→v and v→u in the edge table (``count_bidirectional_edges``,
     ``watermarking.py:177-185``). Mutual-kNN pairs, per SURVEY §4
     (J1 note): bidirectional edge ≡ mutual-kNN pair.
 
-    Default: left-semi self-join on the flipped key; nodes with no
-    mutual edges get 0 (the reference's loop yields 0 naturally).
-
-    ``unique_edges=True`` (optimization round 14): for input unique
-    per ``(src, dst)`` — every kNN edge table is — the per-node count
-    comes from the ONE-PASS :func:`mutual_edges` canonical-pair
-    aggregation instead of the flipped self-semi-join, so the edge
-    relation (usually an opaque ``mapInPandas`` kNN build that
-    ``ReuseExchange`` cannot dedup) is referenced ONCE in the plan
-    instead of twice (guide §2.4; the r13 mutual-graph fix, applied
-    to the flag/count shape). For unique input the two forms are
-    row-identical: each mutual edge (u,v) appears exactly once per
-    direction in both.
+    Counted from the one-pass :func:`mutual_edges` aggregation, so the
+    edge relation (usually an opaque ``mapInPandas`` kNN build) is
+    referenced once in the plan. Duplicate rows count once, self-loops
+    count 0, and nodes with no mutual edge get 0 (the reference's loop
+    yields 0 naturally).
     """
-    e = edges.select("src", "dst")
-    if unique_edges:
-        mutual = mutual_edges(e)
-    else:
-        rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        mutual = e.join(rev, on=["src", "dst"], how="left_semi")
-    counts = mutual.groupBy("src").agg(F.count(F.lit(1)).alias("bidir_edges"))
+    counts = mutual_edges(edges).groupBy("src").agg(
+        F.count(F.lit(1)).alias("bidir_edges")
+    )
     return (
         nodes.select(F.col("vec_id"))
         .join(counts, nodes.vec_id == counts.src, "left")
@@ -141,10 +127,7 @@ def avg_edge_lengths(
 
 
 def accessibility_index(
-    edges: DataFrame,
-    nodes: DataFrame,
-    decimals: int | None = None,
-    unique_edges: bool = False,
+    edges: DataFrame, nodes: DataFrame, decimals: int | None = None
 ) -> DataFrame:
     """A5/G4: AI = 0.5*z(avg_edge_len) − 0.5*z(bidir_edge_count)
     (``calculate_accessibility_indices_with_index_array``,
@@ -158,97 +141,36 @@ def accessibility_index(
     ``decimals`` optionally rounds the edge-length metric first for the
     same reason.
 
-    ``unique_edges=True``: input is unique per ``(src, dst)`` (every
-    kNN edge table is) — the edge relation is eagerly checkpointed
-    once, ``avg_edge_len`` comes from a direct per-src aggregation and
-    ``bidir_edges`` from the one-pass canonical-pair aggregation
-    (no edge-scale join at all), so the (usually expensive, opaque)
-    edge build runs exactly ONE kernel instead of racing two
-    executions into the cache. Row-identical output for unique input.
+    Aggregate-first (optimization round 14): the projected edge
+    relation is eagerly checkpointed once, so the (usually expensive,
+    opaque ``mapInPandas``) kNN build behind it runs exactly ONE kernel
+    whatever the scheduler does. ``avg_edge_len`` is a direct per-src
+    groupBy over it (map-side partial aggregation: the exchange carries
+    n rows, not n·k) and ``bidir_edges`` the one-pass canonical-pair
+    aggregation of :func:`mutual_edges`; the two meet at per-node
+    width, with no edge-scale join. ``bidir_edges`` inherits the mutual
+    graph's contract (duplicate rows count once, self-loops count 0);
+    ``avg_edge_len`` averages every out-edge row of the node.
     """
-    # both metrics in ONE groupBy: tag each out-edge with a mutual
-    # flag (left join against the flipped key), then count flags and
-    # average lengths per src in the same aggregation — one shuffle of
-    # the edge relation instead of two plus a per-node metric join
-    # (the standalone G2/G3 operators keep their own shapes; this is
-    # the fused form their composition optimizes into)
     dist = F.col("dist")
     if decimals is not None:
         dist = F.round(dist, decimals)
-    if unique_edges:
-        # optimization round 14 (VERDICT r13 #1): aggregate-first for
-        # (src,dst)-unique input. The flag JOIN shipped the full n·k
-        # edge relation through both sides of a join before
-        # aggregating, and the kNN build behind it is an opaque
-        # mapInPandas subtree that the old persist raced into TWO
-        # concurrent kernel executions in one job (ReuseExchange cannot
-        # dedup above a Python kernel, guide §2.4). Instead: eagerly
-        # checkpoint the projected edge relation ONCE (exactly one
-        # kernel, scheduler-independent), take avg(dist) from a direct
-        # groupBy over it (map-side partial aggregation — the exchange
-        # carries n rows, not n·k) and the mutual counts from the
-        # one-pass canonical-pair aggregation (mutual_edges); join the
-        # two at per-node width. The per-src avg sees the same rows as
-        # the flag join's left side, so the float aggregation matches
-        # the oracle at the emitted rounding (parity verified old-vs-
-        # new at sf0.1 and sf1, oracle-exact at sf0.001/sf0.01).
-        # Measured: sf0.1 1.02->1.20 s (ckpt barrier at fixture scale,
-        # kernel ~0.3 s); sf1 min 17.6->13.1 s (kernel dominates).
-        e = edges.select("src", "dst", dist.alias("_dist")).localCheckpoint(
-            eager=True
+    e = edges.select("src", "dst", dist.alias("_dist")).localCheckpoint(eager=True)
+    avg_src = e.groupBy("src").agg(F.avg("_dist").alias("avg_edge_len"))
+    cnt_src = mutual_edges(e).groupBy("src").agg(F.count(F.lit(1)).alias("bidir_edges"))
+    per_node = (
+        nodes.select("vec_id")
+        .join(avg_src, nodes.vec_id == avg_src.src, "left")
+        .drop("src")
+        .join(cnt_src, nodes.vec_id == cnt_src.src, "left")
+        .drop("src")
+        .select(
+            "vec_id",
+            F.coalesce(F.col("bidir_edges"), F.lit(0)).cast("long").alias("bidir_edges"),
+            "avg_edge_len",
         )
-        avg_src = e.groupBy("src").agg(F.avg("_dist").alias("avg_edge_len"))
-        cnt_src = (
-            mutual_edges(e)
-            .groupBy("src")
-            .agg(F.count(F.lit(1)).alias("bidir_edges"))
-        )
-        per_node = (
-            nodes.select("vec_id")
-            .join(avg_src, nodes.vec_id == avg_src.src, "left")
-            .drop("src")
-            .join(cnt_src, nodes.vec_id == cnt_src.src, "left")
-            .drop("src")
-            .select(
-                "vec_id",
-                F.coalesce(F.col("bidir_edges"), F.lit(0)).cast("long").alias(
-                    "bidir_edges"
-                ),
-                "avg_edge_len",
-            )
-            .persist()
-        )  # consumed 2× (global stats + z-score join)
-    else:
-        edges = edges.persist()  # consumed 2× (both sides of the flag join)
-        # distinct flipped keys: a duplicated reverse edge must not fan
-        # out the left join (it would double-count the row in BOTH
-        # metrics); with distinct, semantics match the original
-        # left_semi + raw-edge average for any input, duplicates
-        # included
-        rev = edges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
-        ).dropDuplicates(["src", "dst"]).withColumn("_mutual", F.lit(1))
-        flagged = edges.select("src", "dst", dist.alias("_dist")).join(
-            rev, on=["src", "dst"], how="left"
-        )
-        per_src = flagged.groupBy("src").agg(
-            F.sum(F.coalesce(F.col("_mutual"), F.lit(0)))
-            .cast("long")
-            .alias("bidir_edges"),
-            F.avg("_dist").alias("avg_edge_len"),
-        )
-        per_node = (
-            nodes.select("vec_id")
-            .join(per_src, nodes.vec_id == per_src.src, "left")
-            .select(
-                "vec_id",
-                F.coalesce(F.col("bidir_edges"), F.lit(0)).cast("long").alias(
-                    "bidir_edges"
-                ),
-                "avg_edge_len",
-            )
-            .persist()
-        )  # consumed 2× (global stats + z-score join)
+        .persist()
+    )  # consumed 2× (global stats + z-score join)
     e = F.col("bidir_edges").cast("double")
     d_ = F.col("avg_edge_len")
     stats = per_node.agg(
@@ -716,9 +638,7 @@ def pagerank_exact(
     )
 
 
-def triangle_counts(
-    edges: DataFrame, nodes: DataFrame, dedup: bool = True
-) -> DataFrame:
+def triangle_counts(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     """Per-node triangle count and local clustering coefficient over
     the mutual-kNN (undirected) graph (extension — the standard
     neighborhood-density diagnostic next to G2/G4; not in the
@@ -734,14 +654,9 @@ def triangle_counts(
     residual hot key.
 
     Output: (vec_id, degree, n_triangles, clustering) where clustering
-    = 2T / d(d−1), 0 for d < 2.
-
-    ``dedup=False`` (the :func:`k_core` convention) skips the distinct
-    on the undirected edge list for callers whose input is already
-    duplicate-free per ``(src, dst)`` — every kNN edge table is (one
-    row per (query, rank)) — removing a full-edge-relation exchange
-    from the plan; the mutual semi-join + ``src < dst`` filter emit
-    each undirected edge exactly once from unique input.
+    = 2T / d(d−1), 0 for d < 2. The undirected graph is
+    :func:`mutual_undirected`, so one-way edges, duplicate rows and
+    self-loops add no degree.
     """
     # und is consumed by the degree aggregate AND the keyed wedge path
     # (and the caller's edge table is often itself an expensive kNN
@@ -751,7 +666,7 @@ def triangle_counts(
     # mutual_undirected (optimization round 13) builds it in ONE pass
     # over the edge table — the old reverse-semi-join evaluated the
     # caller's kNN subtree twice inside this checkpoint job.
-    und = mutual_undirected(edges, dedup=dedup).localCheckpoint(eager=True)
+    und = mutual_undirected(edges).localCheckpoint(eager=True)
     deg = (
         und.select(F.explode(F.array("a", "b")).alias("n"))
         .groupBy("n")

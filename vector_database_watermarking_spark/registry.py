@@ -223,11 +223,7 @@ def g2_bidirectional_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     and local checking."""
     emb = load_table(spark, sf_dir, "embeddings")
     edges = knn.knn_edges(emb, k=K)
-    # unique_edges: kNN output is unique per (src, dst), so the mutual
-    # counts come from the one-pass canonical-pair aggregation — ONE
-    # reference to the kNN subtree instead of the flipped self-semi-
-    # join's two (optimization round 14, guide §2.4)
-    return graph.bidirectional_edge_counts(edges, emb, unique_edges=True)
+    return graph.bidirectional_edge_counts(edges, emb)
 
 
 @register(
@@ -296,11 +292,8 @@ def g4_accessibility_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = load_table(spark, sf_dir, "embeddings")
     edges = knn.knn_edges(emb, k=K)
-    # unique_edges: one eagerly checkpointed kNN kernel + one-pass
-    # mutual flags instead of two racing kernel executions
-    # (optimization round 14, VERDICT r13 #1)
     return (
-        graph.accessibility_index(edges, emb, decimals=6, unique_edges=True)
+        graph.accessibility_index(edges, emb, decimals=6)
         .withColumn("avg_edge_len", F.round("avg_edge_len", 5))
         .withColumn("ai", F.round("ai", 5))
     )
@@ -579,7 +572,7 @@ def a7_graph_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=True
     )
     qc = knn.query_counts(edges, emb)
-    bidir = graph.bidirectional_edge_counts(edges, emb, unique_edges=True)
+    bidir = graph.bidirectional_edge_counts(edges, emb)
     j = qc.join(bidir, on="vec_id")
     return j.agg(
         F.round(F.corr("query_count", "bidir_edges"), 4).alias("corr_qc_bidir")

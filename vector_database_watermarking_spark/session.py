@@ -10,6 +10,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+DRIVER_MEM_CAP_MB = 48 * 1024
+
+
+def default_driver_memory() -> str:
+    """Half of physical RAM (``MemTotal`` in ``/proc/meminfo``), capped
+    at 48g; the cap itself where ``/proc/meminfo`` is unreadable. In
+    local mode the driver heap is the whole engine's heap, so a fixed
+    48g on a smaller host lets the kernel OOM-kill the JVM mid-run."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return f"{DRIVER_MEM_CAP_MB}m"
+    return f"{min(kb // 2048, DRIVER_MEM_CAP_MB)}m"
+
 
 def get_spark(app_name: str = "vdb_wm_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession.
@@ -26,7 +41,8 @@ def get_spark(app_name: str = "vdb_wm_spark", cpus: int | None = None) -> SparkS
     are unaffected — AQE is disabled there, so their state
     partitioning still comes from ``shuffle.partitions``, which is why
     that stays at core count rather than 8x. Arrow is on so pandas-UDF
-    hot paths batch-transfer instead of pickling rows.
+    hot paths batch-transfer instead of pickling rows. The driver heap
+    is :func:`default_driver_memory` unless ``SPARK_DRIVER_MEM`` is set.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -43,7 +59,7 @@ def get_spark(app_name: str = "vdb_wm_spark", cpus: int | None = None) -> SparkS
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
