@@ -100,22 +100,6 @@ HEADLINE = [
 # costs seconds and removes the corpus-side join/shuffle volume.
 
 
-def _j1_knn_edges_blas(spark, sf_dir):
-    """Bench-only variant: the exact-kNN BLAS tier (fold_parity=False,
-    one Gram matmul per Arrow batch — the production tier, 3.7x at a
-    20k base). Graded paths keep fold_parity=True for last-ulp oracle
-    bit-parity, so this rides the bench as a tracked number instead of
-    a registry row."""
-    from vector_database_watermarking_spark.operators import knn
-    from vector_database_watermarking_spark.registry import K
-    from vector_database_watermarking_spark.sources.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    return knn.knn_join(
-        emb, emb, k=K, exact=True, exclude_self=True, fold_parity=False
-    )
-
-
 def _kmeans_refine_arrow(spark, sf_dir):
     """Bench-only variant: the Arrow/numpy exact-assignment tier
     (assign_impl='arrow' — bit-identical integers, einsum-batched;
@@ -139,7 +123,6 @@ def _kmeans_refine_arrow(spark, sf_dir):
 # bench-only callables (same (spark, sf_dir) -> DataFrame contract as
 # registry fns); benched after the registry headliners
 BENCH_EXTRA = {
-    "j1_knn_edges_blas": _j1_knn_edges_blas,
     "ext_kmeans_refine_arrow": _kmeans_refine_arrow,
 }
 

@@ -27,7 +27,7 @@ SF001 = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cpus=8)
+    s = get_spark("tests")
     yield s
     s.stop()
 

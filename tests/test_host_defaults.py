@@ -34,6 +34,19 @@ def test_session_heap_fits_physical_ram(spark):
         assert conf == session.default_driver_memory()
 
 
+def test_default_cpus_follow_env_then_affinity(monkeypatch):
+    """Without ``SPARK_GRAFT_CPUS`` the session sizes ``local[N]`` to the
+    CPUs this process may run on, not to a fixed count."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert session.default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session.default_cpus() == 3
+
+
+def test_session_cores_follow_default(spark):
+    assert spark.sparkContext.master == f"local[{session.default_cpus()}]"
+
+
 def test_scratch_dir_under_spark_local_dirs(tmp_path, monkeypatch):
     """Query scratch lives under the first SPARK_LOCAL_DIRS entry, one
     dir per process; dirs left by dead processes are swept."""

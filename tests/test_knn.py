@@ -169,23 +169,168 @@ def test_lsh_dense_cluster_queries_still_get_candidates(spark):
     assert frac > 0.9, frac
 
 
-def test_blas_tier_matches_fold_tier(spark, sf_dir):
-    """fold_parity=False (Gram-matmul distances) must produce the same
-    (src, rank) -> dst assignment as the fold tier on the fixture."""
-    from vector_database_watermarking_spark.operators import knn
+def fold_reference(q_ids, Q, b_ids, B, k, exclude_self=True):
+    """The exact tiers' contract, computed the slow way: the sequential
+    per-dim float64 fold over the whole (query × base) block, the
+    6-decimal ranking key, (key, dst) order, self-hits and non-finite
+    keys dropped. Returns sorted ``(src, rank, dst, dist_sq.hex())``."""
+    order = np.argsort(b_ids, kind="stable")
+    b_ids, B = np.asarray(b_ids)[order], np.asarray(B, dtype=np.float64)[order]
+    Q = np.asarray(Q, dtype=np.float64).reshape(len(q_ids), -1)
+    B = B.reshape(len(b_ids), Q.shape[1])
+    acc = np.zeros((len(q_ids), len(b_ids)))
+    for i in range(Q.shape[1]):
+        diff = Q[:, i][:, None] - B[:, i][None, :]
+        acc += diff * diff
+    key = np.round(acc, 6)
+    if exclude_self:
+        key[np.asarray(q_ids)[:, None] == b_ids[None, :]] = np.inf
+    out = []
+    for r, src in enumerate(q_ids):
+        picked = [j for j in np.lexsort((b_ids, key[r]))[:k] if np.isfinite(key[r, j])]
+        out += [
+            (int(src), rank, int(b_ids[j]), float(acc[r, j]).hex())
+            for rank, j in enumerate(picked, 1)
+        ]
+    return sorted(out)
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
+
+def _kernel(q_ids, Q, b_ids, B, k, exclude_self=True):
+    """The NumPy kernel alone, on the broadcast tier's id-sorted base."""
+    order = np.argsort(b_ids, kind="stable")
+    b_ids = np.asarray(b_ids, dtype=np.int64)[order]
+    B = np.asarray(B, dtype=np.float64)[order]
+    src, dst, val, rank = knn._topk_chunk(
+        np.asarray(q_ids, dtype=np.int64), np.asarray(Q, dtype=np.float64),
+        knn._base_arrays(b_ids, B), min(k, len(b_ids)), exclude_self,
     )
-    a = {
-        (r["src"], r["rank"]): r["dst"]
-        for r in knn.knn_join(emb, emb, k=5).collect()
-    }
-    b = {
-        (r["src"], r["rank"]): r["dst"]
-        for r in knn.knn_join(emb, emb, k=5, fold_parity=False).collect()
-    }
-    assert a == b
+    return sorted(
+        (int(s), int(r), int(d), float(v).hex()) for s, d, v, r in zip(src, dst, val, rank)
+    )
+
+
+def _tier_edges(tier, queries, base, k, exclude_self=True):
+    """(src, rank, dst, dist.hex()) from one exact Spark tier."""
+    from vector_database_watermarking_spark.operators.knn import _exact_knn_blocked
+
+    if tier == "broadcast":
+        df = knn.knn_join(queries, base, k=k, exact=True, exclude_self=exclude_self)
+    else:
+        df = _exact_knn_blocked(queries, base, k, exclude_self, n_blocks=3)
+    return sorted(
+        (r["src"], r["rank"], r["dst"], r["dist"].hex()) for r in df.collect()
+    )
+
+
+def _ref_sqrt(ref):
+    """A reference row as the Spark tiers report it: dist = sqrt(dist_sq)."""
+    import math
+
+    return sorted((s, r, d, math.sqrt(float.fromhex(h)).hex()) for s, r, d, h in ref)
+
+
+def test_kernel_matches_fold_reference(spark):
+    """Both exact tiers reproduce the full-fold reference bit for bit on
+    the sf0.001 and sf0.01 embeddings: same neighbors, ranks and
+    distance bits."""
+    from tests.conftest import SF0001, SF001
+
+    for sf in (SF0001, SF001):
+        emb = spark.read.parquet(f"{sf}/embeddings.parquet").select("vec_id", "embedding")
+        ids, X = load_np(spark, sf)
+        want = fold_reference(ids, X, ids, X, 5)
+        assert _kernel(ids, X, ids, X, 5) == want, sf
+        for tier in ("broadcast", "blocked"):
+            assert _tier_edges(tier, emb, emb, 5) == _ref_sqrt(want), (sf, tier)
+
+
+def _adversarial(kind, rng, n, d):
+    if kind == "duplicates":  # distance-0 cliques
+        return np.repeat(rng.standard_normal((-(-n // 4), d)), 4, axis=0)[:n]
+    if kind == "grid":  # squared distances k·1e-6: mass ties at the key
+        return rng.integers(0, 3, (n, d)) * 1e-3
+    if kind == "half_grid":  # squared distances (k + 0.5)·1e-6: on the rounding boundary
+        return rng.integers(0, 3, (n, d)) * np.sqrt(0.5e-6)
+    if kind == "offset":  # |x| ≈ 5e3, neighbors ~1e-3 apart: Gram cancellation
+        return 5e3 + rng.standard_normal((n, d)) * 1e-3
+    if kind == "clusters":  # far-apart tight grids: centring cannot shrink |x|
+        centers = rng.standard_normal((3, d)) * 1e5
+        return centers[rng.integers(0, 3, n)] + rng.integers(0, 3, (n, d)) * 1e-3
+    return rng.standard_normal((n, d))
+
+
+KINDS = ("duplicates", "grid", "half_grid", "offset", "clusters", "gauss")
+
+
+def test_kernel_adversarial_property():
+    """The kernel equals the fold reference on generated adversarial
+    collections, including k ≥ n, one-row bases, queries absent from
+    the base and exclude_self=False."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    @settings(max_examples=300, deadline=None, derandomize=True)
+    @given(
+        kind=st.sampled_from(KINDS),
+        seed=st.integers(0, 2**32 - 1),
+        n=st.integers(1, 40),
+        d=st.integers(1, 6),
+        k=st.integers(1, 45),
+        absent=st.integers(0, 3),
+        exclude_self=st.booleans(),
+    )
+    def check(kind, seed, n, d, k, absent, exclude_self):
+        rng = np.random.default_rng(seed)
+        X = _adversarial(kind, rng, n + absent, d)
+        b_ids = rng.permutation(n).astype(np.int64) * 7
+        q_ids = np.concatenate([b_ids, 1000 + np.arange(absent)])
+        B = X[:n]
+        assert _kernel(q_ids, X, b_ids, B, k, exclude_self) == fold_reference(
+            q_ids, X, b_ids, B, k, exclude_self
+        )
+
+    check()
+
+
+def test_kernel_adversarial_spark_tiers(spark):
+    """The adversarial collections through both Spark tiers (64 rows,
+    d=8; the Gaussian one at k ≥ n), plus a one-row base and absent
+    queries."""
+    rng = np.random.default_rng(11)
+    schema = "vec_id long, embedding array<double>"
+    ids = np.arange(64)
+    for kind, k in [(kind, 5) for kind in KINDS[:-1]] + [("gauss", 70)]:
+        X = _adversarial(kind, rng, 64, 8)
+        rows = [(i, X[i].tolist()) for i in range(64)]
+        emb = spark.createDataFrame(rows, schema)
+        want = _ref_sqrt(fold_reference(ids, X, ids, X, k))
+        for tier in ("broadcast", "blocked"):
+            assert _tier_edges(tier, emb, emb, k) == want, (kind, k, tier)
+    base = spark.createDataFrame(rows[:1], schema)
+    absent = spark.createDataFrame([(500 + i, X[i].tolist()) for i in range(3)], schema)
+    for queries, q_ids in ((base, [0]), (absent, [500, 501, 502])):
+        want = _ref_sqrt(fold_reference(q_ids, X[: len(q_ids)], [0], X[:1], 5))
+        for tier in ("broadcast", "blocked"):
+            assert _tier_edges(tier, queries, base, 5) == want, (q_ids, tier)
+
+
+def test_kernel_nan_embedding_has_no_edges(spark):
+    """Pinned: a NaN embedding has a NaN distance to everything, so the
+    fold reference drops it on both sides — it gets no neighbors and is
+    nobody's neighbor; every other row is unaffected."""
+    rng = np.random.default_rng(5)
+    X = rng.standard_normal((40, 4))
+    X[7, 2] = np.nan
+    ids = np.arange(40)
+    want = fold_reference(ids, X, ids, X, 3)
+    assert len(want) == 39 * 3
+    assert not any(7 in (s, d) for s, _, d, _ in want)
+    assert _kernel(ids, X, ids, X, 3) == want
+    emb = spark.createDataFrame(
+        [(i, X[i].tolist()) for i in range(40)], "vec_id long, embedding array<double>"
+    )
+    for tier in ("broadcast", "blocked"):
+        assert _tier_edges(tier, emb, emb, 3) == _ref_sqrt(want), tier
 
 
 def test_lsh_duplicate_collapse_matches_exact(spark):

@@ -15,7 +15,7 @@ from vector_database_watermarking_spark.operators import clustering
 def spark():
     from vector_database_watermarking_spark.session import get_spark
 
-    return get_spark("round6b_tests", cpus=8)
+    return get_spark("round6b_tests")
 
 
 SF = "/root/testdata/sf0.001"

@@ -246,7 +246,7 @@ def main() -> None:
     import bench as bench_mod
     from vector_database_watermarking_spark.registry import QUERIES
 
-    spark = get_spark("bench-sf1", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("bench-sf1")
     if args.rebuild:
         shutil.rmtree(SF1_DIR, ignore_errors=True)
     t0 = time.monotonic()

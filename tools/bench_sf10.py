@@ -235,8 +235,8 @@ def main() -> None:
 
     # kNN family. The auto-tier (knn_edges) picks the EXACT path
     # through 10^6 rows, so that is what a user gets at every scale
-    # here — measured on the BLAS configuration (fold_parity=False,
-    # the documented scale tier). The LSH tier is the >10^6 path for
+    # here (one filter-and-refine kernel: BLAS shortlist, fold-exact
+    # distances). The LSH tier is the >10^6 path for
     # near-dup-clustered corpora; on THIS iid rotated corpus its
     # banded buckets saturate (measured: 2e8 candidate pairs carrying
     # embeddings ≈ 100 GB shuffle, disk exhaustion at 20k rows), which
@@ -245,7 +245,7 @@ def main() -> None:
     for tag, d in run_dirs:
         emb = load_emb(d)
         t0 = time.monotonic()
-        rows = knn_join(emb, emb, k=10, exact=True, fold_parity=False).count()
+        rows = knn_join(emb, emb, k=10, exact=True).count()
         emit(
             query="knn_exact_blas",
             scale=tag,

@@ -41,7 +41,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("oracle_check", cpus=8)
+    spark = get_spark("oracle_check")
     con = duck_con(sf_dir)
     failures = []
     for name, q in QUERIES.items():

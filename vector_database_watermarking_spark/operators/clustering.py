@@ -130,8 +130,8 @@ def _assign_arrow(q: DataFrame, cents: list[tuple[list[int], int]]) -> DataFrame
     first minimum (ties to the lowest cluster index, same rule).
     ~2 s/pass of interpreted HOF lambdas at sf0.1 becomes one
     batched einsum — the production tier for wide/hot refinement
-    loops (the ``knn fold_parity=False`` precedent); graded queries
-    keep the native tier so the oracle replays pure DataFrame ops.
+    loops; graded queries keep the native tier so the oracle replays
+    pure DataFrame ops.
     """
     import numpy as np
 

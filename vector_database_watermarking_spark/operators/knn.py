@@ -43,7 +43,6 @@ def knn_join(
     exclude_self: bool = True,
     bucket_length: float | None = None,
     num_hash_tables: int = 10,
-    fold_parity: bool = True,
     candidate_budget: int | None = 100_000_000,
 ) -> DataFrame:
     """Top-k nearest base vectors for every query vector.
@@ -52,20 +51,14 @@ def knn_join(
     ``(src, dst, dist, rank)`` with ``rank`` 1-based by ascending
     euclidean distance (ties by ``dst``). ``src`` is the query's id.
 
-    Exact tier: the base side is broadcast to every task and each
-    Arrow batch of queries computes its distance block vectorized in
-    numpy (``mapInPandas``), emitting only the per-query top-k — the
-    O(n²) pair relation is never materialized and no shuffle carries
-    it. Distances accumulate dimension-by-dimension in float64, which
-    is bit-identical to a sequential fold over ``(a_i − b_i)²``
-    (matching both the HOF formulation and the DuckDB oracle), so
-    rankings are reproducible across tiers and engines.
-
-    ``fold_parity=False`` swaps the per-dim fold for one Gram matmul
-    (|q−b|² = |q|² + |b|² − 2·q·b) — measured 3.7× end-to-end at a
-    20k base (80 s → 22 s), rank-for-rank identical on the fixtures.
-    Still EXACT nearest neighbors; only the last-ulp float identity
-    with the SQL oracle is given up, so graded paths keep the default.
+    Exact tier: the base is broadcast to every task and each Arrow
+    batch of queries (``mapInPandas``) emits only its top-k, so the
+    O(n²) pair relation is never materialized or shuffled. One
+    filter-and-refine kernel (:func:`_topk_chunk`) shortlists each
+    row's top k by BLAS Gram distances with a derived error bound and
+    recomputes only the shortlist as the sequential float64 fold over
+    ``(a_i − b_i)²``: distances and ranks are bit-identical to that
+    fold (the HOF formulation and the DuckDB oracle) at BLAS cost.
 
     LSH tier duplicate hardening: real corpora contain duplicate and
     near-duplicate embeddings at scale (reposts, boilerplate, jittered
@@ -113,7 +106,7 @@ def knn_join(
     pass the same budget easily.
     """
     if exact:
-        return exact_knn(queries, base, k, exclude_self, fold_parity=fold_parity)
+        return exact_knn(queries, base, k, exclude_self)
 
     from pyspark.ml.functions import vector_to_array
 
@@ -246,7 +239,6 @@ def exact_knn(
     k: int,
     exclude_self: bool = True,
     n_base: int | None = None,
-    fold_parity: bool = True,
 ) -> DataFrame:
     """Exact kNN with automatic tier choice: single broadcast of the
     base when it fits (``MAX_BROADCAST_ROWS``), otherwise the base is
@@ -258,19 +250,12 @@ def exact_knn(
     if n_base is None:
         rows = probe_collect(base.select("vec_id", "embedding"))
         if rows is not None:
-            return _exact_knn_broadcast(
-                queries, base, k, exclude_self, pre_rows=rows,
-                fold_parity=fold_parity,
-            )
+            return _exact_knn_broadcast(queries, base, k, exclude_self, pre_rows=rows)
         n_base = base.count()
     if n_base <= MAX_BROADCAST_ROWS:
-        return _exact_knn_broadcast(
-            queries, base, k, exclude_self, fold_parity=fold_parity
-        )
+        return _exact_knn_broadcast(queries, base, k, exclude_self)
     n_blocks = -(-n_base // MAX_BROADCAST_ROWS)
-    return _exact_knn_blocked(
-        queries, base, k, exclude_self, n_blocks, fold_parity=fold_parity
-    )
+    return _exact_knn_blocked(queries, base, k, exclude_self, n_blocks)
 
 
 def _exact_knn_blocked(
@@ -279,24 +264,24 @@ def _exact_knn_blocked(
     k: int,
     exclude_self: bool,
     n_blocks: int,
-    fold_parity: bool = True,
 ) -> DataFrame:
     """Blocked exact kNN: hash-split the base, per-block broadcast
     top-k, then a global merge ranked by the same
     ``(round(dist_sq, 6), dst)`` key so results are bit-identical to
-    the single-broadcast tier."""
+    the single-broadcast tier. The key repeats ``np.round``'s
+    arithmetic (binary multiply, half-even ``rint``, divide):
+    ``F.round`` rounds the decimal expansion half-up, which splits
+    boundary ties differently."""
     blocks = [
-        _exact_knn_broadcast(
-            queries, block, k, exclude_self, emit_dist_sq=True,
-            fold_parity=fold_parity,
-        )
+        _exact_knn_broadcast(queries, block, k, exclude_self, emit_dist_sq=True)
         for block in split_blocks(base, n_blocks)
     ]
     union = blocks[0]
     for df in blocks[1:]:
         union = union.unionByName(df)
+    scale = 10.0**_RANK_DECIMALS
     w = Window.partitionBy("src").orderBy(
-        F.round(F.col("dist_sq"), _RANK_DECIMALS).asc(), F.col("dst").asc()
+        (F.rint(F.col("dist_sq") * scale) / scale).asc(), F.col("dst").asc()
     )
     return (
         union.withColumn("rank", F.row_number().over(w))
@@ -317,125 +302,150 @@ def _exact_knn_broadcast(
     exclude_self: bool,
     emit_dist_sq: bool = False,
     pre_rows: list | None = None,
-    fold_parity: bool = True,
 ) -> DataFrame:
-    """Broadcast-base exact kNN via ``mapInPandas``.
+    """Broadcast-base exact kNN via ``mapInPandas``; each Arrow batch
+    of queries runs :func:`_topk_chunk` against the broadcast base.
 
     Scale notes: correct while the base side fits in a broadcast
     (~1e6 × d floats); ``exact_knn`` falls back to the blocked tier
     beyond that, and approximate workloads go through the LSH tier.
-    The probe side is repartitioned so a single-file scan still uses
-    every core.
+    The query side is repartitioned so a single-file scan still uses
+    every core. A self-join (``queries is base``, as in ``knn_edges``)
+    neither rescans nor shuffles it: task p of a ``range`` takes slice
+    p of the broadcast rows as its queries.
     """
     import numpy as np
     import pandas as pd
 
     sess = queries.sparkSession
-    rows = (
-        pre_rows
-        if pre_rows is not None
-        else base.select("vec_id", "embedding").collect()
-    )
+    rows = pre_rows if pre_rows is not None else base.select("vec_id", "embedding").collect()
     ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
     X = np.array([r["embedding"] for r in rows], dtype=np.float64)
     order = np.argsort(ids)
+    if len(ids):  # a non-finite vector's fold is non-finite: never a neighbor
+        order = order[np.isfinite(X[order]).all(axis=1)]
     ids, X = ids[order], X[order]
     bc = sess.sparkContext.broadcast((ids, X))
     # kk caps at the base size; self-exclusion is handled per row
     # (masked entries sort last and are dropped), so a query absent
     # from the base still gets all min(k, n) neighbors
     kk = min(k, len(ids))
-    col0 = "dist_sq" if emit_dist_sq else "dist"
+    col = "dist_sq" if emit_dist_sq else "dist"
     if kk <= 0:  # base empty: no neighbors
         return sess.createDataFrame(
-            [], schema=f"src long, dst long, {col0} double, rank int"
+            [], schema=f"src long, dst long, {col} double, rank int"
         )
+
+    nparts = sess.sparkContext.defaultParallelism
+    self_join = queries is base
 
     def topk(batches):
         b_ids, b_X = bc.value
-        n, d = b_X.shape
-        if not fold_parity:
-            bn = (b_X * b_X).sum(axis=1)
-        # bound working-set memory: three (chunk, n) float64 buffers
-        # (acc, diff, rounded copy) are live at once, so ~2e7 cells
-        # means ~0.5 GB peak per task regardless of Arrow batch size —
-        # a 10k-row batch against a 50k base would otherwise allocate
-        # multi-GB temporaries per dimension.
-        chunk = max(1, int(2e7 // max(n, 1)))
-        col = "dist_sq" if emit_dist_sq else "dist"
+        state = _base_arrays(b_ids, b_X)
+        # bound working-set memory: two (chunk, n) float64 buffers are
+        # live in the filter, ~0.16 GB per task at 1e7 cells
+        n = len(b_ids)
+        chunk = max(1, int(1e7 // n))
         for pdf in batches:
-            all_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            all_Q = np.array(list(pdf["embedding"]), dtype=np.float64)
+            if self_join:
+                sl = [slice(p * n // nparts, (p + 1) * n // nparts) for p in pdf["id"]]
+                all_ids = np.concatenate([b_ids[s] for s in sl])
+                all_Q = np.concatenate([b_X[s] for s in sl])
+            else:
+                all_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+                all_Q = np.array(list(pdf["embedding"]), dtype=np.float64)
             for s in range(0, len(all_ids), chunk):
-                q_ids = all_ids[s : s + chunk]
-                Q = all_Q[s : s + chunk]
-                m = len(q_ids)
-                if fold_parity:
-                    acc = np.zeros((m, n), dtype=np.float64)
-                    diff = np.empty((m, n), dtype=np.float64)
-                    for i in range(d):  # sequential per-dim accumulation = fold parity
-                        np.subtract(Q[:, i][:, None], b_X[:, i][None, :], out=diff)
-                        diff *= diff
-                        acc += diff
-                else:
-                    # BLAS tier: |q−b|² = |q|² + |b|² − 2·q·b via one
-                    # Gram matmul — measured 3.7× end to end at a 20k
-                    # base (80 s → 22 s; the kernel itself is ~25× but
-                    # selection/Arrow costs remain). Last-ulp
-                    # differences vs the fold can flip a 1e-6 rounding
-                    # boundary, so graded/oracle paths keep the
-                    # default fold tier; this one is for production
-                    # throughput where exact-but-not-bit-pinned
-                    # distances are fine.
-                    acc = Q @ b_X.T
-                    acc *= -2.0
-                    acc += (Q * Q).sum(axis=1)[:, None]
-                    acc += bn[None, :]
-                    np.maximum(acc, 0.0, out=acc)
-                r6 = np.round(acc, _RANK_DECIMALS)
-                if exclude_self:
-                    r6[q_ids[:, None] == b_ids[None, :]] = np.inf
-                out_src = np.repeat(q_ids, kk)
-                out_dst = np.empty(m * kk, dtype=np.int64)
-                out_val = np.empty(m * kk, dtype=np.float64)
-                out_key = np.empty(m * kk, dtype=np.float64)
-                out_rank = np.tile(np.arange(1, kk + 1, dtype=np.int32), m)
-                for r in range(m):
-                    if n > 4 * kk:
-                        # tie-safe pre-select: keep everything ≤ the max
-                        # of the 2kk smallest, so equal rounded values
-                        # still resolve by the b_id tiebreak exactly
-                        part = np.argpartition(r6[r], min(2 * kk, n - 1))[: 2 * kk]
-                        cand = np.nonzero(r6[r] <= r6[r][part].max())[0]
-                    else:
-                        cand = np.arange(n)
-                    order = np.lexsort((b_ids[cand], r6[r][cand]))[:kk]
-                    sel = cand[order]
-                    out_dst[r * kk : (r + 1) * kk] = b_ids[sel]
-                    out_key[r * kk : (r + 1) * kk] = r6[r, sel]
-                    vals = acc[r, sel]
-                    out_val[r * kk : (r + 1) * kk] = (
-                        vals if emit_dist_sq else np.sqrt(vals)
-                    )
-                # masked self-hits carry an inf ranking key and always
-                # sort last within a row: dropping them keeps ranks
-                # contiguous and gives rows not in the base their full
-                # min(k, n) neighbors
-                keep = np.isfinite(out_key)
-                yield pd.DataFrame(
-                    {
-                        "src": out_src[keep],
-                        "dst": out_dst[keep],
-                        col: out_val[keep],
-                        "rank": out_rank[keep],
-                    }
+                src, dst, val, rank = _topk_chunk(
+                    all_ids[s : s + chunk], all_Q[s : s + chunk], state, kk, exclude_self
                 )
+                val = val if emit_dist_sq else np.sqrt(val)
+                yield pd.DataFrame({"src": src, "dst": dst, col: val, "rank": rank})
 
-    col = "dist_sq" if emit_dist_sq else "dist"
-    nparts = sess.sparkContext.defaultParallelism
-    return queries.select("vec_id", "embedding").repartition(nparts).mapInPandas(
-        topk, schema=f"src long, dst long, {col} double, rank int"
-    )
+    q = queries.select("vec_id", "embedding").repartition(nparts)
+    feed = sess.range(0, nparts, 1, nparts) if self_join else q
+    return feed.mapInPandas(topk, schema=f"src long, dst long, {col} double, rank int")
+
+
+def _base_arrays(b_ids, b_X):
+    """Per-task base state of :func:`_topk_chunk`: ids, the transposed
+    base (fold gathers), the centring vector μ, the centred base and
+    its squared norms (Gram filter)."""
+    import numpy as np
+
+    mu = b_X.mean(axis=0)
+    b_c = b_X - mu
+    return b_ids, np.ascontiguousarray(b_X.T), mu, b_c, (b_c * b_c).sum(axis=1)
+
+
+def _topk_chunk(q_ids, Q, base, kk, exclude_self):
+    """Exact top-``kk`` of each query row against ``base`` — the one
+    distance kernel of the exact tiers. Returns ``(src, dst, dist_sq,
+    rank)`` arrays.
+
+    Contract, bit for bit: a distance is the sequential float64 fold
+    ``acc += (q_i − b_i)²`` (the DuckDB oracle's arithmetic); a row
+    ranks by (distance rounded to ``_RANK_DECIMALS``, ``dst``);
+    self-hits under ``exclude_self`` and non-finite keys sort last and
+    are dropped, so ranks stay contiguous.
+
+    Filter: one BLAS matmul on the centred vectors a = q − μ, c = b − μ
+    gives ``g = |a|² + |c|² − 2·a·c``. With u = 2⁻⁵³ and S = |a|² +
+    |c|², |g − fold| ≤ 4(d+3)u·S to first order: centring moves the
+    exact distance by ≤ 4u·S, the fold errs by ≤ 2(d+2)u·S, the norms
+    and the dot product by d·u·S each, the two additions by 4u·S.
+    ``E = 8(d+4)u·(|a|² + max|c|²)`` is at least twice that for every
+    cell of the row, covering the filter's own roundings. With ``H`` the kk-th
+    smallest ``g`` over non-self columns, the kk-th smallest fold
+    value is ≤ H + E/2, and a top-kk column's fold value exceeds that
+    by at most 1e-6 (two half-unit key roundings) plus the rounding's
+    own float error (≤ 5u·H): every column with ``g ≤ H + 2E + 2e-6 +
+    16u·|H|`` is kept, a superset of the top kk.
+
+    Refine: the fold is recomputed on the shortlisted pairs only (the
+    same IEEE operations element by element, so the same bits), and one
+    ``lexsort`` on (row, key, dst) takes the first kk per row. A row
+    with a non-finite ``g``, ``E`` or ``H`` (a non-finite or
+    overflowing query, fewer than kk other columns) is not certified
+    and shortlists every column: the full fold.
+    """
+    import numpy as np
+
+    b_ids, b_T, mu, b_c, b_sq = base
+    m, d = Q.shape
+    Q_c = Q - mu
+    q_sq = (Q_c * Q_c).sum(axis=1)
+    g = Q_c @ b_c.T
+    g *= -2.0
+    g += q_sq[:, None]
+    g += b_sq[None, :]
+    err = 8 * (d + 4) * 2.0**-53 * (q_sq + b_sq.max())  # E: see the docstring
+    certified = np.isfinite(g).all(axis=1) & np.isfinite(err)
+    if exclude_self:
+        g[q_ids[:, None] == b_ids[None, :]] = np.inf
+    h = np.partition(g, kk - 1, axis=1)[:, kk - 1]
+    certified &= np.isfinite(h)
+    shortlist = g <= (h + 2 * err + 2e-6 + 2.0**-49 * np.abs(h))[:, None]
+    shortlist[~certified] = True
+    rows, cols = np.nonzero(shortlist)
+
+    Q_T = Q.T
+    acc = np.zeros(len(rows))
+    diff = np.empty(len(rows))
+    for i in range(d):  # the fold, dimension by dimension
+        np.subtract(Q_T[i][rows], b_T[i][cols], out=diff)
+        diff *= diff
+        acc += diff
+    key = np.round(acc, _RANK_DECIMALS)
+    dst = b_ids[cols]
+    if exclude_self:
+        key[q_ids[rows] == dst] = np.inf
+    order = np.lexsort((dst, key, rows))
+    # nonzero yields rows ascending, so rows[order] == rows
+    counts = np.bincount(rows, minlength=m)
+    rank = np.arange(len(rows)) - np.repeat(np.cumsum(counts) - counts, counts)
+    keep = (rank < kk) & np.isfinite(key[order])
+    sel = order[keep]
+    return q_ids[rows[sel]], dst[sel], acc[sel], (rank[keep] + 1).astype(np.int32)
 
 
 def _with_features(df: DataFrame, emb_col: str) -> DataFrame:

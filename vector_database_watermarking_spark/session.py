@@ -26,6 +26,18 @@ def default_driver_memory() -> str:
     return f"{min(kb // 2048, DRIVER_MEM_CAP_MB)}m"
 
 
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run
+    on (its affinity mask, which a container's cpuset narrows below
+    ``os.cpu_count()``)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 def get_spark(app_name: str = "vdb_wm_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
@@ -41,11 +53,12 @@ def get_spark(app_name: str = "vdb_wm_spark", cpus: int | None = None) -> SparkS
     are unaffected — AQE is disabled there, so their state
     partitioning still comes from ``shuffle.partitions``, which is why
     that stays at core count rather than 8x. Arrow is on so pandas-UDF
-    hot paths batch-transfer instead of pickling rows. The driver heap
-    is :func:`default_driver_memory` unless ``SPARK_DRIVER_MEM`` is set.
+    hot paths batch-transfer instead of pickling rows. ``cpus`` defaults
+    to :func:`default_cpus`; the driver heap is
+    :func:`default_driver_memory` unless ``SPARK_DRIVER_MEM`` is set.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = default_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
