@@ -20,7 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from vector_database_watermarking_spark.registry import QUERIES
-from vector_database_watermarking_spark.session import get_spark
+from vector_database_watermarking_spark.session import default_cpus, get_spark
 
 # Headline set: one per operator family (kNN graph build, graph
 # analytics incl. the iterative-components and stateful-session shapes,
@@ -174,7 +174,7 @@ def _probe_burn(n: int) -> int:
     return acc
 
 
-def effective_cores(workers: int = 32, unit: int = 4_000_000) -> tuple[float, int]:
+def effective_cores(workers: int | None = None, unit: int = 4_000_000) -> tuple[float, int]:
     """Host-contention calibration emitted alongside the bench JSON.
 
     Rounds 8-10 attributed uniform bench drift to hypervisor CPU steal
@@ -184,11 +184,14 @@ def effective_cores(workers: int = 32, unit: int = 4_000_000) -> tuple[float, in
     don't re-derive it. Method: wall-time one burn unit solo, then
     ``workers`` units in parallel (one process each); aggregate
     speedup = workers x solo / parallel = cores actually delivered.
+    ``workers`` defaults to the session's core count
+    (``session.default_cpus``), so the probe loads the host it runs on.
     Costs ~1.5 s once per bench run. Returns (cores, workers) so the
     emitted artifact always states the probe configuration that
     produced the number (ADVICE round 11)."""
     import multiprocessing as mp
 
+    workers = workers or default_cpus()
     t0 = time.time()
     _probe_burn(unit)
     solo = time.time() - t0
@@ -213,7 +216,7 @@ def _warmup(spark, sf_dir: str) -> None:
         for pdf in batches:
             yield pd.DataFrame({"x": [1]})
 
-    spark.range(64).repartition(32).mapInPandas(_noopf, "x long").write.format(
+    spark.range(64).repartition(default_cpus()).mapInPandas(_noopf, "x long").write.format(
         "noop"
     ).mode("overwrite").save()
     spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).agg(
@@ -292,10 +295,12 @@ def main() -> None:
                 "queries": timings,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 # host calibration: cores actually delivered to a
-                # 32-process CPU-saturating load at bench time (32 on
-                # an idle host; ~20 under this VM's steady hypervisor
-                # steal — see SCALING.md). Compare totals across rounds
-                # in units of THIS number, not wall seconds.
+                # CPU-saturating load of probe_workers processes (one
+                # per session core) at bench time — probe_workers on
+                # an idle host; r8-r14 probed with 32 and read ~20
+                # under that VM's hypervisor steal, see SCALING.md.
+                # Compare totals across rounds in units of THIS
+                # number, not wall seconds.
                 "calibration": {
                     "effective_cores": cores,
                     "probe_workers": probe_workers,

@@ -59,14 +59,7 @@ def test_tvp_perturbation_bound(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     strength = 0.6
     _, carriers = tvp_embed(emb, WM, strength=strength, th=1.0, seed=SEED)
-    cls = classify_compat(
-        emb,
-        __import__(
-            "vector_database_watermarking_spark.functions.hashing",
-            fromlist=["key_dims"],
-        ).key_dims(64, SEED),
-        len(WM),
-    )
+    cls = classify_compat(emb, len(WM), SEED)
     sizes = {r["group_id"]: r["n"] for r in cls.groupBy("group_id").agg(F.count("*").alias("n")).collect()}
     per_group = {
         r["group_id"]: r["n"]
@@ -101,3 +94,58 @@ def test_rs_roundtrip_and_determinism(spark, sf_dir):
     assert sorted(r["vec_id"] for r in carriers.collect()) == sorted(
         r["vec_id"] for r in carriers2.collect()
     )
+
+
+def _plan_nodes(node):
+    """Node names of an executed physical plan, walked node by node:
+    through the adaptive wrapper and into each query stage's plan."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        yield from _plan_nodes(node.executedPlan())
+        return
+    yield name
+    if "QueryStage" in name:
+        yield from _plan_nodes(node.plan())
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def _python_evals(df):
+    """Run ``df`` and count the Python evaluation nodes (pandas/Arrow
+    UDF projections and map-in-pandas relations) its plan executed."""
+    df.collect()
+    names = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
+    return sum(1 for n in names if n.endswith("EvalPython") or n.startswith("MapIn")), names
+
+
+def test_embed_plans_classify_once(spark, sf_dir):
+    """The classifier is evaluated once per pipeline: the TVP and RS
+    embed plans hold exactly one classifier and one embedder (the kNN
+    kernel sits behind the persisted accessibility index)."""
+    from vector_database_watermarking_spark.watermark.tvp import tvp_embed_with_ai
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    wm_df, _, ai = tvp_embed_with_ai(emb, WM, strength=0.7, th=1.0, seed=SEED)
+    n, names = _python_evals(wm_df)
+    assert n == 2, names
+    ai.unpersist()
+    n, names = _python_evals(rs_embed(emb, WM, strength=0.7, seed=SEED)[0])
+    assert n == 2, names
+
+
+def test_extract_plan_classifies_once(spark, sf_dir, monkeypatch):
+    from vector_database_watermarking_spark.operators import grouping
+
+    seen = []
+    decode = grouping.decode_bitstring
+
+    def spy(classified, L):
+        seen.append(classified)
+        return decode(classified, L)
+
+    monkeypatch.setattr(grouping, "decode_bitstring", spy)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    tvp_extract(emb, len(WM), seed=SEED)
+    n, names = _python_evals(grouping.majority_decode(seen[0]))
+    assert n == 1, names

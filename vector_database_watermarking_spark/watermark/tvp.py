@@ -14,10 +14,14 @@ so selection and embedding happen for all L groups in one shot —
 window functions partitioned by ``group_id`` (SURVEY §3.1 stage 8).
 
 Scale notes: every step shuffles by ``group_id`` or joins on
-``vec_id``; the only Python is the two Arrow-batched pandas UDFs
-(classification + embedding). At 100 TB the classification UDF is the
-hot path — the native parity tier (``operators.grouping``) is the
-all-JVM alternative with the same relational shape.
+``vec_id``; the only Python is one classifier pass per row (a
+``mapInPandas`` relation the optimizer cannot split or duplicate, so a
+pipeline evaluates it exactly once) and the carrier bit-surgery UDF.
+Per-group deficits and the AI threshold are window aggregates over the
+classified rows, not self-joins that would re-run the classifier. At
+100 TB the classifier is the hot path — the native parity tier
+(``operators.grouping``) is the all-JVM alternative with the same
+relational shape.
 
 Determinism (SURVEY §4.2): RS "random" selection orders by a keyed
 hash of (seed, vec_id) instead of CPython's stateful
@@ -26,10 +30,11 @@ hash of (seed, vec_id) instead of CPython's stateful
 
 from __future__ import annotations
 
+import functools
 import math
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -38,36 +43,23 @@ from ..functions.hashing import compat_md5_mod, hash60, key_dims
 from ..operators.graph import accessibility_index
 from ..operators.knn import knn_edges
 
-_CLS_SCHEMA = T.StructType(
-    [
-        T.StructField("vid", T.StringType()),
-        T.StructField("group_id", T.IntegerType()),
-        T.StructField("hidden_bit", T.IntegerType()),
-    ]
-)
+_CLS_FIELDS = [
+    T.StructField("vid", T.StringType()),
+    T.StructField("group_id", T.IntegerType()),
+    T.StructField("hidden_bit", T.IntegerType()),
+]
 
 
-def _make_classifier(dims: list[int], L: int):
-    skip = frozenset(dims)
-
-    @F.pandas_udf(_CLS_SCHEMA)
-    def _cls(embs: pd.Series) -> pd.DataFrame:
-        vids, gids, hbits = [], [], []
-        for vec in embs:
-            vec = list(vec)
-            vid = bits.content_id_py(vec, dims)
-            vids.append(vid)
-            gids.append(compat_md5_mod(vid, L))
-            # integer fast tier — bit-identical (functions.bits)
-            hbits.append(bits.extract_bit_fast(vec, vid, skip))
-        return pd.DataFrame({"vid": vids, "group_id": gids, "hidden_bit": hbits})
-
-    return _cls
+@functools.lru_cache(maxsize=None)
+def _keys(d: int, seed: int) -> tuple[tuple[int, ...], frozenset[int]]:
+    """Key dims of a length-``d`` vector and their skip set. The
+    workers derive them from the rows they read (memoised per length),
+    so no driver-side probe job has to learn ``d`` first."""
+    dims = tuple(key_dims(d, seed))
+    return dims, frozenset(dims)
 
 
-def _make_embedder(dims: list[int]):
-    skip = frozenset(dims)
-
+def _make_embedder(seed: int):
     @F.pandas_udf(T.ArrayType(T.FloatType()))
     def _embed(embs: pd.Series, vids: pd.Series, targets: pd.Series) -> pd.Series:
         out = []
@@ -75,20 +67,41 @@ def _make_embedder(dims: list[int]):
             if target is None or (isinstance(target, float) and math.isnan(target)):
                 out.append(vec)
             else:
+                skip = _keys(len(vec), seed)[1]
                 out.append(bits.embed_bit_fast(list(vec), int(target), vid, skip))
         return pd.Series(out)
 
     return _embed
 
 
-def classify_compat(emb: DataFrame, dims: list[int], L: int) -> DataFrame:
-    """A1 compat tier: add ``vid``, ``group_id``, ``hidden_bit`` via the
-    full-128-bit-md5 / binary-expansion semantics
-    (``watermarking.py:119-150``)."""
-    cls = _make_classifier(dims, L)
-    return emb.withColumn("_c", cls(F.col("embedding"))).select(
-        "*", "_c.vid", "_c.group_id", "_c.hidden_bit"
-    ).drop("_c")
+def classify_compat(emb: DataFrame, L: int, seed: int = 20) -> DataFrame:
+    """A1 compat tier: the input columns minus ``embedding``, plus
+    ``vid``, ``group_id``, ``hidden_bit`` via the full-128-bit-md5 /
+    binary-expansion semantics (``watermarking.py:119-150``).
+
+    One ``mapInPandas`` relation: filters above it cannot be pushed
+    into a second Python evaluation, and the vectors do not come back
+    out of Python."""
+    schema = T.StructType(
+        [f for f in emb.schema.fields if f.name != "embedding"] + _CLS_FIELDS
+    )
+
+    def _cls(batches):
+        for pdf in batches:
+            vids, gids, hbits = [], [], []
+            for vec in pdf["embedding"]:
+                vec = list(vec)
+                dims, skip = _keys(len(vec), seed)
+                vid = bits.content_id_py(vec, dims)
+                vids.append(vid)
+                gids.append(compat_md5_mod(vid, L))
+                # integer fast tier — bit-identical (functions.bits)
+                hbits.append(bits.extract_bit_fast(vec, vid, skip))
+            yield pdf.drop(columns="embedding").assign(
+                vid=vids, group_id=gids, hidden_bit=hbits
+            )
+
+    return emb.mapInPandas(_cls, schema)
 
 
 def _with_wm_bit(cls: DataFrame, watermark: str) -> DataFrame:
@@ -97,44 +110,55 @@ def _with_wm_bit(cls: DataFrame, watermark: str) -> DataFrame:
     return cls.withColumn("wm_bit", F.element_at(wm_arr, F.col("group_id") + 1))
 
 
-def _group_stats(cls_wm: DataFrame, strength: float) -> DataFrame:
-    """F5 deficit algebra (``watermarking.py:316-328``) per group:
-    (group_id, n_total, n_have, n_avail, deficit) with the deficit
-    capped at the available (disagreeing) rows. The single home of the
+def _deficit_cols(strength: float) -> list[Column]:
+    """F5 deficit algebra (``watermarking.py:316-328``) over a group's
+    ``n_total`` and ``n_have`` columns: ``n_avail`` (the disagreeing
+    rows) and the deficit capped at it. The single home of the
     formula — selection and the carrier audit both consume it."""
+    n_avail = F.col("n_total") - F.col("n_have")
+    need = F.ceil(F.lit(strength) * F.col("n_total")).cast("long") - F.col("n_have")
+    return [
+        F.least(F.greatest(F.lit(0), need), n_avail).alias("deficit"),
+        n_avail.alias("n_avail"),
+    ]
+
+
+def _agrees() -> Column:
+    return (F.col("hidden_bit") == F.col("wm_bit")).cast("int")
+
+
+def _group_stats(cls_wm: DataFrame, strength: float) -> DataFrame:
+    """Per group: (group_id, n_total, n_have, deficit, n_avail)."""
     stats = cls_wm.groupBy("group_id").agg(
-        F.count(F.lit(1)).alias("n_total"),
-        F.sum((F.col("hidden_bit") == F.col("wm_bit")).cast("int")).alias("n_have"),
+        F.count(F.lit(1)).alias("n_total"), F.sum(_agrees()).alias("n_have")
     )
-    stats = stats.withColumn(
-        "deficit",
-        F.greatest(
-            F.lit(0),
-            F.ceil(F.lit(strength) * F.col("n_total")).cast("long") - F.col("n_have"),
-        ),
-    ).withColumn("n_avail", F.col("n_total") - F.col("n_have"))
-    return stats.withColumn("deficit", F.least(F.col("deficit"), F.col("n_avail")))
+    return stats.select("*", *_deficit_cols(strength))
 
 
 def _avail_from_classified(cls: DataFrame, watermark: str, strength: float) -> DataFrame:
     """F5 bit-deficit computation (``watermarking.py:316-328``) over an
     already-classified DataFrame: attach the group's target bit,
     compute how many carriers each group still needs, and keep only the
-    flippable rows. Classifier-agnostic (compat pandas-UDF tier or the
-    native parity tier feed the same deficit algebra)."""
-    cls = _with_wm_bit(cls, watermark)
-    stats = _group_stats(cls, strength)
-    return cls.filter(F.col("hidden_bit") != F.col("wm_bit")).join(
-        F.broadcast(stats.select("group_id", "deficit", "n_avail")), on="group_id"
+    flippable rows. Classifier-agnostic (the compat tier or the
+    native parity tier feed the same deficit algebra). The group counts
+    are window aggregates, so the classified rows are read once."""
+    g = Window.partitionBy("group_id")
+    cls = (
+        _with_wm_bit(cls, watermark)
+        .withColumn("n_total", F.count(F.lit(1)).over(g))
+        .withColumn("n_have", F.sum(_agrees()).over(g))
+    )
+    return cls.select("*", *_deficit_cols(strength)).filter(
+        F.col("hidden_bit") != F.col("wm_bit")
     )
 
 
 def _selection_base(
-    emb: DataFrame, watermark: str, dims: list[int], strength: float
+    emb: DataFrame, watermark: str, seed: int, strength: float
 ) -> DataFrame:
     """Shared F5 bit-deficit computation (``watermarking.py:316-328``):
     classify (compat tier), then the deficit algebra."""
-    cls = classify_compat(emb, dims, len(watermark))
+    cls = classify_compat(emb, len(watermark), seed)
     return _avail_from_classified(cls, watermark, strength)
 
 
@@ -147,21 +171,21 @@ def _select_by_ai(avail: DataFrame, th: float) -> DataFrame:
     iterates candidates in data order) up to the deficit. Tier 2
     (backfill, ``:234-244``): remaining rows in AI-descending order.
     """
-    w_ai = Window.partitionBy("group_id").orderBy(F.col("ai").desc(), F.col("vec_id"))
+    w_group = Window.partitionBy("group_id")
+    w_ai = w_group.orderBy(F.col("ai").desc(), F.col("vec_id"))
     avail = avail.withColumn("ai_rank", F.row_number().over(w_ai))
     thr_rank = F.floor(F.col("n_avail") * F.lit(th)).cast("long")
 
-    thr = (
-        avail.filter(F.col("ai_rank") == thr_rank)
-        .select("group_id", F.col("ai").alias("thr_ai"))
-    )
-    avail = avail.join(F.broadcast(thr), on="group_id", how="left").withColumn(
+    # the AI at the threshold rank; null when no row holds that rank
+    # (int(n_avail·th) < 1), and then every row passes
+    thr_ai = F.max(F.when(F.col("ai_rank") == thr_rank, F.col("ai"))).over(w_group)
+    avail = avail.withColumn("thr_ai", thr_ai).withColumn(
         "passer",
         F.when(F.col("thr_ai").isNull(), F.lit(True)).otherwise(
             F.col("ai") >= F.col("thr_ai")
         ),
     )
-    n_pass = F.sum(F.col("passer").cast("long")).over(Window.partitionBy("group_id"))
+    n_pass = F.sum(F.col("passer").cast("long")).over(w_group)
     avail = avail.withColumn("n_pass", n_pass)
 
     w_tier = Window.partitionBy("group_id", "passer")
@@ -187,12 +211,10 @@ def _select_random(avail: DataFrame, seed: int) -> DataFrame:
     )
 
 
-def _apply_embedding(
-    emb: DataFrame, carriers: DataFrame, dims: list[int]
-) -> DataFrame:
+def _apply_embedding(emb: DataFrame, carriers: DataFrame, seed: int) -> DataFrame:
     """P5 application: join the carrier targets and rewrite only those
     embeddings (the UDF passes non-carriers through untouched)."""
-    embedder = _make_embedder(dims)
+    embedder = _make_embedder(seed)
     tagged = emb.join(
         carriers.select("vec_id", "vid", F.col("wm_bit").alias("_target")),
         on="vec_id",
@@ -236,13 +258,11 @@ def tvp_embed_with_ai(
     computed internally — so callers needing the reference's 5-tuple
     (``watermarking.py:342``) don't rebuild the kNN graph (the
     pipeline's dominant cost) a second time."""
-    d = len(emb.select("embedding").head()[0])
-    dims = key_dims(d, seed)
     edges = knn_edges(emb.select("vec_id", "embedding"), k=knn_k)
     ai = accessibility_index(edges, emb).select("vec_id", "ai").persist()
-    avail = _selection_base(emb, watermark, dims, strength).join(ai, on="vec_id")
+    avail = _selection_base(emb, watermark, seed, strength).join(ai, on="vec_id")
     carriers = _select_by_ai(avail, th).select("vec_id", "group_id", "wm_bit", "vid", "ai")
-    return _apply_embedding(emb, carriers, dims), carriers, ai
+    return _apply_embedding(emb, carriers, seed), carriers, ai
 
 
 def tvp_select_native(
@@ -312,15 +332,11 @@ def tvp_carrier_invariants(
     Returns one row per group: ``(group_id, deficit_met,
     embed_fixed_carriers, group_bit_decoded)``.
     """
-    d = len(emb.select("embedding").head()[0])
-    dims = key_dims(d, seed)
     L = len(watermark)
 
-    cls = _with_wm_bit(classify_compat(emb, dims, L), watermark)
-    stats = _group_stats(cls, strength)
-    avail = cls.filter(F.col("hidden_bit") != F.col("wm_bit")).join(
-        F.broadcast(stats.select("group_id", "deficit", "n_avail")), on="group_id"
-    )
+    cls = classify_compat(emb, L, seed)
+    stats = _group_stats(_with_wm_bit(cls, watermark), strength)
+    avail = _avail_from_classified(cls, watermark, strength)
     edges = knn_edges(emb.select("vec_id", "embedding"), k=knn_k)
     ai = accessibility_index(edges, emb).select("vec_id", "ai")
     # carriers feeds the per-group count AND the embedding pass, and
@@ -335,12 +351,10 @@ def tvp_carrier_invariants(
     # embed for real, then re-classify the watermarked vectors — the
     # audit's right-hand sides come from a second, independent pass
     # through the extraction path
-    wm_df = _apply_embedding(emb, carriers, dims)
-    post = _with_wm_bit(classify_compat(wm_df, dims, L), watermark)
+    wm_df = _apply_embedding(emb, carriers, seed)
+    post = _with_wm_bit(classify_compat(wm_df, L, seed), watermark)
     post_stats = post.groupBy("group_id").agg(
-        F.sum((F.col("hidden_bit") == F.col("wm_bit")).cast("int")).alias(
-            "n_have_post"
-        ),
+        F.sum(_agrees()).alias("n_have_post"),
         F.count(F.lit(1)).alias("n_total_post"),
     )
 
@@ -372,11 +386,9 @@ def rs_embed(
 ) -> tuple[DataFrame, DataFrame]:
     """C2 (``watermark_embedding``, ``watermarking.py:345-400``):
     TVP with uniform-random carrier selection (the ablation)."""
-    d = len(emb.select("embedding").head()[0])
-    dims = key_dims(d, seed)
-    avail = _selection_base(emb, watermark, dims, strength)
+    avail = _selection_base(emb, watermark, seed, strength)
     carriers = _select_random(avail, seed).select("vec_id", "group_id", "wm_bit", "vid")
-    return _apply_embedding(emb, carriers, dims), carriers
+    return _apply_embedding(emb, carriers, seed), carriers
 
 
 def tvp_extract(wm_data: DataFrame, L: int, seed: int = 20) -> str:
@@ -384,7 +396,4 @@ def tvp_extract(wm_data: DataFrame, L: int, seed: int = 20) -> str:
     blind extraction — needs only (seed, L)."""
     from ..operators.grouping import decode_bitstring
 
-    d = len(wm_data.select("embedding").head()[0])
-    dims = key_dims(d, seed)
-    cls = classify_compat(wm_data, dims, L)
-    return decode_bitstring(cls, L)
+    return decode_bitstring(classify_compat(wm_data, L, seed), L)
