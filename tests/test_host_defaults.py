@@ -47,6 +47,13 @@ def test_session_cores_follow_default(spark):
     assert spark.sparkContext.master == f"local[{session.default_cpus()}]"
 
 
+def test_session_codegen_cache_holds_a_pipeline(spark):
+    """The compiled-class cache outsizes one embed op's working set, so
+    repeating a pipeline reuses its classes instead of recompiling."""
+    got = spark.conf.get("spark.sql.codegen.cache.maxEntries")
+    assert int(got) == session.CODEGEN_CACHE_ENTRIES > 100
+
+
 def test_scratch_dir_under_spark_local_dirs(tmp_path, monkeypatch):
     """Query scratch lives under the first SPARK_LOCAL_DIRS entry, one
     dir per process; dirs left by dead processes are swept."""

@@ -11,6 +11,12 @@ import os
 from pyspark.sql import SparkSession
 
 DRIVER_MEM_CAP_MB = 48 * 1024
+# Compiled whole-stage classes kept per JVM. One TVP embed with its
+# extraction generates over 100 distinct classes, Spark's default; at
+# that size the LRU evicts classes the next run of the same pipeline
+# needs, and each run recompiles 50-90 of them (Janino, then the JIT
+# from scratch), a count that varies with stage order.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def default_driver_memory() -> str:
@@ -53,7 +59,9 @@ def get_spark(app_name: str = "vdb_wm_spark", cpus: int | None = None) -> SparkS
     are unaffected — AQE is disabled there, so their state
     partitioning still comes from ``shuffle.partitions``, which is why
     that stays at core count rather than 8x. Arrow is on so pandas-UDF
-    hot paths batch-transfer instead of pickling rows. ``cpus`` defaults
+    hot paths batch-transfer instead of pickling rows. The codegen
+    cache holds :data:`CODEGEN_CACHE_ENTRIES` classes, so a repeated
+    pipeline reuses its compiled stages. ``cpus`` defaults
     to :func:`default_cpus`; the driver heap is
     :func:`default_driver_memory` unless ``SPARK_DRIVER_MEM`` is set.
     """
@@ -75,6 +83,7 @@ def get_spark(app_name: str = "vdb_wm_spark", cpus: int | None = None) -> SparkS
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
