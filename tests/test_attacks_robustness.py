@@ -1,5 +1,6 @@
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from vector_database_watermarking_spark.operators import attacks, knn, stats
@@ -24,7 +25,7 @@ def test_random_delete_exact_count_and_invariance(spark, sf_dir):
 def test_random_modify_touches_exact_rows_and_span(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     n = emb.count()
-    out = attacks.random_modify(emb, 0.2, seed=7, span=30)
+    out = attacks.random_modify(emb, 0.2, seed=7)
     orig = {r["vec_id"]: r["embedding"] for r in emb.collect()}
     new = {r["vec_id"]: r["embedding"] for r in out.collect()}
     changed = [v for v in orig if orig[v] != new[v]]
@@ -94,7 +95,7 @@ def test_robustness_grid_monotone_trend(spark, sf_dir):
 def test_modify_targets_lockstep_with_random_modify(spark, sf_dir):
     """modify_targets must name exactly the rows random_modify rewrote."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    perturbed = attacks.random_modify(emb, 0.2, seed=42, span=30)
+    perturbed = attacks.random_modify(emb, 0.2, seed=42)
     targets = {r["vec_id"] for r in attacks.modify_targets(emb, 0.2, seed=42).collect()}
     orig = {r["vec_id"]: r["embedding"] for r in emb.collect()}
     changed = {
@@ -139,7 +140,7 @@ def test_take_ranked_matches_global_window(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id")
     key = _rank_key(7, "trk")
     for n in (0, 1, 37, 499, 10_000):
-        got = {r["vec_id"] for r in take_ranked(emb, n, key).collect()}
+        got = {r["vec_id"] for r in take_ranked(emb, lambda _: n, key).collect()}
         w = Window.orderBy(key, F.col("vec_id"))
         want = {
             r["vec_id"]
@@ -152,7 +153,7 @@ def test_take_ranked_matches_global_window(spark, sf_dir):
     scored = emb.withColumn("s", (F.col("vec_id") % 17).cast("double"))
     got = {
         r["vec_id"]
-        for r in take_ranked(scored, 100, F.col("s"), descending=True).collect()
+        for r in take_ranked(scored, lambda _: 100, F.col("s"), descending=True).collect()
     }
     w = Window.orderBy(F.col("s").desc(), F.col("vec_id"))
     want = {
@@ -172,7 +173,7 @@ def test_take_ranked_null_keys_rank_last(spark):
     rows = [(i, float(i % 5) if i % 3 else None) for i in range(200)]
     df = spark.createDataFrame(rows, ["vec_id", "score"])
     # nulls must never be selected while scored rows remain
-    got = take_ranked(df, 50, F.col("score"), descending=True)
+    got = take_ranked(df, lambda _: 50, F.col("score"), descending=True)
     assert got.filter(F.col("score").isNull()).count() == 0
     w = Window.orderBy(F.col("score").desc(), F.col("vec_id"))
     want = {
@@ -183,7 +184,7 @@ def test_take_ranked_null_keys_rank_last(spark):
     }
     assert {r["vec_id"] for r in got.collect()} == want
     # n beyond the non-null population: nulls fill the tail in tie order
-    got2 = take_ranked(df, 150, F.col("score"), descending=True)
+    got2 = take_ranked(df, lambda _: 150, F.col("score"), descending=True)
     want2 = {
         r["vec_id"]
         for r in df.withColumn("_rn", F.row_number().over(w))
@@ -195,4 +196,97 @@ def test_take_ranked_null_keys_rank_last(spark):
     allnull = spark.createDataFrame(
         [(i, None) for i in range(20)], "vec_id long, score double"
     )
-    assert take_ranked(allnull, 5, F.col("score"), descending=True).count() == 5
+    assert take_ranked(allnull, lambda _: 5, F.col("score"), descending=True).count() == 5
+
+
+def _window_top(df, n, *order):
+    from pyspark.sql import Window
+
+    w = Window.orderBy(*order)
+    return {
+        r["vec_id"]
+        for r in df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= n)
+        .collect()
+    }
+
+
+def test_adaptive_modify_rewrites_top_ai_rows(spark, sf_dir):
+    """adaptive_modify rewrites exactly the top ceil(n·p) rows by AI
+    (ties by vec_id, NULL AI last), each with one value over at most
+    SPAN dims. At p=0.9 the quota exceeds the scored rows, so the
+    NULL tail is reached in vec_id order."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    n = emb.count()
+    ai = emb.select(
+        "vec_id",
+        F.when(F.col("vec_id") % 7 == 0, F.lit(None))
+        .otherwise((F.col("vec_id") % 13).cast("double"))
+        .alias("ai"),
+    )
+    unscored = {r["vec_id"] for r in ai.filter(F.col("ai").isNull()).collect()}
+    assert 0 < len(unscored) < n - math.ceil(n * 0.3)
+    orig = {r["vec_id"]: r["embedding"] for r in emb.collect()}
+    for p in (0.3, 0.9):
+        out = attacks.adaptive_modify(emb, ai, p, seed=7)
+        new = {r["vec_id"]: r["embedding"] for r in out.collect()}
+        assert new.keys() == orig.keys()
+        changed = {v for v in orig if orig[v] != new[v]}
+        want = _window_top(ai, math.ceil(n * p), F.col("ai").desc(), F.col("vec_id"))
+        assert changed == want
+        if p == 0.3:
+            assert not changed & unscored
+        for v in changed:
+            diffs = [i for i, (a, b) in enumerate(zip(orig[v], new[v])) if a != b]
+            assert len(diffs) <= attacks.SPAN
+            assert len({new[v][i] for i in diffs}) == 1
+
+
+@pytest.mark.parametrize(
+    "thresholds",
+    [
+        (2.0**61, 2.0**61),  # every row below t_lo: c_sure > n
+        (-1.0, -1.0),  # empty band: c_band < quota
+    ],
+    ids=["c_sure_above_n", "c_band_below_quota"],
+)
+def test_take_ranked_guarantee_fallbacks(spark, sf_dir, monkeypatch, thresholds):
+    """Quantile thresholds that break either rank guarantee must send
+    take_ranked to its exact global-window path."""
+    from vector_database_watermarking_spark.operators.attacks import (
+        _rank_key,
+        take_ranked,
+    )
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id")
+    key = _rank_key(7, "fb")
+    want = _window_top(emb, 37, key, F.col("vec_id"))
+    calls = []
+
+    def broken(self, col, probabilities, relative_error):
+        calls.append(col)
+        return list(thresholds)
+
+    monkeypatch.setattr(type(emb), "approxQuantile", broken)
+    got = {r["vec_id"] for r in take_ranked(emb, lambda _: 37, key).collect()}
+    assert calls == ["_akd"]
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "attack, expected", [("random_delete", 9), ("random_modify", 12)]
+)
+def test_attack_job_counts(spark, sf_dir, attack, expected):
+    """Spark jobs of one attack call with its output forced by an eager
+    local checkpoint (as the traced benchmark forces it): the probe's
+    count/quantile/bracket actions, the modify stats aggregate and the
+    output's own jobs."""
+    sc = spark.sparkContext
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    group = f"test-jobs-{attack}"
+    sc.setJobGroup(group, group)
+    try:
+        getattr(attacks, attack)(emb, 0.3, seed=7).localCheckpoint(eager=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == expected

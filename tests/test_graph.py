@@ -246,20 +246,22 @@ def test_triangle_counts_ignores_one_way_edges(spark):
 def test_k_core_matches_bruteforce_and_tiers(spark, monkeypatch):
     """k-core on a hand-built graph: triangle+tail — the tail peels
     off, the triangle survives at k=2; driver and distributed tiers
-    agree."""
+    agree. Duplicate edges count once on both tiers: the repeated
+    4→5/5→4 edge must not keep the tail's degree at 2."""
+    from vector_database_watermarking_spark.operators import knn as knn_mod
+
     edges = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)]
     sym = edges + [(b, a) for a, b in edges]
     e = spark.createDataFrame(sym, "src long, dst long")
-    out = {r["vec_id"]: r["core_degree"] for r in graph.k_core(e, k=2).collect()}
-    assert out == {1: 2, 2: 2, 3: 2}  # 4-5 tail peeled, triangle stays
-    # force the distributed loop and compare
-    from vector_database_watermarking_spark.operators import knn as knn_mod
-
-    monkeypatch.setattr(knn_mod, "MAX_BROADCAST_ROWS", 2)
-    dist = {r["vec_id"]: r["core_degree"] for r in graph.k_core(e, k=2).collect()}
-    assert dist == out
-    # k above the max degree empties the core on both tiers
-    assert graph.k_core(e, k=4).count() == 0
+    dup = spark.createDataFrame(sym + [(4, 5), (5, 4), (1, 2)], "src long, dst long")
+    want = {1: 2, 2: 2, 3: 2}  # 4-5 tail peeled, triangle stays
+    for cap in (knn_mod.MAX_BROADCAST_ROWS, 2):  # driver, then distributed
+        monkeypatch.setattr(knn_mod, "MAX_BROADCAST_ROWS", cap)
+        for g in (e, dup):
+            out = {r["vec_id"]: r["core_degree"] for r in graph.k_core(g, k=2).collect()}
+            assert out == want, (cap, g is dup)
+            # k above the max degree empties the core
+            assert graph.k_core(g, k=4).count() == 0
 
 
 def test_mutual_edges_match_reverse_semi_join(spark, sf_dir):

@@ -4,6 +4,8 @@ import pytest
 
 from vector_database_watermarking_spark import session
 
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 pytestmark = pytest.mark.skipif(
     not os.path.exists("/proc/meminfo"), reason="needs /proc/meminfo"
 )
@@ -68,3 +70,40 @@ def test_scratch_dir_under_spark_local_dirs(tmp_path, monkeypatch):
     got = _scratch_dir("t", "/data/sf0.001/")
     assert got == str(base / f"t_sf0.001_pid{os.getpid()}")
     assert not dead.exists()
+
+
+def test_dead_jvm_stops_the_run_once(pytester, monkeypatch):
+    """A py4j connection failure ends the run at the first failing test
+    (the shared session conftest's hook); an unrelated refused
+    connection does not."""
+    monkeypatch.setenv(
+        "PYTHONPATH", os.pathsep.join(filter(None, [_REPO, os.environ.get("PYTHONPATH")]))
+    )
+    pytester.makepyfile(
+        """
+        import socket
+
+        from py4j.java_gateway import GatewayParameters, JavaGateway
+
+
+        def test_unrelated_refusal():
+            raise ConnectionRefusedError(111, "not the JVM")
+
+
+        def test_dead_gateway():
+            s = socket.socket()
+            s.bind(("127.0.0.1", 0))
+            port = s.getsockname()[1]
+            s.close()  # nothing listens there any more
+            gw = JavaGateway(gateway_parameters=GatewayParameters(port=port))
+            gw.jvm.java.lang.System.currentTimeMillis()
+
+
+        def test_never_runs():
+            pass
+        """
+    )
+    result = pytester.runpytest_subprocess("-p", "tests.conftest", "-p", "no:cacheprovider")
+    result.assert_outcomes(failed=2)
+    result.stdout.fnmatch_lines(["*the Spark JVM is unreachable*test_dead_gateway*"])
+    assert "test_never_runs" not in result.stdout.str()

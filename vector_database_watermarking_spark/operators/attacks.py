@@ -9,21 +9,27 @@ it, so even the "random" attacks are oracle-checkable.
 Scale notes: every exact-n rank selection goes through
 :func:`take_ranked` — an ``approxQuantile`` threshold bracket plus a
 bounded tie-band window (never a global single-task sort), with exact
-``(key, vec_id)`` order guaranteed by runtime-checked rank bounds.
-Modification rewrites arrays with a native ``transform`` — no UDF, no
-shuffle. Insertion derives per-dim stats with one posexplode
-aggregation and synthesizes rows JVM-side with Box-Muller over keyed
-hashes.
+``(key, vec_id)`` order guaranteed by runtime-checked rank bounds, in
+three actions on a slim probe that also yields the row count the
+keep-count is computed from. Both modifications share one rewrite,
+:func:`_overwrite_span` (a native ``transform`` — no UDF, no
+shuffle), and one count/min/max aggregate; they differ only in how
+the target rows are chosen. Insertion derives per-dim stats with one
+posexplode aggregation and synthesizes rows JVM-side with Box-Muller
+over keyed hashes.
 """
 
 from __future__ import annotations
 
 import math
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hash60
+
+SPAN = 30  # consecutive dims one modification overwrites (the reference's)
 
 
 def _rank_key(seed: int, tag: str) -> Column:
@@ -32,23 +38,27 @@ def _rank_key(seed: int, tag: str) -> Column:
 
 def take_ranked(
     df: DataFrame,
-    n: int,
+    keep: Callable[[int], int],
     key: Column,
     *,
     descending: bool = False,
     tie_col: str = "vec_id",
 ) -> DataFrame:
-    """Exactly the first ``n`` rows of ``df`` in ``(key, tie_col)``
-    order (``row_number() <= n`` semantics, NULL keys ranking last —
-    matching ``Window.orderBy(key.desc())``'s nulls-last placement the
-    adaptive attacks relied on) WITHOUT a global single-task sort.
+    """Exactly the first ``n = keep(count(df))`` rows of ``df`` in
+    ``(key, tie_col)`` order (``row_number() <= n`` semantics, NULL
+    keys ranking last — matching ``Window.orderBy(key.desc())``'s
+    nulls-last placement the adaptive attacks relied on) WITHOUT a
+    global single-task sort. ``keep`` maps the row count, which the
+    probe learns anyway, to the number of rows to keep; a caller whose
+    count comes from another frame ignores its argument.
 
     Scale shape (the same threshold-plus-tie-band idea as
     ``graph.hidden_nodes``, generalized to continuous keys): an
     ``approxQuantile`` probe over a SLIM (key, tie) projection
     brackets the n-th key between two thresholds whose rank error is
-    provably inside the pad — only driver scalars survive the probe
-    (the full relation is never persisted). Rows strictly below the
+    provably inside the pad — only driver scalars survive the probe's
+    three actions (row and non-null counts, the two quantiles, the two
+    bracket counts), and the full relation is never persisted. Rows strictly below the
     lower threshold pass a plain parallel filter, and only the
     bracket band — O(relative-error · N), capped ~10⁵ rows — goes
     through a row_number window to resolve the last slots. The
@@ -63,8 +73,6 @@ def take_ranked(
     consistent with the exact order).
     """
     out_cols = list(df.columns)
-    if n <= 0:
-        return df.filter(F.lit(False))
     akey = (-key) if descending else key
     akd = akey.cast("double")
     # single-partition by construction (band is capped ~1e5 rows;
@@ -85,15 +93,15 @@ def take_ranked(
         )
 
     # probe on a slim projection: per-row cost is ~16 bytes, persisted
-    # only for the four scalar actions below, then released — the full
-    # relation (embeddings!) is never cached by this helper
+    # only for the three actions below, then released
     probe = df.select(akd.alias("_akd"), F.col(tie_col)).persist()
     try:
-        total = probe.count()
+        total, nn = probe.agg(F.count(F.lit(1)), F.count("_akd")).head()
+        n = keep(total)
+        if n <= 0:
+            return df.filter(F.lit(False))
         if n >= total:
             return df
-        n_null = probe.filter(F.col("_akd").isNull()).count()
-        nn = total - n_null
         if n >= nn:
             # every non-null row selected; the remainder comes from the
             # null-key tail in tie order (rare; bounded by null count)
@@ -105,13 +113,13 @@ def take_ranked(
         # approxQuantile ignores nulls, so ranks are within the
         # non-null population — consistent with nulls-last ordering
         t_lo, t_hi = probe.stat.approxQuantile("_akd", [q_lo, q_hi], eps)
-        c_sure = probe.filter(F.col("_akd") < t_lo).count()
+        c_sure, c_band = probe.agg(
+            F.count_if(F.col("_akd") < t_lo),
+            F.count_if((F.col("_akd") >= t_lo) & (F.col("_akd") <= t_hi)),
+        ).head()
         if c_sure > n:  # low-side guarantee violated
             return _fallback()
         quota = n - c_sure
-        c_band = probe.filter(
-            (F.col("_akd") >= t_lo) & (F.col("_akd") <= t_hi)
-        ).count()
         if c_band < quota:  # high-side guarantee violated
             return _fallback()
     finally:
@@ -135,119 +143,25 @@ def _uniform01(*cols: Column) -> Column:
     )
 
 
-def random_delete(emb: DataFrame, p: float, seed: int = 42) -> DataFrame:
-    """W6 deletion (``roubust/roubust.py:76-97``): keep exactly
-    ``n − ceil(n·p)`` rows, chosen by hash order (the reference keeps a
-    uniform sample of that size — see SURVEY W6 note on its
-    keep-count semantics)."""
-    n = emb.count()
-    keep = n - int(math.ceil(n * p))
-    return take_ranked(emb, keep, _rank_key(seed, "dele"))
+def _embedding_stats(emb: DataFrame) -> tuple[int, float, float]:
+    """Row count and the global [min, max] over every embedding value,
+    in one aggregate."""
+    n, lo, hi = emb.agg(
+        F.count(F.lit(1)),
+        F.min(F.array_min("embedding")),
+        F.max(F.array_max("embedding")),
+    ).head()
+    return n, float(lo), float(hi)
 
 
-def adaptive_delete(emb: DataFrame, ai: DataFrame, p: float) -> DataFrame:
-    """W2 adaptive deletion (``adaptive_dele``,
-    ``watermarking.py:430-443``): drop the top ``ceil(n·p)`` rows by
-    accessibility index (the attacker removes the most likely
-    carriers). ``ai`` is ``(vec_id, ai)``.
-
-    Rows of ``emb`` with no ``ai`` entry (an AI snapshot older than an
-    insertion attack, say) are KEPT — the attacker can't rank what it
-    has no score for. NULL AI scores rank last (never removed while
-    scored rows remain), matching the desc-nulls-last window order."""
-    n = emb.count()
-    remove = int(math.ceil(n * p))
-    removed = take_ranked(ai, remove, F.col("ai"), descending=True).select("vec_id")
-    return emb.join(removed, on="vec_id", how="left_anti")
-
-
-def random_modify(
-    emb: DataFrame,
-    p: float,
-    seed: int = 42,
-    span: int = 30,
-    lo: float | None = None,
-    hi: float | None = None,
+def _overwrite_span(
+    emb: DataFrame, targets: DataFrame, lo: float, hi: float, seed: int
 ) -> DataFrame:
-    """C8 modification (``random_modify``, ``roubust/roubust.py:132-156``,
-    ``tabularMark.py:192-219``): for ``ceil(n·p)`` hash-chosen rows,
-    overwrite ``span`` consecutive dims (mod d) starting at a per-row
-    offset with one uniform value drawn from a dimension's [min, max].
-
-    Native: the array rewrite is a ``transform`` lambda over the
-    element index — whole-stage codegen, no Python.
-    """
-    n = emb.count()
-    modify = int(math.ceil(n * p))
-    if lo is None or hi is None:
-        stats = (
-            emb.select(F.explode("embedding").alias("v"))
-            .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-            .head()
-        )
-        lo = float(stats["lo"]) if lo is None else lo
-        hi = float(stats["hi"]) if hi is None else hi
-
-    targets = take_ranked(
-        emb.select("vec_id"), modify, _rank_key(seed, "modi")
-    ).withColumn("_hit", F.lit(1))
-    d = F.size("embedding")
-    offset = (hash60(F.concat_ws("_", F.lit(str(seed)), F.lit("off"), F.col("vec_id"))) % d).cast("int")
-    new_val = (
-        F.lit(lo)
-        + (F.lit(hi) - F.lit(lo))
-        * _uniform01(F.lit(str(seed)), F.lit("val"), F.col("vec_id"))
-    ).cast("float")
-
-    modified = F.transform(
-        "embedding",
-        lambda x, i: F.when(
-            ((i - F.col("_off") + d) % d) < F.lit(span), F.col("_nv")
-        ).otherwise(x),
-    )
-    return (
-        emb.join(targets, on="vec_id", how="left")
-        .withColumn("_off", offset)
-        .withColumn("_nv", new_val)
-        .withColumn(
-            "embedding",
-            F.when(F.col("_hit").isNotNull(), modified).otherwise(F.col("embedding")),
-        )
-        .drop("_hit", "_off", "_nv")
-    )
-
-
-def modify_targets(emb: DataFrame, p: float, seed: int = 42) -> DataFrame:
-    """The ``ceil(n·p)`` hash-chosen vec_ids that :func:`random_modify`
-    rewrites under the same (p, seed) — the attacked-row set, exposed
-    so impact studies (A13) can treat them as carriers. Must stay in
-    lockstep with ``random_modify``'s ranking key."""
-    n = emb.count()
-    modify = int(math.ceil(n * p))
-    return take_ranked(
-        emb.select("vec_id"), modify, _rank_key(seed, "modi")
-    ).select("vec_id")
-
-
-def adaptive_modify(
-    emb: DataFrame,
-    ai: DataFrame,
-    p: float,
-    seed: int = 42,
-    span: int = 30,
-) -> DataFrame:
-    """W2 modification (``adaptive_modify``, ``roubust/roubust.py:99-130``):
-    same array rewrite, targets = top ``ceil(n·p)`` rows by AI."""
-    n = emb.count()
-    modify = int(math.ceil(n * p))
-    targets = take_ranked(ai, modify, F.col("ai"), descending=True).select("vec_id")
-    stats = (
-        emb.select(F.explode("embedding").alias("v"))
-        .agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-        .head()
-    )
-    lo, hi = float(stats["lo"]), float(stats["hi"])
-
+    """The C8 rewrite of the ``targets`` rows (``vec_id``): overwrite
+    ``SPAN`` consecutive dims (mod d) from a keyed per-row offset with
+    one keyed uniform value from [lo, hi]. A native ``transform``
+    lambda over the element index — whole-stage codegen, no Python,
+    no shuffle beyond the target join."""
     d = F.size("embedding")
     offset = (hash60(F.concat_ws("_", F.lit(str(seed)), F.lit("off"), F.col("vec_id"))) % d).cast("int")
     new_val = (
@@ -258,7 +172,7 @@ def adaptive_modify(
     modified = F.transform(
         "embedding",
         lambda x, i: F.when(
-            ((i - F.col("_off") + d) % d) < F.lit(span), F.col("_nv")
+            ((i - F.col("_off") + d) % d) < F.lit(SPAN), F.col("_nv")
         ).otherwise(x),
     )
     return (
@@ -273,6 +187,67 @@ def adaptive_modify(
     )
 
 
+def random_delete(emb: DataFrame, p: float, seed: int = 42) -> DataFrame:
+    """W6 deletion (``roubust/roubust.py:76-97``): keep exactly
+    ``n − ceil(n·p)`` rows, chosen by hash order (the reference keeps a
+    uniform sample of that size — see SURVEY W6 note on its
+    keep-count semantics)."""
+    return take_ranked(
+        emb, lambda n: n - int(math.ceil(n * p)), _rank_key(seed, "dele")
+    )
+
+
+def adaptive_delete(emb: DataFrame, ai: DataFrame, p: float) -> DataFrame:
+    """W2 adaptive deletion (``adaptive_dele``,
+    ``watermarking.py:430-443``): drop the top ``ceil(n·p)`` rows by
+    accessibility index (the attacker removes the most likely
+    carriers). ``ai`` is ``(vec_id, ai)``.
+
+    Rows of ``emb`` with no ``ai`` entry (an AI snapshot older than an
+    insertion attack, say) are KEPT — the attacker can't rank what it
+    has no score for. NULL AI scores rank last (never removed while
+    scored rows remain), matching the desc-nulls-last window order."""
+    remove = int(math.ceil(emb.count() * p))
+    removed = take_ranked(
+        ai, lambda _: remove, F.col("ai"), descending=True
+    ).select("vec_id")
+    return emb.join(removed, on="vec_id", how="left_anti")
+
+
+def modify_targets(emb: DataFrame, p: float, seed: int = 42) -> DataFrame:
+    """The ``ceil(n·p)`` hash-chosen vec_ids that :func:`random_modify`
+    rewrites under the same (p, seed) — the attacked-row set, exposed
+    so impact studies (A13) can treat them as carriers."""
+    return take_ranked(
+        emb.select("vec_id"),
+        lambda n: int(math.ceil(n * p)),
+        _rank_key(seed, "modi"),
+    )
+
+
+def random_modify(emb: DataFrame, p: float, seed: int = 42) -> DataFrame:
+    """C8 modification (``random_modify``, ``roubust/roubust.py:132-156``,
+    ``tabularMark.py:192-219``): :func:`_overwrite_span` on the
+    :func:`modify_targets` rows, the value drawn from the global
+    [min, max] of the embedding values."""
+    _, lo, hi = _embedding_stats(emb)
+    return _overwrite_span(emb, modify_targets(emb, p, seed), lo, hi, seed)
+
+
+def adaptive_modify(
+    emb: DataFrame, ai: DataFrame, p: float, seed: int = 42
+) -> DataFrame:
+    """W2 modification (``adaptive_modify``, ``roubust/roubust.py:99-130``):
+    the :func:`random_modify` rewrite on the top ``ceil(n·p)`` rows by
+    AI (NULL AI ranks last)."""
+    n, lo, hi = _embedding_stats(emb)
+    modify = int(math.ceil(n * p))
+    targets = take_ranked(
+        ai, lambda _: modify, F.col("ai"), descending=True
+    ).select("vec_id")
+    return _overwrite_span(emb, targets, lo, hi, seed)
+
+
 def gaussian_insertion(
     emb: DataFrame, num_to_insert: int, seed: int = 42, id_offset: int = 10_000_000
 ) -> DataFrame:
@@ -285,7 +260,6 @@ def gaussian_insertion(
     Box-Muller gaussians from keyed hashes. New rows get ids above
     ``id_offset`` (the reference loses identity; we keep it explicit).
     """
-    d = len(emb.select("embedding").head()[0])
     stats = (
         emb.select(F.posexplode("embedding").alias("dim", "v"))
         .groupBy("dim")
@@ -293,6 +267,7 @@ def gaussian_insertion(
         .orderBy("dim")
         .collect()
     )
+    d = len(stats)
     means = F.array(*[F.lit(float(r["mean"])) for r in stats])
     stds = F.array(*[F.lit(float(r["std"])) for r in stats])
 

@@ -719,7 +719,6 @@ def k_core(
     edges: DataFrame,
     k: int = 3,
     max_iter: int = 50,
-    dedup: bool = True,
 ) -> DataFrame:
     """k-core decomposition of the (symmetric) graph: iteratively
     remove every node of degree < k until the remaining subgraph's
@@ -730,13 +729,10 @@ def k_core(
     one row per surviving node with its degree INSIDE the core.
 
     ``edges`` must be symmetric (both directions present), e.g. the
-    mutual-kNN edge table. With ``dedup=True`` (default) the edge list
-    is made distinct first, so both tiers define degree as the number
-    of DISTINCT neighbors even on multigraph input (the driver tier's
-    adjacency sets dedup implicitly; without this the distributed
-    tier's raw row-count degree would diverge on duplicate edges).
-    Callers that guarantee duplicate-free edges can pass
-    ``dedup=False`` to skip the extra shuffle.
+    mutual-kNN edge table. Both tiers define degree as the number of
+    DISTINCT neighbors, so duplicate edges count once: the driver
+    tier's adjacency sets dedup implicitly, the distributed tier makes
+    its edge list distinct before the first round.
 
     Tiered like the components loop: while the edge list fits the
     broadcast cap, a driver peel runs in microseconds (the distributed
@@ -750,8 +746,6 @@ def k_core(
 
     sess = edges.sparkSession
     edges = edges.select("src", "dst")
-    if dedup:
-        edges = edges.distinct()
     rows = probe_collect(edges)
     if rows is not None:
         adj: dict = {}
@@ -770,7 +764,7 @@ def k_core(
             "vec_id long, core_degree long",
         )
 
-    cur = edges.localCheckpoint(eager=True)
+    cur = edges.distinct().localCheckpoint(eager=True)
     converged = False
     for _ in range(max_iter):
         deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("_d"))

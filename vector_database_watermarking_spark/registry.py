@@ -474,7 +474,7 @@ def c8_random_modify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.attacks import random_modify
 
     emb = load_table(spark, sf_dir, "embeddings")
-    out = random_modify(emb, 0.2, seed=42, span=30)
+    out = random_modify(emb, 0.2, seed=42)
     emb_sum = F.aggregate(
         F.col("embedding").cast("array<double>"),
         F.lit(0.0),

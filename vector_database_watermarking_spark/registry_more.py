@@ -227,7 +227,7 @@ def a13_carrier_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.stats import carrier_impact
 
     emb = load_table(spark, sf_dir, "embeddings")
-    perturbed = random_modify(emb, 0.2, seed=42, span=30)
+    perturbed = random_modify(emb, 0.2, seed=42)
     carriers = modify_targets(emb, 0.2, seed=42)
     before = knn.knn_edges(emb.select("vec_id", "embedding"), k=20)
     after = knn.knn_edges(perturbed.select("vec_id", "embedding"), k=20)
@@ -2502,9 +2502,7 @@ def ext_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one-pass mutual graph (optimization round 13): the reverse-semi-
     # join shape evaluated the kNN subtree twice in one job
     mutual = graph.mutual_edges(e)
-    # mutual edges are duplicate-free by construction (top-k per src
-    # has unique dst), so skip k_core's defensive distinct shuffle
-    return graph.k_core(mutual, k=6, dedup=False)
+    return graph.k_core(mutual, k=6)
 
 
 # ----------------------------------------------- streaming replay gates
