@@ -202,9 +202,9 @@ def effective_cores(workers: int | None = None, unit: int = 4_000_000) -> tuple[
     return round(workers * solo / par, 1), workers
 
 
-def _warmup(spark, sf_dir: str) -> None:
+def warm_up(spark, sf_dir: str, fns: dict) -> None:
     """Measure steady state, not process startup: spawn the Python-UDF
-    workers, then run every headline query once against the smallest
+    workers, then run every query in ``fns`` once against the smallest
     scale factor — the generated code is identical across scale
     factors, so this pre-fills the Janino codegen cache (~6 s of
     first-run compilation per complex pipeline otherwise lands in the
@@ -223,14 +223,25 @@ def _warmup(spark, sf_dir: str) -> None:
         F.count(F.lit(1))
     ).collect()
     warm_dir = WARMUP_SF_DIR if os.path.isdir(WARMUP_SF_DIR) else sf_dir
-    fns = {n: QUERIES[n].fn for n in HEADLINE if n in QUERIES}
-    fns.update(BENCH_EXTRA)
     for fn in fns.values():
         try:
             fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
         except Exception:  # noqa: BLE001 - warmup must never fail the bench
             pass
-    _sentinel_time(spark)  # compile the sentinel's codegen once too
+
+
+def timed_sample(spark, fn, sf_dir: str) -> float:
+    """Wall seconds of one run of ``fn(spark, sf_dir)`` into the noop
+    sink. Queries are isolated first: persisted blocks left by the
+    previous run are dropped (otherwise storage-memory pressure
+    distorts later timings by 5-10x via spill + GC), and the collector
+    is nudged so orphaned localCheckpoint RDDs from iterative queries
+    are actually freed between attempts."""
+    spark.catalog.clearCache()
+    gc.collect()
+    t0 = time.time()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    return time.time() - t0
 
 
 def main() -> None:
@@ -238,22 +249,11 @@ def main() -> None:
     sf = sf_dir.rstrip("/").split("sf")[-1]
     cores, probe_workers = effective_cores()  # before the JVM: bare host
     spark = get_spark("bench")
-    _warmup(spark, sf_dir)
     fns = {n: QUERIES[n].fn for n in HEADLINE if n in QUERIES}
     fns.update(BENCH_EXTRA)
     names = list(fns)
-
-    def run_once(name: str) -> float:
-        # isolate queries: drop persisted blocks left by the previous
-        # run (otherwise storage-memory pressure distorts later
-        # timings by 5-10x via spill + GC), and nudge the collector so
-        # orphaned localCheckpoint RDDs from iterative queries are
-        # actually freed between attempts
-        spark.catalog.clearCache()
-        gc.collect()
-        t0 = time.time()
-        fns[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.time() - t0
+    warm_up(spark, sf_dir, fns)
+    _sentinel_time(spark)  # compile the sentinel's codegen once too
 
     # host-level CPU-steal spikes are bursty and MULTI-MINUTE (measured:
     # identical code benched 21.1 s and 29.2 s an hour apart). Sampling
@@ -271,13 +271,13 @@ def main() -> None:
     for _pass in range(3):
         for name in names:
             sentinels[name].append(_sentinel_time(spark))
-            samples[name].append(run_once(name))
+            samples[name].append(timed_sample(spark, fns[name], sf_dir))
     for name in names:
         while len(samples[name]) < 6 and (
             sorted(samples[name])[1] > 1.5 * sorted(samples[name])[0]
         ):
             sentinels[name].append(_sentinel_time(spark))
-            samples[name].append(run_once(name))
+            samples[name].append(timed_sample(spark, fns[name], sf_dir))
     timings = {n: round(min(samples[n]), 3) for n in names}
     # the sentinel reading adjacent to the sample that produced each
     # reported min — the number to normalize that row by

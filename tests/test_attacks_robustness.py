@@ -41,7 +41,7 @@ def test_gaussian_insertion_stats(spark, sf_dir):
     import numpy as np
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
-    out = attacks.gaussian_insertion(emb, 300, seed=7)
+    out = attacks.gaussian_insertion(emb, lambda _: 300, seed=7)
     assert out.count() == emb.count() + 300
     new_rows = out.filter(F.col("vec_id") >= 10_000_000).collect()
     X = np.array([r["embedding"] for r in new_rows])
@@ -49,6 +49,40 @@ def test_gaussian_insertion_stats(spark, sf_dir):
     # synthetic rows roughly match per-dim stats
     assert abs(X.mean() - base.mean()) < 0.05
     assert abs(X.std() - base.std()) < 0.1
+
+
+def test_adaptive_insertion_counts_null_and_empty_rows(spark):
+    """The insertion size comes from the stats aggregate's row count:
+    rows with a null or an empty embedding count towards it, and the
+    inserted rows keep the width of the non-empty ones."""
+    from vector_database_watermarking_spark import api
+
+    rows = [(i, [float(i), -float(i)]) for i in range(1, 8)]
+    rows += [(100, None), (101, []), (102, None)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    p = 0.25
+    out = api.adaptive_insertion(df, p, seed=7)
+    added = out.filter(F.col("vec_id") >= 10_000_000).collect()
+    assert len(added) == math.ceil(df.count() * p) == 3
+    assert all(len(r["embedding"]) == 2 for r in added)
+    assert out.count() == len(rows) + 3
+
+
+def test_adaptive_insertion_job_count(spark, sf_dir):
+    """Spark jobs of ``api.adaptive_insertion`` with its output forced
+    by an eager local checkpoint: the stats aggregate also yields the
+    row count, so no separate ``count()`` runs."""
+    from vector_database_watermarking_spark import api
+
+    sc = spark.sparkContext
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    group = "test-jobs-adaptive_insertion"
+    sc.setJobGroup(group, group)
+    try:
+        api.adaptive_insertion(emb, 0.3, seed=7).localCheckpoint(eager=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
 
 
 def test_hit_rate_and_missed_false(spark, sf_dir):

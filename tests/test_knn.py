@@ -1,4 +1,7 @@
+from contextlib import contextmanager
+
 import numpy as np
+import pytest
 
 from vector_database_watermarking_spark.operators import knn
 
@@ -61,21 +64,36 @@ def test_lsh_tier_recall(spark, sf_dir):
     exact = {
         (r["src"], r["dst"]) for r in knn.knn_edges(emb, k=5).collect()
     }
+    e = emb.select("vec_id", "embedding")
     approx = {
         (r["src"], r["dst"])
-        for r in knn.knn_edges(emb, k=5, exact=False).collect()
+        for r in knn.knn_join(e, e, 5, exact=False).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall > 0.5, recall
 
 
+@contextmanager
+def blocked_tier(base, n_blocks):
+    """Lower ``MAX_BROADCAST_ROWS`` to ``ceil(n / n_blocks)`` so the
+    exact top-k tiers split ``base`` into ``ceil(n / cap)`` blocks; a
+    base that would still fit one broadcast is refused, so a blocked
+    leg cannot run the broadcast tier."""
+    n = base.count()
+    cap = -(-n // n_blocks)
+    assert n > cap, f"{n} rows fit one broadcast under a cap of {cap}"
+    saved = knn.MAX_BROADCAST_ROWS
+    knn.MAX_BROADCAST_ROWS = cap
+    try:
+        yield
+    finally:
+        knn.MAX_BROADCAST_ROWS = saved
+
+
 def test_blocked_exact_knn_matches_broadcast(spark, sf_dir):
     """The blocked tier (base split into broadcastable chunks + merge)
     must produce bit-identical edges to the single-broadcast tier."""
-    from vector_database_watermarking_spark.operators.knn import (
-        _exact_knn_blocked,
-        _exact_knn_broadcast,
-    )
+    from vector_database_watermarking_spark.operators.knn import _exact_knn_broadcast
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
@@ -84,10 +102,11 @@ def test_blocked_exact_knn_matches_broadcast(spark, sf_dir):
         (r["src"], r["rank"], r["dst"], round(r["dist"], 9))
         for r in _exact_knn_broadcast(emb, emb, 5, True).collect()
     )
-    b = sorted(
-        (r["src"], r["rank"], r["dst"], round(r["dist"], 9))
-        for r in _exact_knn_blocked(emb, emb, 5, True, n_blocks=4).collect()
-    )
+    with blocked_tier(emb, 4):
+        b = sorted(
+            (r["src"], r["rank"], r["dst"], round(r["dist"], 9))
+            for r in knn.knn_join(emb, emb, 5, exact=True).collect()
+        )
     assert a == b
 
 
@@ -151,6 +170,62 @@ def test_cosine_topk_blocked_matches_broadcast(spark, sf_dir):
     assert a == b
 
 
+def test_sq_topk_blocked_matches_broadcast(spark, sf_dir):
+    """SQ's blocked tier (per-block integer top-``refine`` merged by
+    (dq, dst)) returns the broadcast tier's rows."""
+    from vector_database_watermarking_spark.operators.similarity import sq_topk
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+
+    def rows():
+        return sorted(
+            (r["src"], r["rank"], r["dst"], r["dist"].hex())
+            for r in sq_topk(emb, emb, 5).collect()
+        )
+
+    a = rows()
+    with blocked_tier(emb, 4):
+        b = rows()
+    assert a == b
+
+
+@pytest.mark.parametrize(
+    "call, expected",
+    [
+        ("knn_edges", 2),
+        ("knn_join", 2),
+        ("cosine_topk", 3),
+        ("sq_topk", 5),
+        ("pq_topk", 3),
+    ],
+)
+def test_top_k_job_counts(spark, sf_dir, call, expected):
+    """Spark jobs of one top-k call with its output forced by an eager
+    local checkpoint: the tier probe (SQ: its bounds+count aggregate
+    instead), any side collect, and the output's own jobs."""
+    from vector_database_watermarking_spark.operators import similarity
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    e = emb.select("vec_id", "embedding")
+    calls = {
+        "knn_edges": lambda: knn.knn_edges(emb, k=5),
+        "knn_join": lambda: knn.knn_join(e, e, 5, exact=True),
+        "cosine_topk": lambda: similarity.cosine_topk(e, e, 5),
+        "sq_topk": lambda: similarity.sq_topk(e, e, 5),
+        "pq_topk": lambda: similarity.pq_topk(e, e, 5),
+    }
+    sc = spark.sparkContext
+    group = f"test-jobs-{call}"
+    sc.setJobGroup(group, group)
+    try:
+        calls[call]().localCheckpoint(eager=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == expected
+
+
 def test_lsh_dense_cluster_queries_still_get_candidates(spark):
     """Hot-bucket capping must down-sample dense clusters, not blind
     them: queries inside a duplicate cluster still find neighbors."""
@@ -209,17 +284,15 @@ def _kernel(q_ids, Q, b_ids, B, k, exclude_self=True):
     )
 
 
-def _tier_edges(tier, queries, base, k, exclude_self=True):
+def _tier_edges(tier, queries, base, k, exclude_self=True, n_blocks=3):
     """(src, rank, dst, dist.hex()) from one exact Spark tier."""
-    from vector_database_watermarking_spark.operators.knn import _exact_knn_blocked
-
     if tier == "broadcast":
         df = knn.knn_join(queries, base, k=k, exact=True, exclude_self=exclude_self)
-    else:
-        df = _exact_knn_blocked(queries, base, k, exclude_self, n_blocks=3)
-    return sorted(
-        (r["src"], r["rank"], r["dst"], r["dist"].hex()) for r in df.collect()
-    )
+        return sorted(
+            (r["src"], r["rank"], r["dst"], r["dist"].hex()) for r in df.collect()
+        )
+    with blocked_tier(base, n_blocks):
+        return _tier_edges("broadcast", queries, base, k, exclude_self)
 
 
 def _ref_sqrt(ref):
@@ -294,8 +367,8 @@ def test_kernel_adversarial_property():
 
 def test_kernel_adversarial_spark_tiers(spark):
     """The adversarial collections through both Spark tiers (64 rows,
-    d=8; the Gaussian one at k ≥ n), plus a one-row base and absent
-    queries."""
+    d=8; the Gaussian one at k ≥ n), plus absent queries, a one-row
+    base (broadcast) and a blocked base with an empty block."""
     rng = np.random.default_rng(11)
     schema = "vec_id long, embedding array<double>"
     ids = np.arange(64)
@@ -310,8 +383,14 @@ def test_kernel_adversarial_spark_tiers(spark):
     absent = spark.createDataFrame([(500 + i, X[i].tolist()) for i in range(3)], schema)
     for queries, q_ids in ((base, [0]), (absent, [500, 501, 502])):
         want = _ref_sqrt(fold_reference(q_ids, X[: len(q_ids)], [0], X[:1], 5))
+        assert _tier_edges("broadcast", queries, base, 5) == want, q_ids
+    # ids 0 and 2 both fall in pmod class 0 of 2 blocks: block 1 is empty
+    pair = spark.createDataFrame([(0, X[0].tolist()), (2, X[1].tolist())], schema)
+    for queries, q_ids in ((pair, [0, 2]), (absent, [500, 501, 502])):
+        want = _ref_sqrt(fold_reference(q_ids, X[: len(q_ids)], [0, 2], X[:2], 5))
         for tier in ("broadcast", "blocked"):
-            assert _tier_edges(tier, queries, base, 5) == want, (q_ids, tier)
+            got = _tier_edges(tier, queries, pair, 5, n_blocks=2)
+            assert got == want, (q_ids, tier)
 
 
 def test_kernel_nan_embedding_has_no_edges(spark):
@@ -405,3 +484,71 @@ def test_lsh_candidate_budget_guard(spark):
         knn.knn_join(base, base, k=2, exact=False, candidate_budget=10)
     out = knn.knn_join(base, base, k=2, exact=False, candidate_budget=None)
     assert out.count() > 0
+
+
+def _half_micro_coords(k):
+    """float32 coordinates whose fold from the origin lands exactly on
+    a half-micro boundary: ``dist_sq · 1e6 == k + 0.5`` in float64.
+    Greedy: the largest float32 below √t, then float32 square roots of
+    what is left (2-3 coordinates; float32 squares are exact in
+    float64, so only the fold's additions round)."""
+    t = (k + 0.5) / 1e6
+    a1 = np.float32(np.sqrt(t))
+    for _ in range(64):
+        rest = t - float(a1) ** 2
+        if rest > 0:
+            c = [a1, np.float32(np.sqrt(rest))]
+            for coords in (c, c + [np.float32(np.sqrt(max(t - _fold(c), 0.0)))]):
+                if _fold(coords) * 1e6 == k + 0.5:
+                    return coords
+        a1 = np.nextafter(a1, np.float32(0))
+    raise AssertionError(f"no float32 construction for k={k}")
+
+
+def _fold(coords):
+    acc = 0.0
+    for v in coords:
+        acc += float(v) * float(v)
+    return acc
+
+
+def test_knn_edges_match_duckdb_on_rounding_boundary(spark):
+    """The rounding contract, engine vs DuckDB oracle (``_knn_cte``).
+    From the origin (row 0), row 1 lies exactly on the boundary
+    2.5e-6 and row 2 (higher dst) just under it. Half-even rounding
+    ties both at 2e-6, so row 0's nearest neighbour is row 1 on both
+    sides; DuckDB's ``round(x, 6)`` would lift row 1 to 3e-6 and pick
+    row 2."""
+    import duckdb
+    import pyarrow as pa
+
+    from vector_database_watermarking_spark.registry import D, _knn_cte
+
+    on = _half_micro_coords(2)
+    under = [np.nextafter(on[0], np.float32(0)), *on[1:]]
+    assert _fold(on) * 1e6 == 2.5 and 2.0 < _fold(under) * 1e6 < 2.5
+    X = np.zeros((3, D), dtype=np.float32)
+    X[1, : len(on)] = on
+    X[2, : len(under)] = under
+    emb = spark.createDataFrame(
+        [(i, X[i].tolist()) for i in range(3)], "vec_id long, embedding array<float>"
+    )
+    engine = sorted(
+        (r["src"], r["dst"], r["rank"]) for r in knn.knn_edges(emb, k=1).collect()
+    )
+    con = duckdb.connect()
+    con.register(
+        "embeddings",
+        pa.table(
+            {
+                "vec_id": pa.array(range(3), pa.int64()),
+                "embedding": pa.array(X.tolist(), pa.list_(pa.float32())),
+            }
+        ),
+    )
+    oracle = sorted(
+        con.execute(_knn_cte(1) + "SELECT src, dst, rank FROM edges").fetchall()
+    )
+    con.close()
+    assert (0, 1, 1) in engine
+    assert engine == oracle

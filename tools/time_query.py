@@ -10,10 +10,8 @@ not pay the full 40-query bench to measure.
 
 from __future__ import annotations
 
-import gc
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -30,42 +28,19 @@ def main() -> int:
         args = args[:i] + args[i + 2 :]
     names = args
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    warm_dir = "/root/testdata/sf0.001"
     spark = get_spark("time_query")
 
     import bench
 
     fns = {n: QUERIES[n].fn for n in QUERIES}
     fns.update(bench.BENCH_EXTRA)
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    def _noopf(batches):
-        for _ in batches:
-            yield pd.DataFrame({"x": [1]})
-
-    spark.range(64).repartition(32).mapInPandas(_noopf, "x long").write.format(
-        "noop"
-    ).mode("overwrite").save()
-    spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).agg(
-        F.count(F.lit(1))
-    ).collect()
-    for name in names:
-        try:
-            fns[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
-        except Exception:  # noqa: BLE001
-            pass
+    bench.warm_up(spark, sf_dir, {n: fns[n] for n in names})
 
     for name in names:
         samples = []
         for _ in range(reps):
-            spark.catalog.clearCache()
-            gc.collect()
             spark.sparkContext.setJobDescription(name)
-            t0 = time.time()
-            fns[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
+            samples.append(bench.timed_sample(spark, fns[name], sf_dir))
             spark.sparkContext.setJobDescription(None)
         print(
             f"{name}: min={min(samples):.3f}s samples="

@@ -110,10 +110,10 @@ def random_modify(data: DataFrame, p: float, seed: int = 42) -> DataFrame:
 
 
 def adaptive_insertion(data: DataFrame, p: float, seed: int = 42) -> DataFrame:
-    """P14+SO2 (``roubust/roubust.py:185-208``)."""
-    n = data.count()
+    """P14+SO2 (``roubust/roubust.py:185-208``): insert ``ceil(n·p)``
+    rows."""
     return attacks.gaussian_insertion(
-        data.select("vec_id", "embedding"), int(math.ceil(n * p)), seed=seed
+        data.select("vec_id", "embedding"), lambda n: math.ceil(n * p), seed=seed
     )
 
 

@@ -139,11 +139,9 @@ def _apply_attack(
     if attack == "adaptive_modify":
         return attacks.adaptive_modify(wm_df, ai, p, seed=seed)
     if attack == "insertion":
-        n = wm_df.count()
-        inserted = attacks.gaussian_insertion(
-            wm_df.select("vec_id", "embedding"), int(n * p), seed=seed
+        return attacks.gaussian_insertion(
+            wm_df.select("vec_id", "embedding"), lambda n: int(n * p), seed=seed
         )
-        return inserted
     raise ValueError(f"unknown attack {attack}")
 
 

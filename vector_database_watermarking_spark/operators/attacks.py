@@ -249,30 +249,41 @@ def adaptive_modify(
 
 
 def gaussian_insertion(
-    emb: DataFrame, num_to_insert: int, seed: int = 42, id_offset: int = 10_000_000
+    emb: DataFrame,
+    count: Callable[[int], int],
+    seed: int = 42,
+    id_offset: int = 10_000_000,
 ) -> DataFrame:
     """P14+SO2 insertion attack (``generate_vector`` +
     ``adaptive_insertion``, ``roubust/roubust.py:185-208``): append
-    synthetic rows drawn ~ N(col_mean, col_std) per dimension.
+    ``count(n)`` synthetic rows (``n`` the row count; a fixed-size
+    caller ignores it) drawn ~ N(col_mean, col_std) per dimension.
 
-    Per-dim stats come from one posexplode aggregation; the synthetic
-    rows are built natively — ``transform`` over the dim sequence with
+    Per-dim stats and ``n`` come from one ``posexplode_outer``
+    aggregation (null or empty embeddings land in the ``dim IS NULL``
+    group, which counts towards ``n`` only); the synthetic rows are
+    built natively — ``transform`` over the dim sequence with
     Box-Muller gaussians from keyed hashes. New rows get ids above
     ``id_offset`` (the reference loses identity; we keep it explicit).
     """
     stats = (
-        emb.select(F.posexplode("embedding").alias("dim", "v"))
+        emb.select(F.posexplode_outer("embedding").alias("dim", "v"))
         .groupBy("dim")
-        .agg(F.avg("v").alias("mean"), F.stddev_pop("v").alias("std"))
-        .orderBy("dim")
+        .agg(
+            F.avg("v").alias("mean"), F.stddev_pop("v").alias("std"), F.count("*").alias("n")
+        )
+        .orderBy("dim")  # nulls first
         .collect()
     )
+    # a row has one dim 0, or is in the null group
+    n = sum(r["n"] for r in stats if r["dim"] in (None, 0))
+    stats = [r for r in stats if r["dim"] is not None]
     d = len(stats)
     means = F.array(*[F.lit(float(r["mean"])) for r in stats])
     stds = F.array(*[F.lit(float(r["std"])) for r in stats])
 
     spark = emb.sparkSession
-    new_rows = spark.range(num_to_insert).select(
+    new_rows = spark.range(count(n)).select(
         (F.col("id") + F.lit(id_offset)).alias("vec_id")
     )
 

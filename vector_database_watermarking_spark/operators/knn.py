@@ -8,9 +8,14 @@ construction-order dependent; per SURVEY §4.1 the engine's reference
 semantics is the **exact kNN graph** (deterministic, oracle-checkable),
 with an LSH tier for scale.
 
-Scale notes (100 TB): the exact tier is a blocked cross join — O(n²)
-distance evaluations, correct up to ~1e5 rows per side; at cluster
-scale use ``knn_join(..., exact=False)`` which buckets with
+Tiers: :func:`broadcast_or_blocks` decides broadcast-or-blocks for
+the whole exact top-k family (``knn_join``, ``similarity.cosine_topk``,
+``sq_topk``, ``pq_topk``); ``knn_join`` runs it up to
+``MAX_EXACT_BASE_ROWS`` base rows and the LSH tier past it, and
+``knn_edges`` is its self-join.
+
+Scale notes (100 TB): the exact tiers are O(n²) distance evaluations,
+correct up to ~1e6 rows per side; past that ``knn_join`` buckets with
 ``BucketedRandomProjectionLSH`` so only same/adjacent-bucket pairs are
 compared (candidate generation is an equi-join on bucket id — a plain
 shuffle join Catalyst can plan, with AQE skew splitting for hot
@@ -22,7 +27,10 @@ candidates, not all pairs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import functools
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.distance import squared_euclidean
@@ -35,13 +43,32 @@ from ..functions.hashing import hash60
 _RANK_DECIMALS = 6
 
 
+def rank_key(col: str) -> Column:
+    """``col`` rounded to ``_RANK_DECIMALS`` as ``np.round`` rounds it
+    (binary multiply, half-even ``rint``, divide), so a block merge
+    orders exactly like the block kernels. ``F.round`` rounds the
+    decimal expansion half-up and splits boundary ties differently."""
+    scale = 10.0**_RANK_DECIMALS
+    return F.rint(F.col(col) * scale) / scale
+
+
+def merge_top_k(union: DataFrame, k: int, key: Column, value: Column | str) -> DataFrame:
+    """Per-``src`` top-``k`` of the blocks' local top-ks by ``(key,
+    dst)``: ``(src, dst, value, rank)``."""
+    w = Window.partitionBy("src").orderBy(key, F.col("dst").asc())
+    return (
+        union.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("src", "dst", value, F.col("rank").cast("int").alias("rank"))
+    )
+
+
 def knn_join(
     queries: DataFrame,
     base: DataFrame,
     k: int,
-    exact: bool = True,
+    exact: bool | None = None,
     exclude_self: bool = True,
-    bucket_length: float | None = None,
     num_hash_tables: int = 10,
     candidate_budget: int | None = 100_000_000,
 ) -> DataFrame:
@@ -51,9 +78,14 @@ def knn_join(
     ``(src, dst, dist, rank)`` with ``rank`` 1-based by ascending
     euclidean distance (ties by ``dst``). ``src`` is the query's id.
 
-    Exact tier: the base is broadcast to every task and each Arrow
-    batch of queries (``mapInPandas``) emits only its top-k, so the
-    O(n²) pair relation is never materialized or shuffled. One
+    ``exact=None`` (default) runs the exact tier up to
+    ``MAX_EXACT_BASE_ROWS`` base rows and LSH beyond, so one call site
+    survives a 100× scale-up; ``True``/``False`` pin a tier.
+
+    Exact tier (:func:`broadcast_or_blocks`): the base, or one block of
+    it, is broadcast to every task and each Arrow batch of queries
+    (``mapInPandas``) emits only its top-k, so the O(n²) pair relation
+    is never materialized or shuffled. One
     filter-and-refine kernel (:func:`_topk_chunk`) shortlists each
     row's top k by BLAS Gram distances with a derived error bound and
     recomputes only the shortlist as the sequential float64 fold over
@@ -105,8 +137,22 @@ def knn_join(
     regime this tier exists for — collapse to few representatives and
     pass the same budget easily.
     """
-    if exact:
-        return exact_knn(queries, base, k, exclude_self)
+    if exact is not False:
+
+        def block(part: DataFrame, rows: list | None, blocked: bool) -> DataFrame:
+            return _exact_knn_broadcast(
+                queries, part, k, exclude_self, emit_dist_sq=blocked, pre_rows=rows
+            )
+
+        def merge(union: DataFrame) -> DataFrame:
+            dist = F.sqrt("dist_sq").alias("dist")
+            return merge_top_k(union, k, rank_key("dist_sq").asc(), dist)
+
+        out = broadcast_or_blocks(
+            base, block, merge, max_rows=None if exact else MAX_EXACT_BASE_ROWS
+        )
+        if out is not None:
+            return out
 
     from pyspark.ml.functions import vector_to_array
 
@@ -118,7 +164,7 @@ def knn_join(
     n_proj = num_hash_tables * rows_per_band
     qv = _with_features(q, "q_emb")
     bv = _with_features(b, "b_emb")
-    model = _fit_lsh(bv, bucket_length, n_proj)
+    model = _fit_lsh(bv, n_proj)
 
     def hashed(df: DataFrame) -> DataFrame:
         buckets = [
@@ -227,72 +273,48 @@ def probe_collect(base: DataFrame) -> list | None:
 
 def split_blocks(base: DataFrame, n_blocks: int) -> list[DataFrame]:
     """Hash-split a (vec_id, ...) relation into ``n_blocks`` disjoint
-    slices — shared by the blocked exact tiers (euclidean + cosine) so
-    both bound driver memory by one block."""
+    slices, so a blocked tier bounds driver memory by one block."""
     block_col = F.pmod(F.col("vec_id"), F.lit(n_blocks))
     return [base.filter(block_col == b) for b in range(n_blocks)]
 
 
-def exact_knn(
-    queries: DataFrame,
+def broadcast_or_blocks(
     base: DataFrame,
-    k: int,
-    exclude_self: bool = True,
-    n_base: int | None = None,
-) -> DataFrame:
-    """Exact kNN with automatic tier choice: single broadcast of the
-    base when it fits (``MAX_BROADCAST_ROWS``), otherwise the base is
-    split into broadcastable blocks, each block contributes a local
-    top-k, and a final per-query window merges them — identical output
-    (the global top-k is a subset of the union of block top-ks), driver
-    memory bounded by one block.
+    block: Callable[[DataFrame, list | None, bool], DataFrame],
+    merge: Callable[[DataFrame], DataFrame] = lambda union: union,
+    n: int | None = None,
+    max_rows: int | None = None,
+) -> DataFrame | None:
+    """The one tier decision of the exact top-k family (``knn_join``,
+    ``similarity.cosine_topk``, ``sq_topk``, ``pq_topk``).
+
+    Broadcast tier, while the base fits ``MAX_BROADCAST_ROWS``:
+    ``block(base, rows, False)``, with ``base`` itself (a ``queries is
+    base`` self-join stays recognisable) and the ``(vec_id, embedding)``
+    rows :func:`probe_collect` collected. A caller that knows the row
+    count passes ``n``: no probe runs and ``rows`` is ``None``.
+
+    Blocked tier: the base is counted once, hash-split into
+    ``ceil(n / MAX_BROADCAST_ROWS)`` blocks, and ``merge`` gets the
+    union of ``block(part, None, True)``. The global top-k is a subset
+    of that union, so a merge ranking by the kernel's own key
+    (:func:`rank_key`) returns the broadcast tier's rows.
+
+    Returns ``None`` past ``max_rows`` base rows (the caller's scale
+    tier).
     """
-    if n_base is None:
+    if n is None:
         rows = probe_collect(base.select("vec_id", "embedding"))
         if rows is not None:
-            return _exact_knn_broadcast(queries, base, k, exclude_self, pre_rows=rows)
-        n_base = base.count()
-    if n_base <= MAX_BROADCAST_ROWS:
-        return _exact_knn_broadcast(queries, base, k, exclude_self)
-    n_blocks = -(-n_base // MAX_BROADCAST_ROWS)
-    return _exact_knn_blocked(queries, base, k, exclude_self, n_blocks)
-
-
-def _exact_knn_blocked(
-    queries: DataFrame,
-    base: DataFrame,
-    k: int,
-    exclude_self: bool,
-    n_blocks: int,
-) -> DataFrame:
-    """Blocked exact kNN: hash-split the base, per-block broadcast
-    top-k, then a global merge ranked by the same
-    ``(round(dist_sq, 6), dst)`` key so results are bit-identical to
-    the single-broadcast tier. The key repeats ``np.round``'s
-    arithmetic (binary multiply, half-even ``rint``, divide):
-    ``F.round`` rounds the decimal expansion half-up, which splits
-    boundary ties differently."""
-    blocks = [
-        _exact_knn_broadcast(queries, block, k, exclude_self, emit_dist_sq=True)
-        for block in split_blocks(base, n_blocks)
-    ]
-    union = blocks[0]
-    for df in blocks[1:]:
-        union = union.unionByName(df)
-    scale = 10.0**_RANK_DECIMALS
-    w = Window.partitionBy("src").orderBy(
-        (F.rint(F.col("dist_sq") * scale) / scale).asc(), F.col("dst").asc()
-    )
-    return (
-        union.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "src",
-            "dst",
-            F.sqrt("dist_sq").alias("dist"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+            return block(base, rows, False)
+        n = base.count()
+    if max_rows is not None and n > max_rows:
+        return None
+    if n <= MAX_BROADCAST_ROWS:
+        return block(base, None, False)
+    n_blocks = -(-n // MAX_BROADCAST_ROWS)
+    parts = [block(part, None, True) for part in split_blocks(base, n_blocks)]
+    return merge(functools.reduce(DataFrame.unionByName, parts))
 
 
 def _exact_knn_broadcast(
@@ -307,8 +329,9 @@ def _exact_knn_broadcast(
     of queries runs :func:`_topk_chunk` against the broadcast base.
 
     Scale notes: correct while the base side fits in a broadcast
-    (~1e6 × d floats); ``exact_knn`` falls back to the blocked tier
-    beyond that, and approximate workloads go through the LSH tier.
+    (~1e6 × d floats); :func:`broadcast_or_blocks` falls back to the
+    blocked tier beyond that, and approximate workloads go through the
+    LSH tier.
     The query side is repartitioned so a single-file scan still uses
     every core. A self-join (``queries is base``, as in ``knn_edges``)
     neither rescans nor shuffles it: task p of a ``range`` takes slice
@@ -456,38 +479,29 @@ def _with_features(df: DataFrame, emb_col: str) -> DataFrame:
     )
 
 
-def _fit_lsh(bv: DataFrame, bucket_length: float | None, n_proj: int):
+def _fit_lsh(bv: DataFrame, n_proj: int):
     """Fit the random-hyperplane model (public MLlib
     ``BucketedRandomProjectionLSH``) over a base with a ``features``
     vector column.
 
-    ``bucket_length=None`` sizes buckets from the data:
-    ``2 · median_norm / √d`` ≈ two standard deviations of a single
-    random projection. A fixed length mis-sized for the data collapses
-    every vector into one bucket (candidate explosion) or shatters
-    true neighbors apart — note that since bands AND two projections
-    together, a fixed ``bucket_length`` tuned for a single-hash OR
-    scheme must be retuned (per-band collision is p² here, not p).
+    Buckets are sized from the data: ``2 · median_norm / √d`` ≈ two
+    standard deviations of a single random projection. A fixed length
+    mis-sized for the data collapses every vector into one bucket
+    (candidate explosion — measured at 50k rows) or shatters true
+    neighbors apart.
     """
     from pyspark.ml.feature import BucketedRandomProjectionLSH
 
     from ..functions.distance import norm
 
-    if bucket_length is None:
-        # a single random projection of x has std ≈ |x|/√d; size the
-        # bucket to a couple of projection-stds so buckets discriminate
-        # (a fixed large length collapses everything into bucket 0 →
-        # O(n²) candidates; measured at 50k rows)
-        row0 = bv.select(
-            F.percentile_approx(norm("b_emb"), 0.5).alias("m"),
-            F.max(F.size("b_emb")).alias("d"),
-        ).head()
-        if row0 is None or row0["m"] is None:  # empty base
-            bucket_length = 1.0
-        else:
-            bucket_length = max(
-                2.0 * float(row0["m"]) / (float(row0["d"]) ** 0.5), 1e-6
-            )
+    row0 = bv.select(
+        F.percentile_approx(norm("b_emb"), 0.5).alias("m"),
+        F.max(F.size("b_emb")).alias("d"),
+    ).head()
+    if row0 is None or row0["m"] is None:  # empty base
+        bucket_length = 1.0
+    else:
+        bucket_length = max(2.0 * float(row0["m"]) / (float(row0["d"]) ** 0.5), 1e-6)
     lsh = BucketedRandomProjectionLSH(
         inputCol="features",
         outputCol="hashes",
@@ -606,26 +620,12 @@ def _lsh_candidates(
     ).join(b.select("dst", "b_emb"), on="dst")
 
 
-def knn_edges(emb: DataFrame, k: int, exact: bool | None = None) -> DataFrame:
+def knn_edges(emb: DataFrame, k: int) -> DataFrame:
     """The kNN-edges table standing in for the HNSW level-0 graph
-    (SURVEY §1: ``-1`` slot padding disappears — F1 is a no-op).
-
-    ``exact=None`` (default) picks the tier from the collection size:
-    exact (broadcast or blocked) up to ``MAX_EXACT_BASE_ROWS``, LSH
-    beyond — so the same call site is correct at fixture scale and
-    survives a 100× scale-up without a driver-bound O(n²) plan. Pass
-    ``exact=True``/``False`` to pin a tier.
-    """
+    (SURVEY §1: ``-1`` slot padding disappears — F1 is a no-op): the
+    self-join ``knn_join(e, e, k)`` with its automatic tier choice."""
     e = emb.select("vec_id", "embedding")
-    if exact is None:
-        rows = probe_collect(e)
-        if rows is not None:
-            return _exact_knn_broadcast(e, e, k, exclude_self=True, pre_rows=rows)
-        n = e.count()
-        if n <= MAX_EXACT_BASE_ROWS:
-            return exact_knn(e, e, k, exclude_self=True, n_base=n)
-        exact = False
-    return knn_join(e, e, k=k, exact=exact, exclude_self=True)
+    return knn_join(e, e, k)
 
 
 def query_counts(edges: DataFrame, emb: DataFrame) -> DataFrame:

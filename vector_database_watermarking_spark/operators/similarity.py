@@ -12,6 +12,8 @@ never materializes. Centroids come from MLlib KMeans (seeded).
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -27,49 +29,24 @@ def cosine_topk(
     base: DataFrame,
     k: int,
     exclude_self: bool = True,
-    n_base: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k: (src, dst, cos_sim, rank), rank 1-based by
     descending similarity, ties by dst.
 
-    Same tier dispatch as ``knn.exact_knn``: one broadcast of the base
+    Tiers from ``knn.broadcast_or_blocks``: one broadcast of the base
     while it fits (``knn.MAX_BROADCAST_ROWS``), otherwise hash-split
     blocks each contribute a local top-k and a per-query window merges
-    them — no unconditional whole-base driver collect anywhere.
+    them by ``knn.rank_key`` — the block kernel's own ``np.round`` key,
+    so both tiers return the same rows.
     """
-    from .knn import MAX_BROADCAST_ROWS, probe_collect, split_blocks
+    from .knn import broadcast_or_blocks, merge_top_k, rank_key
 
-    if n_base is None:
-        rows = probe_collect(base.select("vec_id", "embedding"))
-        if rows is not None:
-            return _cosine_topk_broadcast(
-                queries, base, k, exclude_self, pre_rows=rows
-            )
-        n_base = base.count()
-    if n_base <= MAX_BROADCAST_ROWS:
-        return _cosine_topk_broadcast(queries, base, k, exclude_self)
-    n_blocks = -(-n_base // MAX_BROADCAST_ROWS)
-    blocks = [
-        _cosine_topk_broadcast(queries, block, k, exclude_self)
-        for block in split_blocks(base, n_blocks)
-    ]
-    union = blocks[0]
-    for df in blocks[1:]:
-        union = union.unionByName(df)
-    # NOTE (review round 12, accepted nuance): block-local selection
-    # keys on np.round (binary half-even) while this merge keys on
-    # F.round (HALF_UP on the shortest decimal repr). The modes differ
-    # only for a cosine landing exactly on a half-micro boundary — a
-    # measure-zero set the pinned blocked==broadcast equality tests
-    # have never hit; unifying would change tie behavior in BOTH tiers
-    # for no observable gain, so the mix is documented instead.
-    w = Window.partitionBy("src").orderBy(
-        F.round(F.col("cos_sim"), _RANK_DECIMALS).desc(), F.col("dst").asc()
-    )
-    return (
-        union.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("src", "dst", "cos_sim", F.col("rank").cast("int").alias("rank"))
+    return broadcast_or_blocks(
+        base,
+        lambda part, rows, _: _cosine_topk_broadcast(
+            queries, part, k, exclude_self, pre_rows=rows
+        ),
+        lambda union: merge_top_k(union, k, rank_key("cos_sim").desc(), "cos_sim"),
     )
 
 
@@ -362,13 +339,13 @@ def emb_near_dups_lsh(
             "unclustered/iid embeddings at this n saturate the "
             "buckets). Widen the bands (band_bits=None auto-derives "
             "log2(n)−8), or use the exact tiers "
-            "(cosine_near_dups / knn_join(exact=True)) for this "
+            "(cosine_near_dups / knn.knn_join) for this "
             "regime; pair_budget=None overrides."
         )
 
     if n_base <= MAX_BROADCAST_ROWS:
         # Broadcast bucket-local tier: while the base fits the same
-        # dispatch constant as ``exact_knn``, the banded self-join is
+        # broadcast cap as the exact top-k tiers, the banded self-join is
         # pure overhead — it shuffles ~n²·n_bands·2^-band_bits skinny
         # rows only to look every one of them up in the broadcast
         # matrix anyway. Instead the distributed relation is the BUCKET
@@ -835,7 +812,6 @@ def sq_topk(
     k: int = 5,
     refine: int = 20,
     exclude_self: bool = True,
-    n_base: int | None = None,
 ) -> DataFrame:
     """SQ-accelerated top-k: rank candidates by INTEGER squared
     distance between uint8 codes (global-bounds scalar quantization),
@@ -858,27 +834,27 @@ def sq_topk(
     deterministic pure arithmetic, so the DuckDB oracle replays the
     whole path bit-for-bit.
     """
-    from .knn import MAX_BROADCAST_ROWS, split_blocks
+    from .knn import broadcast_or_blocks
 
-    # bounds + count in ONE aggregation job — the hot path scans the
-    # base once here and once in the candidate stage, not three times
+    # bounds + count in ONE aggregation job — it stands in for the tier
+    # probe, so the hot path scans the base once here and once in the
+    # candidate stage, not three times
     lo, hi, cnt = sq_bounds(base, with_count=True)
-    if n_base is None:
-        n_base = cnt
-    cap = MAX_BROADCAST_ROWS
-    if n_base <= cap:
-        cands = _sq_candidates_broadcast(queries, base, lo, hi, refine, exclude_self)
-    else:
-        n_blocks = -(-n_base // cap)
-        parts = [
-            _sq_candidates_broadcast(queries, blk, lo, hi, refine, exclude_self)
-            for blk in split_blocks(base, n_blocks)
-        ]
-        cands = parts[0]
-        for df in parts[1:]:
-            cands = cands.unionByName(df)
-    # global top-`refine` by the integer candidate metric, then rank
-    # the survivors by exact distance — both windows deterministic
+    cands = broadcast_or_blocks(
+        base,
+        lambda part, _rows, _: _sq_candidates_broadcast(
+            queries, part, lo, hi, refine, exclude_self
+        ),
+        n=cnt,
+    )
+    return _rerank(cands, refine, k)
+
+
+def _rerank(cands: DataFrame, refine: int, k: int) -> DataFrame:
+    """The SQ and PQ merge, the same in both tiers: the global
+    top-``refine`` candidates by the integer metric ``(dq, dst)``, then
+    the top ``k`` of those by exact distance — both windows
+    deterministic."""
     w_dq = Window.partitionBy("src").orderBy("dq", "dst")
     w_ex = Window.partitionBy("src").orderBy(
         F.round(F.col("dist"), _RANK_DECIMALS), F.col("dst")
@@ -1077,7 +1053,6 @@ def pq_topk(
     m: int = 8,
     nbits: int = 4,
     exclude_self: bool = True,
-    n_base: int | None = None,
 ) -> DataFrame:
     """Product-quantization ANN: each base vector is stored as ``m``
     sub-codes of ``nbits`` (argmin centroid per subspace), queries scan
@@ -1102,7 +1077,8 @@ def pq_topk(
     global (dq, dst) merge past it — block-count invariant, never a
     whole-base collect.
     """
-    from .knn import MAX_BROADCAST_ROWS, probe_collect, split_blocks
+    from ..functions.hashing import hash60
+    from .knn import broadcast_or_blocks
 
     ksub = 2**nbits
     if ksub > 256:
@@ -1114,20 +1090,11 @@ def pq_topk(
             f"nbits={nbits} gives {ksub} sub-centroids, past the uint8 "
             "code range (max nbits=8)"
         )
-    cap = MAX_BROADCAST_ROWS
-    pre = None
-    if n_base is None:
-        pre = probe_collect(base.select("vec_id", "embedding"))
-        n_base = len(pre) if pre is not None else cap + 1
-    if n_base <= MAX_BROADCAST_ROWS and pre is not None:
-        cands = _pq_candidates_broadcast(
-            queries, base, None, m, ksub, refine, exclude_self, pre_rows=pre
-        )
-    else:
-        # global codebook first (ksub rows via a TakeOrdered — tiny),
-        # then per-block candidate scans that share it
-        from ..functions.hashing import hash60
 
+    @functools.cache
+    def global_codebook() -> "np.ndarray":
+        # blocks share one codebook over the whole base: ksub rows via
+        # a TakeOrdered — tiny — computed once, before the first block
         key = hash60(F.concat(F.lit("pq_"), F.col("vec_id").cast("string")))
         cent_rows = (
             base.select("vec_id", "embedding")
@@ -1136,33 +1103,22 @@ def pq_topk(
             .limit(ksub)
             .collect()
         )
-        cents = np.array([r["embedding"] for r in cent_rows], dtype=np.float64)
-        if n_base <= cap:
-            cands = _pq_candidates_broadcast(
-                queries, base, cents, m, ksub, refine, exclude_self
-            )
-        else:
-            n_blocks = -(-n_base // cap)
-            parts = [
-                _pq_candidates_broadcast(
-                    queries, blk, cents, m, ksub, refine, exclude_self
-                )
-                for blk in split_blocks(base, n_blocks)
-            ]
-            cands = parts[0]
-            for df in parts[1:]:
-                cands = cands.unionByName(df)
-    w_dq = Window.partitionBy("src").orderBy("dq", "dst")
-    w_ex = Window.partitionBy("src").orderBy(
-        F.round(F.col("dist"), _RANK_DECIMALS), F.col("dst")
+        return np.array([r["embedding"] for r in cent_rows], dtype=np.float64)
+
+    cands = broadcast_or_blocks(
+        base,
+        lambda part, rows, blocked: _pq_candidates_broadcast(
+            queries,
+            part,
+            global_codebook() if blocked else None,
+            m,
+            ksub,
+            refine,
+            exclude_self,
+            pre_rows=rows,
+        ),
     )
-    return (
-        cands.withColumn("crank", F.row_number().over(w_dq))
-        .filter(F.col("crank") <= refine)
-        .withColumn("rank", F.row_number().over(w_ex))
-        .filter(F.col("rank") <= k)
-        .select("src", "dst", "dist", F.col("rank").cast("int").alias("rank"))
-    )
+    return _rerank(cands, refine, k)
 
 
 def _pq_candidates_broadcast(

@@ -73,7 +73,8 @@ _ID = oracle_content_id("embedding", DIMS)
 def _knn_cte(k: int = K) -> str:
     """DuckDB CTE computing the exact kNN edges exactly like
     ``operators.knn.knn_join``: per-pair squared distance accumulated
-    left-to-right in float64, ranked by (round(dist_sq,6), dst)."""
+    left-to-right in float64, ranked by (dist_sq rounded as ``np.round``
+    does: half-even on the binary ``dist_sq · 1e6``, dst)."""
     return f"""
 WITH pairs AS (
   SELECT a.vec_id AS src, b.vec_id AS dst,
@@ -85,7 +86,8 @@ WITH pairs AS (
 ),
 edges AS (
   SELECT src, dst, dist_sq,
-         row_number() OVER (PARTITION BY src ORDER BY round(dist_sq, 6), dst) AS rank
+         row_number() OVER (PARTITION BY src
+           ORDER BY round_even(dist_sq * CAST(1000000.0 AS DOUBLE), 0), dst) AS rank
   FROM pairs
   QUALIFY rank <= {k}
 )

@@ -1475,7 +1475,7 @@ h10 AS (
 edges12 AS (
   SELECT src, dst FROM (
     SELECT src, dst, dist_sq,
-           row_number() OVER (PARTITION BY src ORDER BY round(dist_sq, 6), dst) AS rank
+           row_number() OVER (PARTITION BY src ORDER BY round_even(dist_sq * CAST(1000000.0 AS DOUBLE), 0), dst) AS rank
     FROM pairs
   ) WHERE rank <= {K + 2}
 ),

@@ -50,7 +50,7 @@ pairs_b AS (
 ),
 edges_b AS (
   SELECT src, dst FROM (
-    SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY round(dist_sq, 6), dst) AS rank
+    SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY round_even(dist_sq * CAST(1000000.0 AS DOUBLE), 0), dst) AS rank
     FROM pairs_b) WHERE rank <= {K}
 ),
 pairs_a AS (
@@ -62,7 +62,7 @@ pairs_a AS (
 ),
 edges_a AS (
   SELECT src, dst FROM (
-    SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY round(dist_sq, 6), dst) AS rank
+    SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY round_even(dist_sq * CAST(1000000.0 AS DOUBLE), 0), dst) AS rank
     FROM pairs_a) WHERE rank <= {K}
 )
 """
@@ -180,7 +180,7 @@ pairs_{alias} AS (
 ),
 edges_{alias} AS (
   SELECT src, dst FROM (
-    SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY round(dist_sq, 6), dst) AS rank
+    SELECT src, dst, row_number() OVER (PARTITION BY src ORDER BY round_even(dist_sq * CAST(1000000.0 AS DOUBLE), 0), dst) AS rank
     FROM pairs_{alias}) WHERE rank <= {k}
 )"""
 
@@ -905,7 +905,9 @@ def cov_operator_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    inserted = gaussian_insertion(emb.select("vec_id", "embedding"), 50, seed=42)
+    inserted = gaussian_insertion(
+        emb.select("vec_id", "embedding"), lambda _: 50, seed=42
+    )
     parts.append(
         scalar("so2_union_count", inserted.agg(F.count(F.lit(1)).alias("value")))
     )
