@@ -1,10 +1,14 @@
+import hashlib
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from vector_database_watermarking_spark.operators import attacks, knn, stats
 from vector_database_watermarking_spark.experiments import robustness_grid
+
+from tests.plan_checks import invariant_lambda_md5s
 
 
 def test_random_delete_exact_count_and_invariance(spark, sf_dir):
@@ -22,7 +26,37 @@ def test_random_delete_exact_count_and_invariance(spark, sf_dir):
     assert ids1 == ids2
 
 
+def _hash60(key: str) -> int:
+    return int(hashlib.md5(key.encode()).hexdigest()[:15], 16)
+
+
+def _replay_modify(orig: dict, targets, seed: int) -> dict:
+    """The C8 rewrite replayed in plain Python: each target row gets the
+    keyed value ``float32(lo + (hi - lo)·u)`` over the ``SPAN`` dims
+    from its keyed offset, mod d; ``[lo, hi]`` spans every value."""
+    values = [x for e in orig.values() for x in e]
+    lo, hi = float(min(values)), float(max(values))
+    out = dict(orig)
+    for v in targets:
+        e = list(orig[v])
+        d = len(e)
+        off = _hash60(f"{seed}_off_{v}") % d
+        u = (float(_hash60(f"{seed}_val_{v}")) + 1.0) / float(2**60 + 2)
+        nv = float(np.float32(lo + (hi - lo) * u))
+        for j in range(min(attacks.SPAN, d)):
+            e[(off + j) % d] = nv
+        out[v] = e
+    return out
+
+
+def _hexes(rows: dict) -> dict:
+    return {v: [float(x).hex() for x in e] for v, e in rows.items()}
+
+
 def test_random_modify_touches_exact_rows_and_span(spark, sf_dir):
+    """random_modify rewrites the first ceil(n·p) rows in keyed-hash
+    order, and each rewritten row equals the plain-Python replay of its
+    offset, span and value, bit for bit."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     n = emb.count()
     out = attacks.random_modify(emb, 0.2, seed=7)
@@ -30,16 +64,11 @@ def test_random_modify_touches_exact_rows_and_span(spark, sf_dir):
     new = {r["vec_id"]: r["embedding"] for r in out.collect()}
     changed = [v for v in orig if orig[v] != new[v]]
     assert len(changed) == math.ceil(n * 0.2)
-    for v in changed[:10]:
-        diffs = [i for i, (a, b) in enumerate(zip(orig[v], new[v])) if a != b]
-        assert len(diffs) <= 30
-        vals = {new[v][i] for i in diffs}
-        assert len(vals) == 1  # one uniform value across the span
+    targets = sorted(orig, key=lambda v: (_hash60(f"7_modi_{v}"), v))[: math.ceil(n * 0.2)]
+    assert _hexes(new) == _hexes(_replay_modify(orig, targets, 7))
 
 
 def test_gaussian_insertion_stats(spark, sf_dir):
-    import numpy as np
-
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
     out = attacks.gaussian_insertion(emb, lambda _: 300, seed=7)
     assert out.count() == emb.count() + 300
@@ -247,9 +276,9 @@ def _window_top(df, n, *order):
 
 def test_adaptive_modify_rewrites_top_ai_rows(spark, sf_dir):
     """adaptive_modify rewrites exactly the top ceil(n·p) rows by AI
-    (ties by vec_id, NULL AI last), each with one value over at most
-    SPAN dims. At p=0.9 the quota exceeds the scored rows, so the
-    NULL tail is reached in vec_id order."""
+    (ties by vec_id, NULL AI last), each equal to the plain-Python
+    replay of its offset, span and value. At p=0.9 the quota exceeds
+    the scored rows, so the NULL tail is reached in vec_id order."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     n = emb.count()
     ai = emb.select(
@@ -270,10 +299,7 @@ def test_adaptive_modify_rewrites_top_ai_rows(spark, sf_dir):
         assert changed == want
         if p == 0.3:
             assert not changed & unscored
-        for v in changed:
-            diffs = [i for i, (a, b) in enumerate(zip(orig[v], new[v])) if a != b]
-            assert len(diffs) <= attacks.SPAN
-            assert len({new[v][i] for i in diffs}) == 1
+        assert _hexes(new) == _hexes(_replay_modify(orig, want, 7))
 
 
 @pytest.mark.parametrize(
@@ -324,3 +350,27 @@ def test_attack_job_counts(spark, sf_dir, attack, expected):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == expected
+
+
+def test_attack_lambdas_hold_no_row_invariant_md5(spark, sf_dir):
+    """The keyed draws of a modified row are computed once per row, below
+    the target join: no md5 that reads no lambda variable may sit inside
+    a ``transform`` lambda, which runs once per element. The insertion
+    lambda's md5s read the element index. A lambda that hashes only
+    ``vec_id`` shows the guard sees such an md5."""
+    from vector_database_watermarking_spark.functions.hashing import hash60
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    ai = emb.select("vec_id", (F.col("vec_id") % 13).cast("double").alias("ai"))
+    for out in (
+        attacks.random_modify(emb, 0.5, seed=7),
+        attacks.adaptive_modify(emb, ai, 0.5, seed=7),
+        attacks.gaussian_insertion(emb, lambda _: 50, seed=7),
+    ):
+        assert invariant_lambda_md5s(out) == []
+    keyed = emb.select(
+        F.transform(
+            "embedding", lambda x: x + hash60(F.col("vec_id").cast("string"))
+        ).alias("e")
+    )
+    assert len(invariant_lambda_md5s(keyed)) == 1

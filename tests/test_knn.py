@@ -317,6 +317,25 @@ def test_kernel_matches_fold_reference(spark):
             assert _tier_edges(tier, emb, emb, 5) == _ref_sqrt(want), (sf, tier)
 
 
+def test_broadcast_tier_past_fixture_size_matches_fold_reference(spark):
+    """The broadcast tier on more base rows than either fixture holds
+    (500): a seeded 2,000-row float32 Gaussian mixture (16 clusters,
+    d=64, shuffled ids), bit for bit against the fold reference."""
+    rng = np.random.default_rng(2000)
+    n, d = 2000, 64
+    centers = rng.standard_normal((16, d))
+    X = (centers[rng.integers(0, 16, n)] + 0.1 * rng.standard_normal((n, d))).astype(
+        np.float32
+    )
+    ids = rng.permutation(n).astype(np.int64) * 3
+    emb = spark.createDataFrame(
+        [(int(i), x.tolist()) for i, x in zip(ids, X)], "vec_id long, embedding array<float>"
+    )
+    assert n <= knn.MAX_BROADCAST_ROWS
+    want = _ref_sqrt(fold_reference(ids, X, ids, X, 5))
+    assert _tier_edges("broadcast", emb, emb, 5) == want
+
+
 def _adversarial(kind, rng, n, d):
     if kind == "duplicates":  # distance-0 cliques
         return np.repeat(rng.standard_normal((-(-n // 4), d)), 4, axis=0)[:n]

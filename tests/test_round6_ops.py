@@ -15,6 +15,8 @@ from pyspark.sql import functions as F
 
 from vector_database_watermarking_spark.operators import dedup, graph, merge, packing, text
 
+from tests.plan_checks import optimized_classes
+
 
 # ------------------------------------------------------------- BFS hops
 
@@ -66,10 +68,10 @@ def test_bfs_hops_bounded_lineage(spark):
     e_df = spark.createDataFrame(e, ["src", "dst"])
     s_df = spark.createDataFrame([(0,)], ["vec_id"])
     out = graph.bfs_hops(e_df, s_df, max_hops=5)
-    plan = out._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
-    assert "Join" not in plan, plan
+    classes = optimized_classes(out)
+    assert "Join" not in classes, classes
     # seed level + 5 hop levels, each a checkpointed RDD scan
-    assert plan.count("LogicalRDD") == 6, plan
+    assert classes.count("LogicalRDD") == 6, classes
     got = {r["vec_id"]: r["hops"] for r in out.collect()}
     assert got == {i: i for i in range(6)}
 

@@ -522,3 +522,35 @@ def test_near_dup_auto_band_default_output(spark, sf_dir):
         ).collect()
     }
     assert auto == explicit and len(auto) > 0
+
+
+def test_cosine_oracle_key_ranks_like_rank_key(spark):
+    """The cosine oracles' DuckDB ranking key (``registry._COS_RANK``)
+    orders cosines on an exact half-micro boundary as the engine's
+    ``knn.rank_key`` does: 2.5e-6 and 4.5e-6 round half-even to 2e-6
+    and 4e-6 and tie with the lower cosine next to each, so ``dst``
+    decides. DuckDB's ``round(cos, 6)`` lifts them to 3e-6 and 5e-6."""
+    import duckdb
+    import pyarrow as pa
+
+    from vector_database_watermarking_spark.operators.knn import rank_key
+    from vector_database_watermarking_spark.registry import _COS_RANK
+
+    rows = [(1, 2.2e-6), (2, 2.5e-6), (3, 4.1e-6), (4, 4.5e-6)]
+    assert 2.5e-6 * 1e6 == 2.5 and 4.5e-6 * 1e6 == 4.5
+    df = spark.createDataFrame(rows, "dst long, cos double")
+    engine = [r["dst"] for r in df.orderBy(rank_key("cos").desc(), "dst").collect()]
+    con = duckdb.connect()
+    con.register(
+        "t",
+        pa.table(
+            {
+                "dst": pa.array([d for d, _ in rows], pa.int64()),
+                "cos": pa.array([c for _, c in rows], pa.float64()),
+            }
+        ),
+    )
+    sql = f"SELECT dst FROM t ORDER BY {_COS_RANK} DESC, dst"
+    oracle = [r[0] for r in con.execute(sql).fetchall()]
+    con.close()
+    assert engine == oracle == [3, 4, 1, 2]

@@ -11,6 +11,8 @@ from vector_database_watermarking_spark.watermark.tvp import (
     tvp_extract,
 )
 
+from tests.plan_checks import python_evals
+
 WM = "10101"
 SEED = 20
 
@@ -96,29 +98,6 @@ def test_rs_roundtrip_and_determinism(spark, sf_dir):
     )
 
 
-def _plan_nodes(node):
-    """Node names of an executed physical plan, walked node by node:
-    through the adaptive wrapper and into each query stage's plan."""
-    name = node.nodeName()
-    if name == "AdaptiveSparkPlan":
-        yield from _plan_nodes(node.executedPlan())
-        return
-    yield name
-    if "QueryStage" in name:
-        yield from _plan_nodes(node.plan())
-    children = node.children()
-    for i in range(children.size()):
-        yield from _plan_nodes(children.apply(i))
-
-
-def _python_evals(df):
-    """Run ``df`` and count the Python evaluation nodes (pandas/Arrow
-    UDF projections and map-in-pandas relations) its plan executed."""
-    df.collect()
-    names = list(_plan_nodes(df._jdf.queryExecution().executedPlan()))
-    return sum(1 for n in names if n.endswith("EvalPython") or n.startswith("MapIn")), names
-
-
 def test_embed_plans_classify_once(spark, sf_dir):
     """The classifier is evaluated once per pipeline: the TVP and RS
     embed plans hold exactly one classifier and one embedder (the kNN
@@ -127,10 +106,10 @@ def test_embed_plans_classify_once(spark, sf_dir):
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     wm_df, _, ai = tvp_embed_with_ai(emb, WM, strength=0.7, th=1.0, seed=SEED)
-    n, names = _python_evals(wm_df)
+    n, names = python_evals(wm_df)
     assert n == 2, names
     ai.unpersist()
-    n, names = _python_evals(rs_embed(emb, WM, strength=0.7, seed=SEED)[0])
+    n, names = python_evals(rs_embed(emb, WM, strength=0.7, seed=SEED)[0])
     assert n == 2, names
 
 
@@ -147,5 +126,5 @@ def test_extract_plan_classifies_once(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(grouping, "decode_bitstring", spy)
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     tvp_extract(emb, len(WM), seed=SEED)
-    n, names = _python_evals(grouping.majority_decode(seen[0]))
+    n, names = python_evals(grouping.majority_decode(seen[0]))
     assert n == 1, names

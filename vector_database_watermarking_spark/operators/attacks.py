@@ -12,11 +12,12 @@ bounded tie-band window (never a global single-task sort), with exact
 ``(key, vec_id)`` order guaranteed by runtime-checked rank bounds, in
 three actions on a slim probe that also yields the row count the
 keep-count is computed from. Both modifications share one rewrite,
-:func:`_overwrite_span` (a native ``transform`` — no UDF, no
-shuffle), and one count/min/max aggregate; they differ only in how
-the target rows are chosen. Insertion derives per-dim stats with one
-posexplode aggregation and synthesizes rows JVM-side with Box-Muller
-over keyed hashes.
+:func:`_overwrite_span` (a native ``transform``, no UDF, interpreted
+once per element; the keyed per-row draws live below the target
+join, so they run once per row), and one count/min/max aggregate;
+they differ only in how the target rows are chosen. Insertion
+derives per-dim stats with one posexplode aggregation and
+synthesizes rows JVM-side with Box-Muller over keyed hashes.
 """
 
 from __future__ import annotations
@@ -159,31 +160,40 @@ def _overwrite_span(
 ) -> DataFrame:
     """The C8 rewrite of the ``targets`` rows (``vec_id``): overwrite
     ``SPAN`` consecutive dims (mod d) from a keyed per-row offset with
-    one keyed uniform value from [lo, hi]. A native ``transform``
-    lambda over the element index — whole-stage codegen, no Python,
-    no shuffle beyond the target join."""
+    one keyed uniform value from [lo, hi].
+
+    The keyed draws (offset hash, value) are computed on the target
+    side of the join, once per target row. The ``transform`` lambda is
+    interpreted once per element (``ArrayTransform`` has no codegen)
+    and reads only join outputs and ``size(embedding)``: a draw
+    computed above the join would be inlined into the lambda, its md5s
+    re-run per element. No Python, no shuffle beyond the target join."""
+    draws = targets.select(
+        "vec_id",
+        _rank_key(seed, "off").alias("_h"),
+        (
+            F.lit(lo)
+            + (F.lit(hi) - F.lit(lo))
+            * _uniform01(F.lit(str(seed)), F.lit("val"), F.col("vec_id"))
+        )
+        .cast("float")
+        .alias("_nv"),
+    )
     d = F.size("embedding")
-    offset = (hash60(F.concat_ws("_", F.lit(str(seed)), F.lit("off"), F.col("vec_id"))) % d).cast("int")
-    new_val = (
-        F.lit(lo)
-        + (F.lit(hi) - F.lit(lo))
-        * _uniform01(F.lit(str(seed)), F.lit("val"), F.col("vec_id"))
-    ).cast("float")
+    offset = (F.col("_h") % d).cast("int")
     modified = F.transform(
         "embedding",
         lambda x, i: F.when(
-            ((i - F.col("_off") + d) % d) < F.lit(SPAN), F.col("_nv")
+            ((i - offset + d) % d) < F.lit(SPAN), F.col("_nv")
         ).otherwise(x),
     )
     return (
-        emb.join(targets.withColumn("_hit", F.lit(1)), on="vec_id", how="left")
-        .withColumn("_off", offset)
-        .withColumn("_nv", new_val)
+        emb.join(draws, on="vec_id", how="left")
         .withColumn(
             "embedding",
-            F.when(F.col("_hit").isNotNull(), modified).otherwise(F.col("embedding")),
+            F.when(F.col("_h").isNotNull(), modified).otherwise(F.col("embedding")),
         )
-        .drop("_hit", "_off", "_nv")
+        .drop("_h", "_nv")
     )
 
 

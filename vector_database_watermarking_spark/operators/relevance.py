@@ -14,7 +14,7 @@ against the tf relation: no shuffle of the corpus at query time.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .text import tokens
@@ -162,10 +162,11 @@ def hybrid_search(
     from pyspark.sql import Window
 
     from .embedding import _default_model, embed_documents
+    from .knn import rank_key
 
-    def ranked(scored: DataFrame, score_col: str, rank_name: str) -> DataFrame:
+    def ranked(scored: DataFrame, key: Column, rank_name: str) -> DataFrame:
         top = (
-            scored.withColumn("_s", F.round(score_col, 6))
+            scored.withColumn("_s", key)
             .orderBy(F.col("_s").desc(), "doc_id")
             .limit(n_list)
         )
@@ -180,7 +181,9 @@ def hybrid_search(
             "doc_id", rank_name
         )
 
-    lex = ranked(bm25_scores(docs, query_terms, text_col=text_col), "score", "lex_rank")
+    lex = ranked(
+        bm25_scores(docs, query_terms, text_col=text_col), F.round("score", 6), "lex_rank"
+    )
 
     qv = [round(float(x), 6) for x in _default_model([list(query_terms)])[0]]
     qarr = F.array(*[F.lit(x) for x in qv])
@@ -194,7 +197,7 @@ def hybrid_search(
         F.lit(0.0),
         lambda s, v: s + v,
     )
-    sem = ranked(emb.select("doc_id", cos.alias("cos")), "cos", "sem_rank")
+    sem = ranked(emb.select("doc_id", cos.alias("cos")), rank_key("cos"), "sem_rank")
 
     fused = lex.join(sem, on="doc_id", how="full_outer")
     rrf = F.coalesce(
@@ -248,6 +251,7 @@ def hard_negatives(
 
     from .dedup import jaccard_verify, word_shingles
     from .embedding import embed_documents
+    from .knn import rank_key
     from .similarity import cosine_topk
 
     emb = (
@@ -266,9 +270,7 @@ def hard_negatives(
         threshold=jaccard_max,
     ).select(F.col("doc1").alias("src"), F.col("doc2").alias("dst"))
     negs = cands.join(dup, on=["src", "dst"], how="left_anti")
-    w = Window.partitionBy("src").orderBy(
-        F.round("cos_sim", 6).desc(), F.col("dst")
-    )
+    w = Window.partitionBy("src").orderBy(rank_key("cos_sim").desc(), F.col("dst"))
     return (
         negs.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)

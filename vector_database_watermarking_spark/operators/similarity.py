@@ -726,7 +726,9 @@ def ivf_search_fixed(
 def _ivf_rank_candidates(routed: DataFrame, assigned: DataFrame, k: int) -> DataFrame:
     """Shared IVF tail: candidate equi-join on cluster id, exact cosine
     on candidates only, per-query top-k window (rank-limit pushed
-    map-side by WindowGroupLimit)."""
+    map-side by WindowGroupLimit), ranked by ``knn.rank_key``."""
+    from .knn import rank_key
+
     cand = routed.alias("q").join(
         assigned.select(
             F.col("vec_id").alias("dst"),
@@ -741,9 +743,7 @@ def _ivf_rank_candidates(routed: DataFrame, assigned: DataFrame, k: int) -> Data
         F.col("dst"),
         cosine(F.col("q.embedding"), F.col("b_emb")).alias("cos_sim"),
     )
-    w = Window.partitionBy("src").orderBy(
-        F.round(F.col("cos_sim"), _RANK_DECIMALS).desc(), F.col("dst")
-    )
+    w = Window.partitionBy("src").orderBy(rank_key("cos_sim").desc(), F.col("dst"))
     return (
         sim.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)

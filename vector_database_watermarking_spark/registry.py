@@ -69,6 +69,10 @@ def register(name: str, oracle: Optional[str] = None):
 
 _ID = oracle_content_id("embedding", DIMS)
 
+# a cosine ``cos`` rounded as ``knn.rank_key`` rounds it (half-even on the
+# binary ``cos · 1e6``), as the cosine oracles rank by it (DESC)
+_COS_RANK = "round_even(cos * CAST(1000000.0 AS DOUBLE), 0)"
+
 
 def _knn_cte(k: int = K) -> str:
     """DuckDB CTE computing the exact kNN edges exactly like

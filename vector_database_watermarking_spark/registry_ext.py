@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .operators import dedup, multimodal, packing, similarity, text
-from .registry import D, K, _components_oracle, _knn_cte, register
+from .registry import D, K, _COS_RANK, _components_oracle, _knn_cte, register
 from .sources.tables import load_table
 
 # ---------------------------------------------------------------- fragments
@@ -692,7 +692,7 @@ WITH pairs AS (
 ),
 ranked AS (
   SELECT src, dst, cos,
-         row_number() OVER (PARTITION BY src ORDER BY round(cos, 6) DESC, dst) AS rank
+         row_number() OVER (PARTITION BY src ORDER BY {_COS_RANK} DESC, dst) AS rank
   FROM pairs QUALIFY rank <= 5
 )
 SELECT src, dst, round(cos, 6) AS cos_sim, CAST(rank AS INTEGER) AS rank FROM ranked
@@ -936,7 +936,7 @@ scored AS (
 )
 SELECT src, dst, round(cos, 6) AS cos_sim, CAST(rank AS INTEGER) AS rank
 FROM (SELECT src, dst, cos,
-             row_number() OVER (PARTITION BY src ORDER BY round(cos, 6) DESC, dst) AS rank
+             row_number() OVER (PARTITION BY src ORDER BY {_COS_RANK} DESC, dst) AS rank
       FROM scored)
 WHERE rank <= {_IVF_K}
 """,
@@ -1056,7 +1056,7 @@ scored AS (
 )
 SELECT src, dst, round(cos, 6) AS cos_sim, CAST(rank AS INTEGER) AS rank
 FROM (SELECT src, dst, cos,
-             row_number() OVER (PARTITION BY src ORDER BY round(cos, 6) DESC, dst) AS rank
+             row_number() OVER (PARTITION BY src ORDER BY {_COS_RANK} DESC, dst) AS rank
       FROM scored)
 WHERE rank <= {_IVF_K}
 """,
@@ -1128,7 +1128,7 @@ scored AS (
 )
 SELECT src, dst, round(cos, 6) AS cos_sim, CAST(rank AS INTEGER) AS rank
 FROM (SELECT src, dst, cos,
-             row_number() OVER (PARTITION BY src ORDER BY round(cos, 6) DESC, dst) AS rank
+             row_number() OVER (PARTITION BY src ORDER BY {_COS_RANK} DESC, dst) AS rank
       FROM scored)
 WHERE rank <= {_IVF_K}
 """,
@@ -2013,7 +2013,7 @@ pairs AS (
 ),
 cand AS (
   SELECT src, dst, cos,
-         row_number() OVER (PARTITION BY src ORDER BY round(cos, 6) DESC, dst) AS rn
+         row_number() OVER (PARTITION BY src ORDER BY {_COS_RANK} DESC, dst) AS rn
   FROM pairs QUALIFY rn <= 10
 ),
 sh AS (
@@ -2039,7 +2039,7 @@ kept AS (
   ANTI JOIN dup d ON c.src = d.src AND c.dst = d.dst
 )
 SELECT src, dst, round(cos, 6) AS cos_sim,
-       CAST(row_number() OVER (PARTITION BY src ORDER BY round(cos, 6) DESC, dst) AS INTEGER) AS rank
+       CAST(row_number() OVER (PARTITION BY src ORDER BY {_COS_RANK} DESC, dst) AS INTEGER) AS rank
 FROM kept
 QUALIFY rank <= 5
 """,

@@ -19,6 +19,7 @@ from .registry import (
     K,
     QUERIES,
     SEED,
+    _COS_RANK,
     _ID,
     _components_oracle,
     _knn_cte,
@@ -1808,7 +1809,7 @@ sem0 AS (
   FROM ev
 ),
 sx AS (
-  SELECT doc_id, row_number() OVER (ORDER BY round(cos, 6) DESC, doc_id) AS sem_rank
+  SELECT doc_id, row_number() OVER (ORDER BY {_COS_RANK} DESC, doc_id) AS sem_rank
   FROM sem0 QUALIFY sem_rank <= 100
 )
 SELECT coalesce(l.doc_id, s.doc_id) AS doc_id,
