@@ -151,17 +151,12 @@ def _sentinel_time(spark) -> float:
     work every time."""
     from pyspark.sql import functions as F
 
-    t0 = time.time()
-    (
-        spark.range(0, SENTINEL_ROWS, 1, SENTINEL_TASKS)
+    job = spark.range(0, SENTINEL_ROWS, 1, SENTINEL_TASKS).select(
         # shiftright(32) keeps the 24M-term sum under 2^63 (ANSI mode
         # raises on long overflow; raw xxhash64 sums overflow)
-        .select(F.sum(F.shiftright(F.xxhash64("id"), 32)).alias("h"))
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
+        F.sum(F.shiftright(F.xxhash64("id"), 32)).alias("h")
     )
-    return time.time() - t0
+    return timed(spark, lambda: consume(job))[0]
 
 
 def _probe_burn(n: int) -> int:
@@ -216,32 +211,43 @@ def warm_up(spark, sf_dir: str, fns: dict) -> None:
         for pdf in batches:
             yield pd.DataFrame({"x": [1]})
 
-    spark.range(64).repartition(default_cpus()).mapInPandas(_noopf, "x long").write.format(
-        "noop"
-    ).mode("overwrite").save()
+    consume(spark.range(64).repartition(default_cpus()).mapInPandas(_noopf, "x long"))
     spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).agg(
         F.count(F.lit(1))
     ).collect()
     warm_dir = WARMUP_SF_DIR if os.path.isdir(WARMUP_SF_DIR) else sf_dir
     for fn in fns.values():
         try:
-            fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
+            consume(fn(spark, warm_dir))
         except Exception:  # noqa: BLE001 - warmup must never fail the bench
             pass
 
 
-def timed_sample(spark, fn, sf_dir: str) -> float:
-    """Wall seconds of one run of ``fn(spark, sf_dir)`` into the noop
-    sink. Queries are isolated first: persisted blocks left by the
-    previous run are dropped (otherwise storage-memory pressure
-    distorts later timings by 5-10x via spill + GC), and the collector
-    is nudged so orphaned localCheckpoint RDDs from iterative queries
-    are actually freed between attempts."""
+def consume(df) -> None:
+    """Force every column of ``df`` through the noop sink. A bare
+    ``count()`` lets Catalyst prune the projections, windows and UDFs
+    no output column needs, so it under-reports the query."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def timed(spark, action) -> tuple[float, object]:
+    """``(seconds, result)`` of one call of ``action()``. The run is
+    isolated first: persisted blocks left by the previous run are
+    dropped (otherwise storage-memory pressure distorts later timings
+    by 5-10x via spill + GC), and the collector is nudged so orphaned
+    localCheckpoint RDDs from iterative queries are actually freed
+    between attempts."""
     spark.catalog.clearCache()
     gc.collect()
-    t0 = time.time()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.time() - t0
+    t0 = time.perf_counter()
+    result = action()
+    return time.perf_counter() - t0, result
+
+
+def timed_sample(spark, fn, sf_dir: str) -> float:
+    """Wall seconds of one run of ``fn(spark, sf_dir)`` into the noop
+    sink, isolated by :func:`timed`."""
+    return timed(spark, lambda: consume(fn(spark, sf_dir)))[0]
 
 
 def main() -> None:

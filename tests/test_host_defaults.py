@@ -1,3 +1,6 @@
+import ast
+import glob
+import importlib
 import os
 
 import pytest
@@ -5,6 +8,8 @@ import pytest
 from vector_database_watermarking_spark import session
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_TOOLS = sorted(glob.glob(os.path.join(_REPO, "tools", "*.py")))
+_CLOCKS = {"time", "time_ns", "monotonic", "monotonic_ns", "perf_counter", "perf_counter_ns"}
 
 pytestmark = pytest.mark.skipif(
     not os.path.exists("/proc/meminfo"), reason="needs /proc/meminfo"
@@ -107,3 +112,63 @@ def test_dead_jvm_stops_the_run_once(pytester, monkeypatch):
     result.assert_outcomes(failed=2)
     result.stdout.fnmatch_lines(["*the Spark JVM is unreachable*test_dead_gateway*"])
     assert "test_never_runs" not in result.stdout.str()
+
+
+def _reads_clock(node) -> bool:
+    for n in ast.walk(node):
+        if isinstance(n, ast.Call):
+            f = n.func
+            if isinstance(f, ast.Attribute) and f.attr in _CLOCKS and getattr(f.value, "id", None) == "time":
+                return True
+            if isinstance(f, ast.Name) and f.id in _CLOCKS - {"time"}:
+                return True
+    return False
+
+
+def _calls(node, attr: str) -> bool:
+    return any(
+        isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and n.func.attr == attr
+        for n in ast.walk(node)
+    )
+
+
+def _hygiene_problems(path: str) -> list[str]:
+    rel = os.path.relpath(path, _REPO)
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    problems = []
+    for n in ast.walk(tree):
+        where = f"{rel}:{getattr(n, 'lineno', '?')}"
+        if isinstance(n, ast.Constant) and isinstance(n.value, str):
+            v = n.value
+            if os.path.isabs(v) and (v.startswith(_REPO) or "/_scratch" in v):
+                problems.append(f"{where}: hard-coded checkout path {v!r}")
+        elif isinstance(n, ast.Call):
+            keys = [a.value for a in n.args if isinstance(a, ast.Constant)]
+            if "SPARK_GRAFT_CPUS" in keys and (len(n.args) > 1 or n.keywords):
+                problems.append(f"{where}: SPARK_GRAFT_CPUS read with its own default")
+        elif isinstance(n, ast.Attribute):
+            if n.attr == "builder" and getattr(n.value, "id", None) == "SparkSession":
+                problems.append(f"{where}: SparkSession built outside session.get_spark")
+        elif isinstance(n, ast.FunctionDef) and rel != "bench.py":
+            if n.name == "consume" or n.name.startswith("timed"):
+                problems.append(f"{where}: private copy of bench.{n.name}")
+            elif _calls(n, "clearCache") and _reads_clock(n):
+                problems.append(f"{where}: {n.name} times its own runs; use bench.timed")
+    return problems
+
+
+def test_bench_and_tools_share_one_timer_and_host_defaults():
+    """bench.py holds the force-and-time primitives and every tool
+    takes its cores and paths from the host: no checkout path literal,
+    no private cores default, no second session builder, no second
+    ``consume``/``timed`` and no clearCache-plus-clock loop."""
+    problems = [p for path in [os.path.join(_REPO, "bench.py"), *_TOOLS] for p in _hygiene_problems(path)]
+    assert not problems, "\n".join(problems)
+
+
+def test_every_tool_imports():
+    """A tool that imports a deleted module fails here, not when a
+    scale run finally reaches it."""
+    for path in _TOOLS:
+        importlib.import_module(f"tools.{os.path.basename(path)[:-3]}")

@@ -22,6 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.bench_sf1 import SF1_DIR
 from vector_database_watermarking_spark.registry import QUERIES
 from vector_database_watermarking_spark.session import get_spark
 
@@ -61,7 +62,7 @@ SKIP_HEAVY = {"ext_contamination_bloom", "ext_kmeans_refine"}
 def main() -> int:
     args = [a for a in sys.argv[1:] if a != "--all"]
     run_all = "--all" in sys.argv[1:]
-    sf_dir = args[0] if args else "/root/repo/_scratch/sf1"
+    sf_dir = args[0] if args else SF1_DIR
     spark = get_spark("bcast-audit", cpus=8)
     names = [n for n in QUERIES if n.startswith("rel_")] + [
         n for n in QUERIES

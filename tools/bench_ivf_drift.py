@@ -31,8 +31,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-SF1_EMB = "/root/repo/_scratch/sf1/embeddings.parquet"
-SCRATCH = "/root/repo/_scratch/ivf_drift"
+from tools.bench_sf1 import SF1_DIR
+from tools.replica_util import SCRATCH as SCRATCH_ROOT
+
+SCRATCH = os.path.join(SCRATCH_ROOT, "ivf_drift")
 SHIFT = 1.0
 N_QUERIES = 200
 K = 10
@@ -57,11 +59,11 @@ def main() -> None:
     from vector_database_watermarking_spark.operators import similarity
     from vector_database_watermarking_spark.session import get_spark
 
-    spark = get_spark(
-        "ivf-drift", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("ivf-drift")
     shutil.rmtree(SCRATCH, ignore_errors=True)
-    base = spark.read.parquet(SF1_EMB).select("vec_id", "embedding")
+    base = spark.read.parquet(os.path.join(SF1_DIR, "embeddings.parquet")).select(
+        "vec_id", "embedding"
+    )
     n_base = base.count()
 
     assigned, cents = similarity.ivf_build_fixed(base, n_clusters=8)

@@ -31,36 +31,33 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from bench import effective_cores
+import bench
+from tools.bench_sf1 import SF1_DIR
+from tools.bench_sf10 import build_emb
+from tools.replica_util import SCRATCH
 from vector_database_watermarking_spark.operators import similarity
 from vector_database_watermarking_spark.operators.maintenance import (
     parquet_file_stats,
 )
 from vector_database_watermarking_spark.session import get_spark
 
-SF1_EMB = "/root/repo/_scratch/sf1/embeddings.parquet"
-SF10_DIR = "/root/repo/_scratch/sf10"
-BENCH_DIR = "/root/repo/_scratch/ivf_erase_bench"
+SF10_DIR = os.path.join(SCRATCH, "sf10")
+BENCH_DIR = os.path.join(SCRATCH, "ivf_erase_bench")
 N_CLUSTERS = 16
 
 
 def main() -> None:
-    spark = get_spark(
-        "bench-ivf-erase", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("bench-ivf-erase")
     if not os.path.isdir(os.path.join(SF10_DIR, "embeddings.parquet")):
-        from bench_sf10 import build_emb
-
         build_emb(spark, 100, SF10_DIR)
-    cores, workers = effective_cores()
+    cores, workers = bench.effective_cores()
     for tag, path in (
-        ("sf1", SF1_EMB),
+        ("sf1", os.path.join(SF1_DIR, "embeddings.parquet")),
         ("sf10", os.path.join(SF10_DIR, "embeddings.parquet")),
     ):
         emb = (
@@ -85,23 +82,21 @@ def main() -> None:
             idx = f"{BENCH_DIR}/{tag}/{scen}"
             shutil.rmtree(idx, ignore_errors=True)
             shutil.copytree(master, idx)
-            spark.catalog.clearCache()
-            t0 = time.time()
-            audit = similarity.ivf_erase(spark, idx, victims)
-            t_erase = time.time() - t0
+            t_erase, audit = bench.timed(
+                spark, lambda: similarity.ivf_erase(spark, idx, victims)
+            )
             # honest full rebuild under the SAME centroids: re-assign
             # every survivor, full partitioned rewrite
             rb = f"{BENCH_DIR}/{tag}/{scen}__rebuild"
             shutil.rmtree(rb, ignore_errors=True)
-            spark.catalog.clearCache()
-            t0 = time.time()
             surv = emb.join(victims, "vec_id", "left_anti").select(
                 "vec_id",
                 "embedding",
                 similarity._argmin_cluster("embedding", cents).alias("cluster"),
             )
-            similarity.save_ivf_index(surv, cents, rb)
-            t_rebuild = time.time() - t0
+            t_rebuild, _ = bench.timed(
+                spark, lambda: similarity.save_ivf_index(surv, cents, rb)
+            )
             rebuild_bytes = parquet_file_stats(f"{rb}/assigned")["total_bytes"]
             print(
                 json.dumps(

@@ -25,8 +25,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench
+from tools.replica_util import SCRATCH
+
 SRC_SF = "/root/testdata/sf0.1"
-SF1_DIR = "/root/repo/_scratch/sf1"
+WARM_SF = os.path.join(os.path.dirname(SRC_SF), "sf0.01")  # codegen warm-up scale
+SF1_DIR = os.path.join(SCRATCH, "sf1")
 REPLICAS = 10
 DOC_OFFSET = 1 << 24
 VEC_OFFSET = 1 << 24
@@ -76,7 +80,7 @@ ROUND9_NAMES = [
     "rel_large_volume_customers",
     "rel_disjunct_revenue",
 ]
-WIDEPART_DIR = "/root/repo/_scratch/sf1_widepart"
+WIDEPART_DIR = os.path.join(SCRATCH, "sf1_widepart")
 
 
 def build_widepart_view(spark) -> str:
@@ -209,14 +213,6 @@ def build_sf1(spark) -> None:
     )
 
 
-def consume(df) -> int:
-    """Force full evaluation (shared impl: tools.replica_util)."""
-    from tools.replica_util import consume as _consume
-
-    _consume(df)
-    return -1
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--reps", type=int, default=2)
@@ -235,15 +231,12 @@ def main() -> None:
     elif args.queries == "all":
         # the full headline suite (VERDICT r07 #3): every bench.py
         # headline query plus the bench-extra tiers, measured at 10x
-        import bench as _b
-
-        QUERY_NAMES = list(_b.HEADLINE) + list(_b.BENCH_EXTRA)
+        QUERY_NAMES = list(bench.HEADLINE) + list(bench.BENCH_EXTRA)
     elif args.queries:
         QUERY_NAMES = args.queries.split(",")
 
     from vector_database_watermarking_spark.session import get_spark
 
-    import bench as bench_mod
     from vector_database_watermarking_spark.registry import QUERIES
 
     spark = get_spark("bench-sf1")
@@ -258,13 +251,13 @@ def main() -> None:
 
     fns = {n: QUERIES[n].fn for n in QUERY_NAMES if n in QUERIES}
     for n in QUERY_NAMES:
-        if n in bench_mod.BENCH_EXTRA:
-            fns[n] = bench_mod.BENCH_EXTRA[n]
+        if n in bench.BENCH_EXTRA:
+            fns[n] = bench.BENCH_EXTRA[n]
 
     # warmup at sf0.01: identical generated code, fills codegen caches
     for name, fn in fns.items():
         try:
-            consume(fn(spark, "/root/testdata/sf0.01"))
+            bench.consume(fn(spark, WARM_SF))
         except Exception as e:  # noqa: BLE001
             print(json.dumps({"query": name, "warmup_error": str(e)[:200]}), flush=True)
 
@@ -284,10 +277,9 @@ def main() -> None:
         run_dir = widepart if name in _PART_FK else SF1_DIR
         reps = []
         for _ in range(args.reps):
-            t0 = time.monotonic()
             try:
-                consume(fn(spark, run_dir))
-                reps.append(round(time.monotonic() - t0, 2))
+                sec, _ = bench.timed(spark, lambda: bench.consume(fn(spark, run_dir)))
+                reps.append(round(sec, 2))
             except Exception as e:  # noqa: BLE001
                 print(
                     json.dumps({"query": name, "error": str(e)[:400]}), flush=True

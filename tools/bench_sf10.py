@@ -45,8 +45,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+import bench
+from tools.replica_util import SCRATCH
+
 SRC_SF = "/root/testdata/sf0.1"
-OUT_BASE = "/root/repo/_scratch"
 DOC_OFFSET = 1 << 24
 VEC_OFFSET = 1 << 24
 D = 64
@@ -127,10 +129,18 @@ def build_emb(spark, replicas: int, out_dir: str) -> None:
     )
 
 
-def timed_rows(df) -> tuple[float, int]:
-    t0 = time.monotonic()
-    rows = df.count()
-    return time.monotonic() - t0, rows
+def wall_rows(spark, build) -> tuple[float, int]:
+    """Wall seconds of ``build()`` forced through ``bench.consume``,
+    and its row count, taken outside the clock (a bare ``count()``
+    prunes the projections the row claims to time)."""
+
+    def run():
+        df = build()
+        bench.consume(df)
+        return df
+
+    wall, df = bench.timed(spark, run)
+    return wall, df.count()
 
 
 def emit(**kw) -> None:
@@ -144,20 +154,18 @@ def main() -> None:
     from vector_database_watermarking_spark.session import get_spark
 
     mode = sys.argv[1] if len(sys.argv) > 1 else "all"
-    spark = get_spark(
-        "bench-sf10", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("bench-sf10")
     for tag, reps in (("sf1perm", 10), ("sf10", 100)):
-        build_docs(spark, reps, os.path.join(OUT_BASE, tag))
-        build_emb(spark, reps, os.path.join(OUT_BASE, tag))
+        build_docs(spark, reps, os.path.join(SCRATCH, tag))
+        build_emb(spark, reps, os.path.join(SCRATCH, tag))
     if mode == "--build-only":
         spark.stop()
         return
 
     run_dirs = [
         ("sf0.1", SRC_SF),
-        ("sf1perm", os.path.join(OUT_BASE, "sf1perm")),
-        ("sf10", os.path.join(OUT_BASE, "sf10")),
+        ("sf1perm", os.path.join(SCRATCH, "sf1perm")),
+        ("sf10", os.path.join(SCRATCH, "sf10")),
     ]
 
     # corpus-size-scaling document operators. COLD single runs: a
@@ -167,8 +175,7 @@ def main() -> None:
     if mode in ("all", "docs"):
         for qname in ("ext_incremental_dedup", "ext_bigram_nll"):
             for tag, d in run_dirs:
-                spark.catalog.clearCache()
-                wall, rows = timed_rows(QUERIES[qname].fn(spark, d))
+                wall, rows = wall_rows(spark, lambda: QUERIES[qname].fn(spark, d))
                 emit(query=qname, scale=tag, wall_sec=round(wall, 2), rows=rows)
 
     def load_emb(d):
@@ -184,16 +191,18 @@ def main() -> None:
     if mode in ("all", "neardup"):
         fn = QUERIES["ext_emb_near_dups_lsh"].fn
         for tag, d in run_dirs[:2]:
-            wall, rows = timed_rows(fn(spark, d))
+            wall, rows = wall_rows(spark, lambda: fn(spark, d))
             emit(query="near_dups_pinned_4bit", scale=tag, wall_sec=round(wall, 2), rows=rows)
 
         # scaled config (8-bit bands): the knob a 100x corpus requires
         for tag, d in run_dirs:
             emb = load_emb(d)
-            out = similarity.emb_near_dups_lsh(
-                emb, threshold=0.45, bits=64, band_bits=8, d=D, pair_budget=None
+            wall, rows = wall_rows(
+                spark,
+                lambda: similarity.emb_near_dups_lsh(
+                    emb, threshold=0.45, bits=64, band_bits=8, d=D, pair_budget=None
+                ),
             )
-            wall, rows = timed_rows(out)
             emit(query="near_dups_scaled_8bit", scale=tag, wall_sec=round(wall, 2), rows=rows)
 
     if mode not in ("all", "planted", "knn"):
@@ -221,10 +230,12 @@ def main() -> None:
             bump.alias("embedding"),
         )
         corpus = emb.unionByName(planted)
-        out = similarity.emb_near_dups_lsh(
-            corpus, threshold=0.85, bits=64, band_bits=bb, d=D, pair_budget=None
+        wall, rows = wall_rows(
+            spark,
+            lambda: similarity.emb_near_dups_lsh(
+                corpus, threshold=0.85, bits=64, band_bits=bb, d=D, pair_budget=None
+            ),
         )
-        wall, rows = timed_rows(out)
         emit(
             query="near_dups_planted_t085",
             scale=tag,
@@ -244,14 +255,8 @@ def main() -> None:
     # refusal is part of the measurement.
     for tag, d in run_dirs:
         emb = load_emb(d)
-        t0 = time.monotonic()
-        rows = knn_join(emb, emb, k=10, exact=True).count()
-        emit(
-            query="knn_exact_blas",
-            scale=tag,
-            wall_sec=round(time.monotonic() - t0, 2),
-            rows=rows,
-        )
+        wall, rows = wall_rows(spark, lambda: knn_join(emb, emb, k=10, exact=True))
+        emit(query="knn_exact_blas", scale=tag, wall_sec=round(wall, 2), rows=rows)
     emb = load_emb(run_dirs[1][1])
     t0 = time.monotonic()
     try:

@@ -26,9 +26,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench
+from tools.bench_sf1 import SF1_DIR, build_widepart_view
+from tools.replica_util import SCRATCH, copy_verbatim, replicate
+
 SRC_SF = "/root/testdata/sf0.1"
-SF1_DIR = "/root/repo/_scratch/sf1"
-SF10_DIR = "/root/repo/_scratch/sf10_rel"
+WARM_SF = os.path.join(os.path.dirname(SRC_SF), "sf0.01")  # codegen warm-up scale
+SF10_DIR = os.path.join(SCRATCH, "sf10_rel")
 REPLICAS = 100
 OFFSET = 1 << 24
 
@@ -51,8 +55,6 @@ QUERY_NAMES = [
 
 
 def build_sf10(spark) -> None:
-    from tools.replica_util import copy_verbatim, replicate
-
     # sentinel on region's _SUCCESS, not the directory: region is
     # written LAST, and Spark creates the output dir before the write
     # commits, so an interrupted build must be retried rather than
@@ -78,10 +80,7 @@ def build_sf10(spark) -> None:
     copy_verbatim(spark, SRC_SF, SF10_DIR, "region")
 
 
-from tools.replica_util import consume  # noqa: E402
-
-
-SF100_DIR = "/root/repo/_scratch/sf100_rel"
+SF100_DIR = os.path.join(SCRATCH, "sf100_rel")
 
 
 # third-decade fixture: 10 x the sf10 replicas with keys offset by
@@ -102,8 +101,6 @@ def build_sf100(spark, tables=("lineitem",)) -> None:
     """Build the requested sf100 replicas (per-table _SUCCESS
     sentinels, so an interrupted build retries only what's missing).
     nation/region are fixed dimensions, copied verbatim."""
-    from tools.replica_util import copy_verbatim, replicate
-
     os.makedirs(SF100_DIR, exist_ok=True)
     for name in tables:
         offsets, parts_out = _SF100_TABLES[name]
@@ -147,19 +144,14 @@ def main() -> None:
     # embeds): the sf100 rows are the steal-sensitive >30 s
     # measurements (Q7's 81-144 s rep band), so every per-query row
     # carries the cores delivered at run time (VERDICT r11 #3)
-    from bench import effective_cores
-
-    cal_cores, cal_workers = effective_cores()
+    cal_cores, cal_workers = bench.effective_cores()
     cal = {"effective_cores": cal_cores, "probe_workers": cal_workers}
 
     if args.sf100_shuffle:
         from vector_database_watermarking_spark.registry import QUERIES
         from vector_database_watermarking_spark.session import get_spark
 
-        spark = get_spark(
-            "bench-sf100-shuffle",
-            cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-        )
+        spark = get_spark("bench-sf100-shuffle")
         build_sf10(spark)
         t0 = time.monotonic()
         build_sf100(
@@ -181,18 +173,16 @@ def main() -> None:
         default_parts = spark.conf.get("spark.sql.shuffle.partitions")
         for name in ("rel_large_volume_customers", "rel_market_share"):
             fn = QUERIES[name].fn
-            consume(fn(spark, "/root/testdata/sf0.01"))  # codegen warmup
+            bench.consume(fn(spark, WARM_SF))
             for sf, d, parts in [
                 (10.0, SF10_DIR, default_parts),
                 (100.0, SF100_DIR, "256"),
             ]:
                 spark.conf.set("spark.sql.shuffle.partitions", parts)
-                reps = []
-                for _ in range(max(args.reps, 3)):
-                    spark.catalog.clearCache()
-                    t0 = time.monotonic()
-                    consume(fn(spark, d))
-                    reps.append(round(time.monotonic() - t0, 2))
+                reps = [
+                    round(bench.timed(spark, lambda: bench.consume(fn(spark, d)))[0], 2)
+                    for _ in range(max(args.reps, 3))
+                ]
                 print(json.dumps({"query": name, "sf": sf,
                                   "shuffle_partitions": int(parts),
                                   "reps_sec": reps, **cal}), flush=True)
@@ -204,10 +194,7 @@ def main() -> None:
         from vector_database_watermarking_spark.registry import QUERIES
         from vector_database_watermarking_spark.session import get_spark
 
-        spark = get_spark(
-            "bench-sf100-rel",
-            cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-        )
+        spark = get_spark("bench-sf100-rel")
         build_sf10(spark)
         t0 = time.monotonic()
         build_sf100_lineitem(spark)
@@ -218,14 +205,12 @@ def main() -> None:
         )
         for name in ("rel_pricing_summary", "rel_forecast_revenue"):
             fn = QUERIES[name].fn
-            consume(fn(spark, "/root/testdata/sf0.01"))  # codegen warmup
+            bench.consume(fn(spark, WARM_SF))
             for sf, d in [(10.0, SF10_DIR), (100.0, SF100_DIR)]:
-                reps = []
-                for _ in range(max(args.reps, 3)):
-                    spark.catalog.clearCache()
-                    t0 = time.monotonic()
-                    consume(fn(spark, d))
-                    reps.append(round(time.monotonic() - t0, 2))
+                reps = [
+                    round(bench.timed(spark, lambda: bench.consume(fn(spark, d)))[0], 2)
+                    for _ in range(max(args.reps, 3))
+                ]
                 print(json.dumps({"query": name, "sf": sf,
                                   "reps_sec": reps, **cal}), flush=True)
         spark.stop()
@@ -234,9 +219,7 @@ def main() -> None:
     from vector_database_watermarking_spark.registry import QUERIES
     from vector_database_watermarking_spark.session import get_spark
 
-    spark = get_spark(
-        "bench-sf10-rel", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("bench-sf10-rel")
     t0 = time.monotonic()
     build_sf10(spark)
     print(
@@ -259,28 +242,22 @@ def main() -> None:
         "rel_cheapest_supplier",
     }
     if _PART_FK & set(names):
-        from tools.bench_sf1 import build_widepart_view
-
         widepart = build_widepart_view(spark)
 
     for name in names:
         fn = QUERIES[name].fn
-        consume(fn(spark, "/root/testdata/sf0.01"))  # codegen warmup
+        bench.consume(fn(spark, WARM_SF))
         sf1_dir = widepart if name in _PART_FK else SF1_DIR
         for sf, d in [(0.1, SRC_SF), (1.0, sf1_dir), (10.0, SF10_DIR)]:
             reps = []
             for _ in range(args.reps):
-                # bench.py's isolation rule: accumulated persisted
-                # blocks from earlier queries distort later ones
-                spark.catalog.clearCache()
-                t0 = time.monotonic()
                 try:
-                    consume(fn(spark, d))
+                    sec, _ = bench.timed(spark, lambda: bench.consume(fn(spark, d)))
                 except Exception as e:  # noqa: BLE001
                     print(json.dumps({"query": name, "sf": sf,
                                       "error": str(e)[:300]}), flush=True)
                     break
-                reps.append(round(time.monotonic() - t0, 2))
+                reps.append(round(sec, 2))
             if reps:
                 print(json.dumps({"query": name, "sf": sf, "reps_sec": reps,
                                   **cal}), flush=True)

@@ -22,9 +22,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+import bench
 
 HOT_FRAC_MOD = 4  # id % 4 == 0 -> hot key: 25% of fact rows on one key
 N_KEYS = 100_000
@@ -45,10 +46,6 @@ def tables(spark, n_rows: int):
     return fact, dim
 
 
-def consume(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=20_000_000)
@@ -58,9 +55,7 @@ def main() -> None:
     from vector_database_watermarking_spark.operators.skew import salted_join
     from vector_database_watermarking_spark.session import get_spark
 
-    spark = get_spark(
-        "bench-skew", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("bench-skew")
     # emulate the big-dim regime: no broadcast escape hatch
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
@@ -68,21 +63,22 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    def run(tag, skew_on, salted):
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", str(skew_on).lower())
-        reps = []
-        for _ in range(args.reps):
-            spark.catalog.clearCache()
-            j = (
-                salted_join(fact, dim, on="key", n_salt=32)
-                if salted
-                else fact.join(dim, on="key")
-            )
-            t0 = time.monotonic()
-            consume(j.select(F.sum((j.v + j.w) % 1000003).alias("chk")))
-            reps.append(round(time.monotonic() - t0, 2))
+    def run_plain(tag, df_fn):
+        reps = [
+            round(bench.timed(spark, lambda: bench.consume(df_fn()))[0], 2)
+            for _ in range(args.reps)
+        ]
         print(json.dumps({"variant": tag, "rows": args.rows, "reps_sec": reps}),
               flush=True)
+
+    def run(tag, skew_on, salted):
+        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", str(skew_on).lower())
+        j = (
+            salted_join(fact, dim, on="key", n_salt=32)
+            if salted
+            else fact.join(dim, on="key")
+        )
+        run_plain(tag, lambda: j.select(F.sum((j.v + j.w) % 1000003).alias("chk")))
 
     run("smj_aqe_skew_on", skew_on=True, salted=False)
     run("smj_aqe_skew_off", skew_on=False, salted=False)
@@ -97,16 +93,6 @@ def main() -> None:
     # per-key aggregate skew-free; it is the house rule the plan tests
     # pin ("windows partitioned by key", "no global window") measured.
     from pyspark.sql import Window
-
-    def run_plain(tag, df_fn):
-        reps = []
-        for _ in range(args.reps):
-            spark.catalog.clearCache()
-            t0 = time.monotonic()
-            consume(df_fn())
-            reps.append(round(time.monotonic() - t0, 2))
-        print(json.dumps({"variant": tag, "rows": args.rows, "reps_sec": reps}),
-              flush=True)
 
     w = Window.partitionBy("key")
     run_plain(

@@ -25,17 +25,19 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF1 = "/root/repo/_scratch/sf1"
-SF10_STREAM = "/root/repo/_scratch/sf10_stream"
-SF100_STREAM = "/root/repo/_scratch/sf100_stream"
-SCRATCH = "/root/repo/_scratch/stream_bench"
+from tools.bench_sf1 import SF1_DIR
+from tools.replica_util import SCRATCH as SCRATCH_ROOT
+
+SF10_STREAM = os.path.join(SCRATCH_ROOT, "sf10_stream")
+SF100_STREAM = os.path.join(SCRATCH_ROOT, "sf100_stream")
+SCRATCH = os.path.join(SCRATCH_ROOT, "stream_bench")
 
 # events source for the event-driven families — the `decade`/
 # `decade100` modes re-point this at the 10M/100M-row replicas so the
 # same bench functions produce the second/third-decade table rows
 # (VERDICT r09 #4 and the round-10 extension)
-EVENTS_SF = SF1
-DOCS_SF = SF1
+EVENTS_SF = SF1_DIR
+DOCS_SF = SF1_DIR
 SCALE_TAG = "sf1"
 
 
@@ -52,7 +54,7 @@ def build_events_sf10(spark) -> None:
         return
     os.makedirs(SF10_STREAM, exist_ok=True)
     replicate(
-        spark, SF1, SF10_STREAM, "events",
+        spark, SF1_DIR, SF10_STREAM, "events",
         ["event_id", "user_id"], replicas=10, key_offset=1 << 28,
         ts_col="ts", parts_out=64,
     )
@@ -69,7 +71,7 @@ def build_docs_sf10(spark) -> None:
         return
     os.makedirs(SF10_STREAM, exist_ok=True)
     replicate(
-        spark, SF1, SF10_STREAM, "documents", ["doc_id"],
+        spark, SF1_DIR, SF10_STREAM, "documents", ["doc_id"],
         replicas=10, key_offset=1 << 28, parts_out=64,
     )
 
@@ -1002,9 +1004,7 @@ def main() -> None:
     from tools.pb_shim import enable_bundled_protobuf
 
     enable_bundled_protobuf()
-    spark = get_spark(
-        "bench-streaming", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("bench-streaming")
     if mode == "decade":
         build_events_sf10(spark)
         build_docs_sf10(spark)

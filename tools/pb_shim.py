@@ -47,14 +47,12 @@ from __future__ import annotations
 import os
 import sys
 
+from tools.replica_util import SCRATCH
+
 _BUNDLE_PB = (
     "/usr/lib/google-cloud-sdk/platform/google_appengine/google/protobuf"
 )
-_SHIM_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "_scratch",
-    "pb_shim",
-)
+_SHIM_DIR = os.path.join(SCRATCH, "pb_shim")
 
 
 def enable_bundled_protobuf() -> bool:

@@ -29,56 +29,54 @@ Usage: python tools/preagg_crossover_probe.py [fact_rows] [reps] [--hard]
 
 from __future__ import annotations
 
-import gc
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+import bench
 from vector_database_watermarking_spark.session import get_spark
 
-args = [a for a in sys.argv[1:] if a != "--hard"]
-HARD = "--hard" in sys.argv[1:]
-N = int(args[0]) if len(args) > 0 else 50_000_000
-REPS = int(args[1]) if len(args) > 1 else 3
-RATIOS = [4, 32, 256] if HARD else [2, 8, 32, 128, 512]
 
-
-def fact(spark, n_keys: int):
+def fact(spark, n: int, n_keys: int):
     # deterministic synthetic fact: key spread via xxhash so the join
     # exchange sees uniform partitions (guide §2.5)
-    return spark.range(N).select(
+    return spark.range(n).select(
         (F.pmod(F.xxhash64("id"), F.lit(n_keys))).alias("k"),
         (F.col("id") % 97).cast("double").alias("v"),
     )
 
 
-def dim(spark, n_keys: int):
-    # --hard: high-cardinality dim attribute -> the plain plan's final
+def dim(spark, n_keys: int, hard: bool):
+    # hard: high-cardinality dim attribute -> the plain plan's final
     # aggregation cannot collapse in the map-side partial step
-    n_groups = max(n_keys // 2, 1) if HARD else 32
+    n_groups = max(n_keys // 2, 1) if hard else 32
     return spark.range(n_keys).select(
         F.col("id").alias("k"), (F.col("id") % n_groups).alias("g")
     )
 
 
-def plain(spark, n_keys: int):
-    f, d = fact(spark, n_keys), dim(spark, n_keys)
+def plain(spark, n: int, n_keys: int, hard: bool):
+    f, d = fact(spark, n, n_keys), dim(spark, n_keys, hard)
     return f.join(d, "k").groupBy("g").agg(F.sum("v").alias("s"))
 
 
-def preagg(spark, n_keys: int):
-    f, d = fact(spark, n_keys), dim(spark, n_keys)
+def preagg(spark, n: int, n_keys: int, hard: bool):
+    f, d = fact(spark, n, n_keys), dim(spark, n_keys, hard)
     fa = f.groupBy("k").agg(F.sum("v").alias("v"))
     return fa.join(d, "k").groupBy("g").agg(F.sum("v").alias("s"))
 
 
 def main() -> None:
+    args = [a for a in sys.argv[1:] if a != "--hard"]
+    hard = "--hard" in sys.argv[1:]
+    n = int(args[0]) if len(args) > 0 else 50_000_000
+    reps = int(args[1]) if len(args) > 1 else 3
+    ratios = [4, 32, 256] if hard else [2, 8, 32, 128, 512]
     spark = get_spark("preagg_probe")
-    if HARD:
+    if hard:
         # model un-broadcastable 100 TB dims: disable both the static
         # and the AQE broadcast conversion so the join shuffles the
         # fact side, which is the precondition for the transform
@@ -87,20 +85,19 @@ def main() -> None:
         print("regime: HARD (no broadcast, high-cardinality final key)")
     # warmup both plan shapes
     for fn in (plain, preagg):
-        fn(spark, 1000).write.format("noop").mode("overwrite").save()
-    print(f"fact rows N={N}, reps={REPS}")
-    for c in RATIOS:
-        n_keys = max(N // c, 1)
+        bench.consume(fn(spark, n, 1000, hard))
+    print(f"fact rows N={n}, reps={reps}")
+    for c in ratios:
+        n_keys = max(n // c, 1)
         res = {}
         for tag, fn in (("plain", plain), ("preagg", preagg)):
             samples = []
-            for _ in range(REPS):
-                spark.catalog.clearCache()
-                gc.collect()
+            for _ in range(reps):
                 spark.sparkContext.setJobDescription(f"{tag} c={c}")
-                t0 = time.time()
-                fn(spark, n_keys).write.format("noop").mode("overwrite").save()
-                samples.append(time.time() - t0)
+                sec, _ = bench.timed(
+                    spark, lambda: bench.consume(fn(spark, n, n_keys, hard))
+                )
+                samples.append(sec)
             res[tag] = samples
         pm, am = min(res["plain"]), min(res["preagg"])
         win = "preagg" if am < pm else "plain"

@@ -5,10 +5,16 @@ column offset by r*key_offset per replica r, timestamps shifted r
 seconds) used by bench_sf1, bench_sf10_rel, and the wide-part view —
 so a fix to the scheme lands once (the round-9 review found the three
 copies already drifting: sentinel-table choice, part-offset family).
+Every tool's fixtures and scratch state live under :data:`SCRATCH`.
 """
 from __future__ import annotations
 
 import os
+
+# the repo's git-ignored _scratch/ dir, wherever the checkout is
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "_scratch"
+)
 
 
 def replicate(
@@ -51,8 +57,3 @@ def copy_verbatim(spark, src_dir: str, dst_dir: str, name: str) -> None:
         1
     ).write.mode("overwrite").parquet(os.path.join(dst_dir, f"{name}.parquet"))
 
-
-def consume(df) -> None:
-    """Force full evaluation of every column (a bare count lets
-    Catalyst prune unused windows/projections, under-reporting)."""
-    df.write.format("noop").mode("overwrite").save()

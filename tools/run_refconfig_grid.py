@@ -44,13 +44,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from tools.bench_sf1 import SF1_DIR
 from vector_database_watermarking_spark.experiments import (
     robustness_grid,
     tabularmark_match_grid,
 )
 from vector_database_watermarking_spark.session import get_spark
 
-SF1_EMB = "/root/repo/_scratch/sf1/embeddings.parquet"
+SF1_EMB = os.path.join(SF1_DIR, "embeddings.parquet")
 VEC_OFFSET = 1 << 24  # tools/bench_sf1.py replica key stride
 REPLICA_N = 2000  # sf0.1 embeddings per replica
 WATERMARK = "001010010101001010010"  # L=21, compare/roubust.py:162
@@ -152,9 +153,7 @@ def main() -> None:
     # (window-overlap P 0.998 → 0.93). d64 stays available for fast
     # engine-internal sweeps only.
     pad = geom == "d128"
-    spark = get_spark(
-        "refconfig-grid", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("refconfig-grid")
     # reference averages times=10 (deletion) / 20 (modification) CPython
     # draws; keyed-hash trials are seeds 20..20+trials-1 (the published
     # round-10 SCPW modification row used trials=10)

@@ -20,23 +20,19 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(1, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import functions as F
 
+from tools.run_refconfig_grid import WATERMARK, load_dense_emb
 from vector_database_watermarking_spark.experiments import utility_impact
 from vector_database_watermarking_spark.session import get_spark
 from vector_database_watermarking_spark.watermark.tvp import tvp_embed
-
-from run_refconfig_grid import WATERMARK, load_dense_emb
 
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 10000
     k = int(sys.argv[2]) if len(sys.argv) > 2 else 100
-    spark = get_spark(
-        "utility-impact", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    )
+    spark = get_spark("utility-impact")
     ths = (
         tuple(float(a) for a in sys.argv[3:])
         if len(sys.argv) > 3

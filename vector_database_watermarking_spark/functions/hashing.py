@@ -98,9 +98,9 @@ def key_dims(d: int, seed: int, n: int = 10) -> list[int]:
 
 
 def compat_md5_mod(s: str, m: int) -> int:
-    """Reference-exact ``hash_re(x) % m`` (``watermarking.py:20-27``):
-    full 128-bit digest as int. For use inside pandas UDFs."""
-    return int(hashlib.md5(str(s).encode("utf-8")).hexdigest(), 16) % m
+    """Reference-exact ``hash_re(x) % m`` (``watermarking.py:20-27``).
+    For use inside pandas UDFs."""
+    return compat_md5_int(s) % m
 
 
 def compat_md5_int(s: str) -> int:

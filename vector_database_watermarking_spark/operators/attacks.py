@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.hashing import hash60
 
 SPAN = 30  # consecutive dims one modification overwrites (the reference's)
+INSERTED_ID_BASE = 10_000_000  # inserted rows get vec_ids from here up
 
 
 def _rank_key(seed: int, tag: str) -> Column:
@@ -43,10 +44,9 @@ def take_ranked(
     key: Column,
     *,
     descending: bool = False,
-    tie_col: str = "vec_id",
 ) -> DataFrame:
     """Exactly the first ``n = keep(count(df))`` rows of ``df`` in
-    ``(key, tie_col)`` order (``row_number() <= n`` semantics, NULL
+    ``(key, vec_id)`` order (``row_number() <= n`` semantics, NULL
     keys ranking last — matching ``Window.orderBy(key.desc())``'s
     nulls-last placement the adaptive attacks relied on) WITHOUT a
     global single-task sort. ``keep`` maps the row count, which the
@@ -82,8 +82,8 @@ def take_ranked(
     # NEW unpartitioned window (a real bug) stays visible in the logs
     from ..functions.windows import one_partition
 
-    w_all = Window.partitionBy(one_partition(tie_col)).orderBy(
-        F.asc_nulls_last(akey), F.col(tie_col)
+    w_all = Window.partitionBy(one_partition("vec_id")).orderBy(
+        F.asc_nulls_last(akey), F.col("vec_id")
     )
 
     def _fallback() -> DataFrame:
@@ -95,7 +95,7 @@ def take_ranked(
 
     # probe on a slim projection: per-row cost is ~16 bytes, persisted
     # only for the three actions below, then released
-    probe = df.select(akd.alias("_akd"), F.col(tie_col)).persist()
+    probe = df.select(akd.alias("_akd"), F.col("vec_id")).persist()
     try:
         total, nn = probe.agg(F.count(F.lit(1)), F.count("_akd")).head()
         n = keep(total)
@@ -262,7 +262,6 @@ def gaussian_insertion(
     emb: DataFrame,
     count: Callable[[int], int],
     seed: int = 42,
-    id_offset: int = 10_000_000,
 ) -> DataFrame:
     """P14+SO2 insertion attack (``generate_vector`` +
     ``adaptive_insertion``, ``roubust/roubust.py:185-208``): append
@@ -274,7 +273,8 @@ def gaussian_insertion(
     group, which counts towards ``n`` only); the synthetic rows are
     built natively — ``transform`` over the dim sequence with
     Box-Muller gaussians from keyed hashes. New rows get ids above
-    ``id_offset`` (the reference loses identity; we keep it explicit).
+    ``INSERTED_ID_BASE`` (the reference loses identity; we keep it
+    explicit).
     """
     stats = (
         emb.select(F.posexplode_outer("embedding").alias("dim", "v"))
@@ -294,7 +294,7 @@ def gaussian_insertion(
 
     spark = emb.sparkSession
     new_rows = spark.range(count(n)).select(
-        (F.col("id") + F.lit(id_offset)).alias("vec_id")
+        (F.col("id") + F.lit(INSERTED_ID_BASE)).alias("vec_id")
     )
 
     def gauss(i: Column) -> Column:

@@ -16,30 +16,22 @@ whole-stage codegen). This is the shape that survives 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import content_id, hash_mod, parity_hidden_bit
 
 
-def classify(
-    emb: DataFrame,
-    dims: list[int],
-    L: int,
-    d: int,
-    hidden_bit: Column | None = None,
-) -> DataFrame:
-    """A1 projection: add ``vid`` (content id), ``group_id``,
-    ``hidden_bit`` columns to an embeddings DataFrame.
-
-    ``hidden_bit`` defaults to the native parity bit (P7 tier); the
-    TVP-compat pipelines pass their own pandas-UDF bit column.
-    """
+def classify(emb: DataFrame, dims: list[int], L: int, d: int) -> DataFrame:
+    """A1 projection: add ``vid`` (content id), ``group_id`` and
+    ``hidden_bit`` (the native parity bit, P7 tier) columns to an
+    embeddings DataFrame. The TVP-compat pipelines classify through
+    ``watermark.tvp.classify_compat`` instead."""
     vid = content_id("embedding", dims)
     out = emb.withColumn("vid", vid).withColumn(
         "group_id", hash_mod(F.col("vid"), L).cast("int")
     )
-    bit = hidden_bit if hidden_bit is not None else parity_hidden_bit("embedding", F.col("vid"), d)
+    bit = parity_hidden_bit("embedding", F.col("vid"), d)
     return out.withColumn("hidden_bit", bit.cast("int"))
 
 

@@ -845,7 +845,7 @@ def cov_operator_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .functions.hashing import content_id, hash60
     from .operators import graph, knn
-    from .operators.attacks import gaussian_insertion
+    from .operators.attacks import INSERTED_ID_BASE, gaussian_insertion
     from .sources.tables import tail_slice
 
     emb = load_table(spark, sf_dir, "embeddings").persist()
@@ -914,7 +914,7 @@ def cov_operator_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mb = emb.select(F.explode("embedding").alias("v")).agg(F.avg("v").alias("mb"))
     mi = (
-        inserted.filter(F.col("vec_id") >= 10_000_000)
+        inserted.filter(F.col("vec_id") >= INSERTED_ID_BASE)
         .select(F.explode("embedding").alias("v"))
         .agg(F.avg("v").alias("mi"))
     )
