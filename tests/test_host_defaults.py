@@ -147,6 +147,10 @@ def _hygiene_problems(path: str) -> list[str]:
             keys = [a.value for a in n.args if isinstance(a, ast.Constant)]
             if "SPARK_GRAFT_CPUS" in keys and (len(n.args) > 1 or n.keywords):
                 problems.append(f"{where}: SPARK_GRAFT_CPUS read with its own default")
+            callee = getattr(n.func, "id", None) or getattr(n.func, "attr", None)
+            cpus = [k.value for k in n.keywords if k.arg == "cpus"] + n.args[1:2]
+            if callee == "get_spark" and any(isinstance(c, ast.Constant) for c in cpus):
+                problems.append(f"{where}: get_spark with a fixed core count")
         elif isinstance(n, ast.Attribute):
             if n.attr == "builder" and getattr(n.value, "id", None) == "SparkSession":
                 problems.append(f"{where}: SparkSession built outside session.get_spark")
@@ -161,7 +165,8 @@ def _hygiene_problems(path: str) -> list[str]:
 def test_bench_and_tools_share_one_timer_and_host_defaults():
     """bench.py holds the force-and-time primitives and every tool
     takes its cores and paths from the host: no checkout path literal,
-    no private cores default, no second session builder, no second
+    no private cores default, no ``get_spark`` with a literal core
+    count, no second session builder, no second
     ``consume``/``timed`` and no clearCache-plus-clock loop."""
     problems = [p for path in [os.path.join(_REPO, "bench.py"), *_TOOLS] for p in _hygiene_problems(path)]
     assert not problems, "\n".join(problems)

@@ -1,12 +1,26 @@
+import math
+from collections import Counter
+
+import pytest
+
+from vector_database_watermarking_spark.operators import grouping
 from vector_database_watermarking_spark.operators.grouping import ber
-from vector_database_watermarking_spark.watermark.scpw import scpw_embed, scpw_extract
+from vector_database_watermarking_spark.watermark import scpw
+from vector_database_watermarking_spark.watermark.scpw import (
+    classify_scpw,
+    scpw_embed,
+    scpw_extract,
+)
 from vector_database_watermarking_spark.watermark.tabularmark import (
     divide_interval_randomly,
     find_category,
     green_perturbation,
     tabularmark_detect,
     tabularmark_embed,
+    tabularmark_match_count,
 )
+
+from tests.plan_checks import python_evals
 
 WM = "10101"
 
@@ -33,6 +47,71 @@ def test_scpw_distribution_preserved(spark, sf_dir):
     new = np.array([r["embedding"][pos] for r in wm_df.collect()])
     assert abs(orig.mean() - new.mean()) < 0.2
     assert abs(orig.std() - new.std()) < 0.6
+
+
+@pytest.mark.parametrize("strength", [0.55, 0.7])
+def test_scpw_carriers_meet_capped_deficit(spark, sf_dir, strength):
+    """F5 for SCPW (``SCPW.py:179-229``): each group takes exactly the
+    capped deficit ``min(max(0, ceil(s·n_total) − n_have), n_avail)``
+    of carriers, all of them rows whose hidden bit disagreed with the
+    group's target; the deficit is computed here from
+    ``classify_scpw``'s rows."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    _, carriers = scpw_embed(
+        emb, WM, strength=strength, top_k=3, position=10, std_e=0.1
+    )
+    cls = {r["vec_id"]: r for r in classify_scpw(emb, 3, len(WM), 10).collect()}
+    n_total, n_have = Counter(), Counter()
+    for r in cls.values():
+        n_total[r["group_id"]] += 1
+        n_have[r["group_id"]] += r["hidden_bit"] == int(WM[r["group_id"]])
+    want = {
+        g: min(max(0, math.ceil(strength * n) - n_have[g]), n - n_have[g])
+        for g, n in n_total.items()
+    }
+    rows = carriers.collect()
+    got = Counter(r["group_id"] for r in rows)
+    assert {g: got[g] for g in want} == want
+    assert sum(want.values()) > 0
+    for r in rows:
+        assert r["wm_bit"] == int(WM[r["group_id"]]) != cls[r["vec_id"]]["hidden_bit"]
+
+
+def test_scpw_plans_classify_once(spark, sf_dir, monkeypatch):
+    """SCPW runs TVP's pipeline: one classifier relation and one
+    embedder in the watermarked frame, the classifier alone behind the
+    carriers and behind the extraction's decode."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    wm_df, carriers = scpw_embed(emb, WM, strength=0.7, top_k=3, position=10, std_e=0.1)
+    n, names = python_evals(wm_df)
+    assert n == 2, names
+    n, names = python_evals(carriers)
+    assert n == 1, names
+
+    seen = []
+    decode = scpw.decode_bitstring
+    monkeypatch.setattr(
+        scpw, "decode_bitstring", lambda cls, L: seen.append(cls) or decode(cls, L)
+    )
+    scpw_extract(emb, len(WM), top_k=3, position=10)
+    n, names = python_evals(grouping.majority_decode(seen[0]))
+    assert n == 1, names
+
+
+def test_tabularmark_ids_run_in_the_jvm(spark, sf_dir, monkeypatch):
+    """TabularMark's content id is a native column: the key cells and
+    the match-count relation evaluate no Python."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    _, keys = tabularmark_embed(emb, nw=20, p=4.0, k=3, position=10)
+    n, names = python_evals(keys)
+    assert n == 0, names
+
+    seen = []
+    count = type(emb).count
+    monkeypatch.setattr(type(emb), "count", lambda df: seen.append(df) or count(df))
+    assert tabularmark_match_count(emb, keys, 3) >= 20  # every key row matches
+    n, names = python_evals(seen[0])
+    assert n == 0, names
 
 
 def test_interval_partition_properties():
@@ -79,10 +158,6 @@ def test_tabularmark_match_count_tracks_deletion(spark, sf_dir):
 
     from vector_database_watermarking_spark.operators import attacks
     from vector_database_watermarking_spark.sources.tables import load_table
-    from vector_database_watermarking_spark.watermark.tabularmark import (
-        tabularmark_embed,
-        tabularmark_match_count,
-    )
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     nw = 20
@@ -132,7 +207,6 @@ def test_scpw_modification_ber_tracks_content_id_entropy(spark):
 
     from vector_database_watermarking_spark.experiments import robustness_grid
     from vector_database_watermarking_spark.functions.hashing import hash60
-    from vector_database_watermarking_spark.watermark.scpw import classify_scpw
 
     wm = "001010010101001010010"  # L=21, compare/roubust.py:162
     d = 64

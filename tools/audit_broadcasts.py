@@ -63,7 +63,7 @@ def main() -> int:
     args = [a for a in sys.argv[1:] if a != "--all"]
     run_all = "--all" in sys.argv[1:]
     sf_dir = args[0] if args else SF1_DIR
-    spark = get_spark("bcast-audit", cpus=8)
+    spark = get_spark("bcast-audit")
     names = [n for n in QUERIES if n.startswith("rel_")] + [
         n for n in QUERIES
         if n.startswith("ext_") and not n.startswith("ext_graph")

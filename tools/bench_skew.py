@@ -1,6 +1,6 @@
 """Measured skew-join evidence (SCALING.md's skew story had prose but
 no numbers): a 20M-row fact table whose hottest key holds 25% of all
-rows, joined to a 100k-row dimension on a 32-thread host.
+rows, joined to a 100k-row dimension, on the host's cores.
 
 The regime matters: a dimension this size BROADCASTS under the
 session threshold, and a broadcast join is skew-immune — that is
@@ -14,7 +14,8 @@ threshold, then measured three ways:
      joins feeding a pinned distribution, build sides past memory)
 
 Usage: python tools/bench_skew.py [--rows 20000000] [--reps 2]
-Prints one JSON line per variant.
+Prints one JSON line per variant. Each variant runs once untimed
+before its timed reps, so no rep pays the plan's first-run compile.
 """
 from __future__ import annotations
 
@@ -64,6 +65,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     def run_plain(tag, df_fn):
+        bench.consume(df_fn())  # warm-up: compiles the plan's classes
         reps = [
             round(bench.timed(spark, lambda: bench.consume(df_fn()))[0], 2)
             for _ in range(args.reps)

@@ -94,6 +94,13 @@ def key_dims(d: int, seed: int, n: int = 10) -> list[int]:
     return random.Random(seed).sample(range(d), n)
 
 
+def first_dims(k: int) -> list[int]:
+    """Id dims over the *first* ``k`` dimensions — the SCPW
+    (``SCPW.py:73-84``) and TabularMark content id. The trailing entry
+    is the sentinel that :func:`content_id` drops (``dims[:-1]``)."""
+    return [*range(k), 0]
+
+
 # ---------------------------------------------------------------- compat tier
 
 

@@ -9,6 +9,13 @@ distribution-preserving noise ``e = kx·x + k1·u + k2`` (``found_e``,
 ``SCPW.py:31-62``) to that dimension, re-drawing until the parity
 expresses the wanted bit (``SCPW.py:217-222``).
 
+Pipeline shape: TVP's (``watermark.tvp``), step for step — one
+classifier relation, the window-aggregate deficit, the keyed random
+carrier pick and the carrier join. Only the per-row functions are
+SCPW's own: the first-``top_k`` content id and parity bit feed the
+classifier, and the noise rejection loop is the carrier rewrite (it
+reads the classifier's ``vid`` from the carrier row).
+
 Documented deviations:
 - **Parity terms, reference-exact**: extraction hashes the value at
   the fixed ``position`` and XORs with the *vid-derived* dimension
@@ -33,36 +40,26 @@ import hashlib
 import math
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..functions.hashing import compat_md5_mod, hash60
+from ..functions.bits import content_id_py
+from ..functions.hashing import compat_md5_int, compat_md5_mod, first_dims
 from ..operators.grouping import decode_bitstring
+from .tvp import _apply_embedding, _avail_from_classified, _classify, _select_random
 
 MAX_REDRAWS = 64
-
-
-def _scpw_vid(vector: list[float], top_k: int, scale: float = 100.0) -> str:
-    """Content id from the *first* ``top_k`` dims (``SCPW.py:73-84``),
-    with the same magnitude scaling as the engine-wide content id."""
-    return "".join(str(int(abs(float(vector[i])) * scale))[0] for i in range(top_k))
 
 
 def _parity_bit(value: float, xor_parity: int) -> int:
     """``SCPW.py:120-128``: md5-parity of str(float32 value) XOR the
     vid-derived dimension parity ``(hash(vid) % d) % 2`` (the
     reference's ``pos % 2`` where ``pos = hash_value % len(vector)``)."""
-    s = str(np.float32(value))
-    h = int(hashlib.md5(s.encode("utf-8")).hexdigest(), 16)
-    return (h % 2) ^ xor_parity
+    return (compat_md5_int(str(np.float32(value))) % 2) ^ xor_parity
 
 
 def _vid_parity(vid: str, d: int) -> int:
     """The XOR term: ``(hash_re(vid) % d) % 2`` (``SCPW.py:121-122``)."""
-    from ..functions.hashing import compat_md5_int
-
     return (compat_md5_int(vid) % d) % 2
 
 
@@ -108,30 +105,16 @@ def _gauss(seed: int, vec_id: int, attempt: int) -> float:
 
 def classify_scpw(emb: DataFrame, top_k: int, L: int, position: int) -> DataFrame:
     """A1 for SCPW (``group_vectors_and_classify_bits``,
-    ``SCPW.py:130-169``) with the fixed-position parity bit."""
+    ``SCPW.py:130-169``): TVP's classifier relation with the first-
+    ``top_k`` content id and the fixed-position parity bit."""
+    dims = first_dims(top_k)
 
-    @F.pandas_udf(
-        T.StructType(
-            [
-                T.StructField("vid", T.StringType()),
-                T.StructField("group_id", T.IntegerType()),
-                T.StructField("hidden_bit", T.IntegerType()),
-            ]
-        )
-    )
-    def _cls(embs: pd.Series) -> pd.DataFrame:
-        vids, gids, bitss = [], [], []
-        for vec in embs:
-            vec = list(vec)
-            vid = _scpw_vid(vec, top_k)
-            vids.append(vid)
-            gids.append(compat_md5_mod(vid, L))
-            bitss.append(_parity_bit(vec[position], _vid_parity(vid, len(vec))))
-        return pd.DataFrame({"vid": vids, "group_id": gids, "hidden_bit": bitss})
+    def _row(vec):
+        vid = content_id_py(vec, dims)
+        hbit = _parity_bit(vec[position], _vid_parity(vid, len(vec)))
+        return vid, compat_md5_mod(vid, L), hbit
 
-    return emb.withColumn("_c", _cls(F.col("embedding"))).select(
-        "*", "_c.vid", "_c.group_id", "_c.hidden_bit"
-    ).drop("_c")
+    return _classify(emb, _row)
 
 
 def scpw_embed(
@@ -143,72 +126,35 @@ def scpw_embed(
     std_e: float | None = None,
     seed: int = 20,
 ) -> tuple[DataFrame, DataFrame]:
-    """C4 (``SCPW.watermark_embedding``, ``SCPW.py:179-229``)."""
-    L = len(watermark)
+    """C4 (``SCPW.watermark_embedding``, ``SCPW.py:179-229``): TVP's
+    deficit, keyed random carrier pick and carrier join, with the
+    correlated-noise rejection loop as the per-carrier rewrite.
+
+    Returns ``(watermarked, carriers)``; ``carriers`` has
+    ``(vec_id, group_id, wm_bit)``.
+    """
     kx, k1, k2 = _noise_params(emb, position, std_e)
+    cls = classify_scpw(emb, top_k, len(watermark), position)
+    avail = _avail_from_classified(cls, watermark, strength)
+    carriers = _select_random(avail, seed).select("vec_id", "group_id", "wm_bit", "vid")
 
-    cls = classify_scpw(emb, top_k, L, position)
-    wm_arr = F.array(*[F.lit(int(b)) for b in watermark])
-    cls = cls.withColumn("wm_bit", F.element_at(wm_arr, F.col("group_id") + 1))
+    def _rewrite(v: list, vec_id: int, vid: str, target: int) -> list:
+        xp = _vid_parity(vid, len(v))
+        x = float(np.float32(v[position]))
+        val = x
+        for attempt in range(MAX_REDRAWS):
+            e = kx * x + k1 * _gauss(seed, vec_id, attempt) + k2
+            val = float(np.float32(val + e))  # cumulative, like SCPW.py:217-222
+            if _parity_bit(val, xp) == target:
+                break
+        else:  # parity-forcing nudge (never expected in practice)
+            step = abs(val) * 1e-6 + 1e-6
+            while _parity_bit(val, xp) != target:
+                val = float(np.float32(val + step))
+        v[position] = val
+        return v
 
-    stats = cls.groupBy("group_id").agg(
-        F.count(F.lit(1)).alias("n_total"),
-        F.sum((F.col("hidden_bit") == F.col("wm_bit")).cast("int")).alias("n_have"),
-    )
-    stats = stats.withColumn(
-        "deficit",
-        F.least(
-            F.greatest(
-                F.lit(0),
-                F.ceil(F.lit(strength) * F.col("n_total")).cast("long") - F.col("n_have"),
-            ),
-            F.col("n_total") - F.col("n_have"),
-        ),
-    )
-    avail = cls.filter(F.col("hidden_bit") != F.col("wm_bit")).join(
-        F.broadcast(stats.select("group_id", "deficit")), on="group_id"
-    )
-    order_key = hash60(F.concat_ws("_", F.lit(str(seed)), F.col("vec_id")))
-    w = Window.partitionBy("group_id").orderBy(order_key, F.col("vec_id"))
-    carriers = (
-        avail.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= F.col("deficit"))
-        .select("vec_id", "group_id", "wm_bit")
-    )
-
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def _embed(embs: pd.Series, vec_ids: pd.Series, targets: pd.Series) -> pd.Series:
-        out = []
-        for vec, vec_id, target in zip(embs, vec_ids, targets):
-            if target is None or (isinstance(target, float) and math.isnan(target)):
-                out.append(vec)
-                continue
-            target = int(target)
-            v = list(vec)
-            xp = _vid_parity(_scpw_vid(v, top_k), len(v))
-            x = float(np.float32(v[position]))
-            val = x
-            for attempt in range(MAX_REDRAWS):
-                e = kx * x + k1 * _gauss(seed, int(vec_id), attempt) + k2
-                val = float(np.float32(val + e))  # cumulative, like SCPW.py:217-222
-                if _parity_bit(val, xp) == target:
-                    break
-            else:  # parity-forcing nudge (never expected in practice)
-                step = abs(val) * 1e-6 + 1e-6
-                while _parity_bit(val, xp) != target:
-                    val = float(np.float32(val + step))
-            v[position] = val
-            out.append(v)
-        return pd.Series(out)
-
-    tagged = emb.join(
-        carriers.select("vec_id", F.col("wm_bit").alias("_target")), on="vec_id", how="left"
-    )
-    out_cols = list(emb.columns)
-    wm_df = tagged.withColumn(
-        "embedding", _embed(F.col("embedding"), F.col("vec_id"), F.col("_target").cast("double"))
-    ).select(*out_cols)
-    return wm_df, carriers
+    return _apply_embedding(emb, carriers, _rewrite), carriers.drop("vid")
 
 
 def scpw_extract(

@@ -11,6 +11,11 @@ number from the green category is added to the cell's value at
 ``Δ = wm − orig``, counts green hits ``ng``, and declares the watermark
 present when ``z = 2(ng − nw/2)/√nw > 1.96`` (``:183-190``).
 
+The content id is the native ``functions.hashing.content_id`` over
+the first ``k`` dims (``first_dims``, shared with SCPW), a JVM column:
+key cells, the key-row flag of the embedder and both matchers read it
+without a Python pass.
+
 Deviations (documented):
 - content id uses the engine-wide scaled digit (``floor(|x|·100)``) —
   the reference's raw leading digit degenerates to all-zeros on
@@ -29,7 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.bits import content_id_py
+from ..functions.hashing import content_id, first_dims
 
 ALPHA = 1.96  # one-sided z threshold (tabularMark.py:14)
 
@@ -112,34 +117,23 @@ def tabularmark_embed(
     Returns ``(watermarked, key_cells)``; key_cells is
     ``(vec_id, vid)`` — the embedder's bookkeeping (``i_tuple``).
     """
+    vid = content_id("embedding", first_dims(k))
 
     @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def _perturb(embs: pd.Series, is_key: pd.Series) -> pd.Series:
+    def _perturb(embs: pd.Series, vids: pd.Series) -> pd.Series:
         out = []
-        for vec, key in zip(embs, is_key):
-            if not key:
+        for vec, seed_id in zip(embs, vids):
+            if seed_id is None:  # not a key row
                 out.append(vec)
                 continue
             v = list(vec)
-            vid = content_id_py(v, list(range(k)) + [0])  # first-k variant
-            v[position] = float(v[position]) + green_perturbation(p, vid)
+            v[position] = float(v[position]) + green_perturbation(p, seed_id)
             out.append(v)
         return pd.Series(out)
 
-    wm = emb.withColumn(
-        "embedding", _perturb(F.col("embedding"), (F.col("vec_id") < nw))
-    )
-
-    @F.pandas_udf(T.StringType())
-    def _vid(embs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [content_id_py(list(v), list(range(k)) + [0]) for v in embs]
-        )
-
-    key_cells = (
-        emb.filter(F.col("vec_id") < nw)
-        .select("vec_id", _vid(F.col("embedding")).alias("vid"))
-    )
+    key = F.col("vec_id") < nw
+    wm = emb.withColumn("embedding", _perturb("embedding", F.when(key, vid)))
+    key_cells = emb.filter(key).select("vec_id", vid.alias("vid"))
     return wm, key_cells
 
 
@@ -159,17 +153,10 @@ def tabularmark_detect(
     vec_id). Δ classification + one-sided z-test.
     Returns {"detected": bool, "z": float, "ng": int, "nw": int}.
     """
-
-    @F.pandas_udf(T.StringType())
-    def _vid(embs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [content_id_py(list(v), list(range(k)) + [0]) for v in embs]
-        )
-
     wm_ids = wm_data.select(
         F.col("vec_id").alias("wm_vec_id"),
         F.element_at("embedding", position + 1).alias("wm_value"),
-        _vid(F.col("embedding")).alias("vid"),
+        content_id("embedding", first_dims(k)).alias("vid"),
     )
     orig_vals = orig.select(
         F.col("vec_id").alias("orig_vec_id"),
@@ -213,13 +200,6 @@ def tabularmark_match_count(wm_data: DataFrame, key_cells: DataFrame, k: int) ->
     compare-grid's "match proportion lost" is ``1 − count/nw``
     (``compare/roubust.py:207-213``). Distributed shape: broadcast the
     nw key ids, hash-join on the content id — no per-row driver loop."""
-
-    @F.pandas_udf(T.StringType())
-    def _vid(embs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [content_id_py(list(v), list(range(k)) + [0]) for v in embs]
-        )
-
-    ids = wm_data.select(_vid(F.col("embedding")).alias("vid"))
+    ids = wm_data.select(content_id("embedding", first_dims(k)).alias("vid"))
     keys = key_cells.select("vid").distinct()
     return ids.join(F.broadcast(keys), on="vid", how="leftsemi").count()

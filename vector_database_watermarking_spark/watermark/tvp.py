@@ -9,6 +9,13 @@ group/classify (pandas UDF over the whole collection) → per-group
 deficit (F5) → carrier selection (W1 two-tier rank-threshold, or W6
 seeded sample for RS) → bit surgery on carriers only (P5).
 
+Each step has one implementation here, and SCPW (``watermark.scpw``)
+runs the same one: ``_classify`` takes the scheme's per-vector
+``(vid, group_id, hidden_bit)`` function, ``_avail_from_classified``
+the deficit, ``_select_random`` the keyed carrier pick, and
+``_apply_embedding`` the carrier join with a per-row rewrite — bit
+surgery for TVP and RS, the noise rejection loop for SCPW.
+
 The reference's per-bit Python loop disappears: groups are disjoint,
 so selection and embedding happen for all L groups in one shot —
 window functions partitioned by ``group_id`` (SURVEY §3.1 stage 8).
@@ -59,25 +66,10 @@ def _keys(d: int, seed: int) -> tuple[tuple[int, ...], frozenset[int]]:
     return dims, frozenset(dims)
 
 
-def _make_embedder(seed: int):
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def _embed(embs: pd.Series, vids: pd.Series, targets: pd.Series) -> pd.Series:
-        out = []
-        for vec, vid, target in zip(embs, vids, targets):
-            if target is None or (isinstance(target, float) and math.isnan(target)):
-                out.append(vec)
-            else:
-                skip = _keys(len(vec), seed)[1]
-                out.append(bits.embed_bit_fast(list(vec), int(target), vid, skip))
-        return pd.Series(out)
-
-    return _embed
-
-
-def classify_compat(emb: DataFrame, L: int, seed: int = 20) -> DataFrame:
-    """A1 compat tier: the input columns minus ``embedding``, plus
-    ``vid``, ``group_id``, ``hidden_bit`` via the full-128-bit-md5 /
-    binary-expansion semantics (``watermarking.py:119-150``).
+def _classify(emb: DataFrame, row_fn) -> DataFrame:
+    """A1 classifier relation shared by every compat-tier scheme: the
+    input columns minus ``embedding``, plus the ``(vid, group_id,
+    hidden_bit)`` that ``row_fn(vector)`` returns for each row.
 
     One ``mapInPandas`` relation: filters above it cannot be pushed
     into a second Python evaluation, and the vectors do not come back
@@ -90,18 +82,28 @@ def classify_compat(emb: DataFrame, L: int, seed: int = 20) -> DataFrame:
         for pdf in batches:
             vids, gids, hbits = [], [], []
             for vec in pdf["embedding"]:
-                vec = list(vec)
-                dims, skip = _keys(len(vec), seed)
-                vid = bits.content_id_py(vec, dims)
+                vid, gid, hbit = row_fn(list(vec))
                 vids.append(vid)
-                gids.append(compat_md5_mod(vid, L))
-                # integer fast tier — bit-identical (functions.bits)
-                hbits.append(bits.extract_bit_fast(vec, vid, skip))
+                gids.append(gid)
+                hbits.append(hbit)
             yield pdf.drop(columns="embedding").assign(
                 vid=vids, group_id=gids, hidden_bit=hbits
             )
 
     return emb.mapInPandas(_cls, schema)
+
+
+def classify_compat(emb: DataFrame, L: int, seed: int = 20) -> DataFrame:
+    """A1 compat tier: :func:`_classify` with the full-128-bit-md5 /
+    binary-expansion semantics (``watermarking.py:119-150``)."""
+
+    def _row(vec):
+        dims, skip = _keys(len(vec), seed)
+        vid = bits.content_id_py(vec, dims)
+        # integer fast tier — bit-identical (functions.bits)
+        return vid, compat_md5_mod(vid, L), bits.extract_bit_fast(vec, vid, skip)
+
+    return _classify(emb, _row)
 
 
 def _with_wm_bit(cls: DataFrame, watermark: str) -> DataFrame:
@@ -211,20 +213,37 @@ def _select_random(avail: DataFrame, seed: int) -> DataFrame:
     )
 
 
-def _apply_embedding(emb: DataFrame, carriers: DataFrame, seed: int) -> DataFrame:
-    """P5 application: join the carrier targets and rewrite only those
-    embeddings (the UDF passes non-carriers through untouched)."""
-    embedder = _make_embedder(seed)
+def _apply_embedding(emb: DataFrame, carriers: DataFrame, rewrite) -> DataFrame:
+    """P5 application: left-join the carrier targets and rewrite only
+    those embeddings with ``rewrite(vector, vec_id, vid, target)``;
+    rows without a target pass through untouched."""
+
+    @F.pandas_udf(T.ArrayType(T.FloatType()))
+    def _embed(
+        embs: pd.Series, vec_ids: pd.Series, vids: pd.Series, targets: pd.Series
+    ) -> pd.Series:
+        out = []
+        for vec, vec_id, vid, target in zip(embs, vec_ids, vids, targets):
+            if target is None or (isinstance(target, float) and math.isnan(target)):
+                out.append(vec)
+            else:
+                out.append(rewrite(list(vec), int(vec_id), vid, int(target)))
+        return pd.Series(out)
+
     tagged = emb.join(
         carriers.select("vec_id", "vid", F.col("wm_bit").alias("_target")),
         on="vec_id",
         how="left",
     )
-    out_cols = [c for c in emb.columns]
     return tagged.withColumn(
         "embedding",
-        embedder(F.col("embedding"), F.col("vid"), F.col("_target").cast("double")),
-    ).select(*out_cols)
+        _embed("embedding", "vec_id", "vid", F.col("_target").cast("double")),
+    ).select(*emb.columns)
+
+
+def _set_bit(seed: int, vec: list, vec_id: int, vid: str, target: int) -> list:
+    """The TVP/RS rewrite: set the carrier's hidden bit (P5)."""
+    return bits.embed_bit_fast(vec, target, vid, _keys(len(vec), seed)[1])
 
 
 def tvp_embed(
@@ -262,7 +281,8 @@ def tvp_embed_with_ai(
     ai = accessibility_index(edges, emb).select("vec_id", "ai").persist()
     avail = _selection_base(emb, watermark, seed, strength).join(ai, on="vec_id")
     carriers = _select_by_ai(avail, th).select("vec_id", "group_id", "wm_bit", "vid", "ai")
-    return _apply_embedding(emb, carriers, seed), carriers, ai
+    wm_df = _apply_embedding(emb, carriers, functools.partial(_set_bit, seed))
+    return wm_df, carriers, ai
 
 
 def tvp_select_native(
@@ -351,7 +371,7 @@ def tvp_carrier_invariants(
     # embed for real, then re-classify the watermarked vectors — the
     # audit's right-hand sides come from a second, independent pass
     # through the extraction path
-    wm_df = _apply_embedding(emb, carriers, seed)
+    wm_df = _apply_embedding(emb, carriers, functools.partial(_set_bit, seed))
     post = _with_wm_bit(classify_compat(wm_df, L, seed), watermark)
     post_stats = post.groupBy("group_id").agg(
         F.sum(_agrees()).alias("n_have_post"),
@@ -388,7 +408,8 @@ def rs_embed(
     TVP with uniform-random carrier selection (the ablation)."""
     avail = _selection_base(emb, watermark, seed, strength)
     carriers = _select_random(avail, seed).select("vec_id", "group_id", "wm_bit", "vid")
-    return _apply_embedding(emb, carriers, seed), carriers
+    wm_df = _apply_embedding(emb, carriers, functools.partial(_set_bit, seed))
+    return wm_df, carriers
 
 
 def tvp_extract(wm_data: DataFrame, L: int, seed: int = 20) -> str:
