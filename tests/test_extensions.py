@@ -128,7 +128,7 @@ def test_ivf_recall_vs_exact(spark, sf_dir):
     assigned, centroids = similarity.ivf_build(emb, n_clusters=8, seed=42)
     approx = {
         (r["src"], r["dst"])
-        for r in similarity.ivf_search(q, assigned, centroids, k=5, nprobe=3).collect()
+        for r in similarity.ivf_search_fixed(q, assigned, centroids, k=5, nprobe=3).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall > 0.5, recall

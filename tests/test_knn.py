@@ -1,3 +1,4 @@
+import math
 from contextlib import contextmanager
 
 import numpy as np
@@ -93,14 +94,21 @@ def blocked_tier(base, n_blocks):
 def test_blocked_exact_knn_matches_broadcast(spark, sf_dir):
     """The blocked tier (base split into broadcastable chunks + merge)
     must produce bit-identical edges to the single-broadcast tier."""
-    from vector_database_watermarking_spark.operators.knn import _exact_knn_broadcast
-
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
+    broadcast = knn.broadcast_topk(
+        emb,
+        emb,
+        None,
+        5,
+        "src long, dst long, dist_sq double, rank int",
+        knn._base_arrays,
+        lambda state, q_ids, Q, kk: knn._topk_chunk(q_ids, Q, state, kk, True),
+    )
     a = sorted(
-        (r["src"], r["rank"], r["dst"], round(r["dist"], 9))
-        for r in _exact_knn_broadcast(emb, emb, 5, True).collect()
+        (r["src"], r["rank"], r["dst"], round(math.sqrt(r["dist_sq"]), 9))
+        for r in broadcast.collect()
     )
     with blocked_tier(emb, 4):
         b = sorted(
@@ -145,16 +153,26 @@ def test_cosine_topk_blocked_matches_broadcast(spark, sf_dir):
     """The blocked cosine tier must match the broadcast tier exactly
     (same guarantee the euclidean kNN blocked tier has)."""
     from vector_database_watermarking_spark.operators.similarity import (
-        _cosine_topk_broadcast,
+        _cosine_chunk,
+        _cosine_state,
         cosine_topk,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
+    broadcast = knn.broadcast_topk(
+        emb,
+        emb,
+        None,
+        5,
+        "src long, dst long, cos_sim double, rank int",
+        _cosine_state,
+        lambda state, q_ids, Q, kk: _cosine_chunk(state, q_ids, Q, kk, True),
+    )
     a = sorted(
         (r["src"], r["rank"], r["dst"], round(r["cos_sim"], 9))
-        for r in _cosine_topk_broadcast(emb, emb, 5, True).collect()
+        for r in broadcast.collect()
     )
     import vector_database_watermarking_spark.operators.knn as knn_mod
 
@@ -196,7 +214,7 @@ def test_sq_topk_blocked_matches_broadcast(spark, sf_dir):
     [
         ("knn_edges", 2),
         ("knn_join", 2),
-        ("cosine_topk", 3),
+        ("cosine_topk", 2),
         ("sq_topk", 5),
         ("pq_topk", 3),
     ],
@@ -224,6 +242,42 @@ def test_top_k_job_counts(spark, sf_dir, call, expected):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == expected
+
+
+@pytest.mark.parametrize("member", ["knn_join", "cosine_topk", "sq_topk", "pq_topk"])
+def test_top_k_family_edge_inputs(spark, member):
+    """Edge inputs through each member of the exact top-k family: an
+    empty base gives no rows and the member's output columns; with
+    k ≥ n (n=3) a query absent from the base gets all 3 rows and a
+    self-join query the other 2, ranked 1..n."""
+    from vector_database_watermarking_spark.operators import similarity
+
+    call = {
+        "knn_join": lambda q, b: knn.knn_join(q, b, 5, exact=True),
+        "cosine_topk": lambda q, b: similarity.cosine_topk(q, b, 5),
+        "sq_topk": lambda q, b: similarity.sq_topk(q, b, 5),
+        "pq_topk": lambda q, b: similarity.pq_topk(q, b, 5),
+    }[member]
+    value = "cos_sim" if member == "cosine_topk" else "dist"
+    schema = "vec_id long, embedding array<float>"
+    rng = np.random.default_rng(3)
+    base = spark.createDataFrame([(i, rng.standard_normal(8).tolist()) for i in range(3)], schema)
+    queries = spark.createDataFrame(
+        [(100 + i, rng.standard_normal(8).tolist()) for i in range(2)], schema
+    )
+
+    empty = call(queries, spark.createDataFrame([], schema))
+    assert empty.columns == ["src", "dst", value, "rank"]
+    assert empty.count() == 0
+
+    def ranks(df):
+        out = {}
+        for r in df.collect():
+            out.setdefault(r["src"], []).append(r["rank"])
+        return {src: sorted(rs) for src, rs in out.items()}
+
+    assert ranks(call(queries, base)) == {100: [1, 2, 3], 101: [1, 2, 3]}
+    assert ranks(call(base, base)) == {0: [1, 2], 1: [1, 2], 2: [1, 2]}
 
 
 def test_lsh_dense_cluster_queries_still_get_candidates(spark):

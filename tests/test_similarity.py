@@ -16,14 +16,14 @@ def test_sq_topk_recall_and_codes(spark, sf_dir):
     from vector_database_watermarking_spark.operators.knn import knn_edges
     from vector_database_watermarking_spark.sources.tables import load_table
 
+    import numpy as np
+
     emb = load_table(spark, sf_dir, "embeddings")
     lo, hi = sq_bounds(emb)
     assert lo < hi
-    rng = emb.select(
-        F.array_min(sq_codes("embedding", lo, hi)).alias("mn"),
-        F.array_max(sq_codes("embedding", lo, hi)).alias("mx"),
-    ).agg(F.min("mn"), F.max("mx")).head()
-    assert rng[0] >= 0 and rng[1] <= 255
+    X = np.array([r["embedding"] for r in emb.collect()], dtype=np.float64)
+    codes = sq_codes(X, lo, hi)
+    assert codes.min() >= 0 and codes.max() <= 255
 
     queries = emb.filter(F.col("vec_id") < 50)
     got = sq_topk(queries, emb, k=5, refine=20).collect()
@@ -108,39 +108,106 @@ def test_pq_topk_recall_codes_and_tiers(spark, sf_dir):
 
 
 def test_ivf_route_large_magnitude_embeddings(spark):
-    """The IVF probe-order key must stay correct for large-magnitude
-    embeddings (ADVICE round 12: an int64 micro-key overflowed for
-    squared distances past ~9.2e12, garbling probe order). Vectors at
-    |x| ~ 1e7 give d2 ~ 1e16; the route must still probe the truly
-    nearest centroids, so a full-probe search equals brute force."""
+    """The native IVF route keeps its probe order for large-magnitude
+    embeddings over KMeans centroids. Vectors at |x| ~ 1e7 give d2 ~
+    1e16, past where an int64 micro-key overflows (~9.2e12). The
+    expected probe order is computed here with numpy: the sequential
+    fold, the half-away 6-decimal key ``F.round`` applies
+    (``floor(d2·1e6 + 0.5)``, kept in float64), ties to the lower
+    cluster. Fed through the same ranking tail, it must give the rows
+    ``ivf_search_fixed`` gives, so equal output pins equal probe sets."""
     import numpy as np
 
     from vector_database_watermarking_spark.operators import similarity
 
     rng = np.random.default_rng(7)
     X = rng.normal(scale=1e7, size=(60, 8)).astype(np.float64)
-    emb = spark.createDataFrame(
-        [(i, [float(v) for v in X[i]]) for i in range(len(X))],
-        "vec_id long, embedding array<double>",
-    )
+    schema = "vec_id long, embedding array<double>"
+    emb = spark.createDataFrame([(i, [float(v) for v in X[i]]) for i in range(len(X))], schema)
     assigned, cents = similarity.ivf_build(emb, n_clusters=4, seed=1)
-    q = emb.filter(F.col("vec_id") < 8)
-    # nprobe=2 makes the probe SET matter: the numpy route
-    # (ivf_search) and the native route (ivf_search_fixed) share the
-    # ranking tail, so equal output pins equal probe sets — the
-    # overflowed int64 key collapsed every huge key to INT64_MIN and
-    # probed clusters [0, 1] for every query regardless of distance
-    got = {
-        (r["src"], r["dst"], r["rank"])
-        for r in similarity.ivf_search(q, assigned, cents, k=3, nprobe=2).collect()
-    }
+    d2 = np.zeros((8, len(cents)))
+    for i in range(X.shape[1]):
+        diff = X[:8, i][:, None] - cents[None, :, i]
+        d2 += diff * diff
+    key = np.floor(d2 * 1e6 + 0.5)
+    clusters = np.arange(len(cents))
+    # nprobe=2 of 4 makes the probe SET matter
+    probes = [np.lexsort((clusters, key[r]))[:2] for r in range(8)]
+    assert len({tuple(sorted(p)) for p in probes}) > 1
+    routed = spark.createDataFrame(
+        [(r, [float(v) for v in X[r]], int(c)) for r in range(8) for c in probes[r]],
+        schema + ", cluster int",
+    )
     expected = {
         (r["src"], r["dst"], r["rank"])
-        for r in similarity.ivf_search_fixed(
-            q, assigned, cents, k=3, nprobe=2
-        ).collect()
+        for r in similarity._ivf_rank_candidates(routed, assigned, 3).collect()
+    }
+    q = emb.filter(F.col("vec_id") < 8)
+    got = {
+        (r["src"], r["dst"], r["rank"])
+        for r in similarity.ivf_search_fixed(q, assigned, cents, k=3, nprobe=2).collect()
     }
     assert got == expected and len(got) == 8 * 3
+
+
+def test_sq_saturates_far_out_of_range_queries(spark):
+    """SQ codes clamp before the integer cast: a query dim far above
+    (1e9) or below (−1e9) the base bounds [0, 0.9] codes as 255 or 0,
+    and ``sq_topk`` still returns k rows for that query."""
+    import numpy as np
+
+    from vector_database_watermarking_spark.operators.similarity import (
+        sq_bounds,
+        sq_codes,
+        sq_topk,
+    )
+
+    rng = np.random.default_rng(1)
+    X = rng.uniform(0.0, 0.9, (8, 4))
+    X[0, 0], X[1, 1] = 0.0, 0.9
+    schema = "vec_id long, embedding array<double>"
+    base = spark.createDataFrame([(i, X[i].tolist()) for i in range(8)], schema)
+    lo, hi = sq_bounds(base)
+    assert (lo, hi) == (0.0, 0.9)
+    far = [1e9, 0.5, -1e9, 0.1]
+    q = spark.createDataFrame([(100, far)], schema)
+    out = sq_topk(q, base, k=3).collect()
+    assert sorted(r["rank"] for r in out) == [1, 2, 3]
+    assert sq_codes(np.array([far]), lo, hi).tolist() == [[255, 142, 0, 28]]
+
+
+def test_quantized_rerank_key_ranks_like_oracle(spark):
+    """The SQ/PQ rerank (``_rerank``) and its oracles
+    (``registry._DIST_RANK``) order distances on an exact half-micro
+    boundary alike: 2.5e-6 and 4.5e-6 round half-even to 2e-6 and
+    4e-6 and tie with 2.2e-6 and 4.1e-6, so the lower ``dst`` (the
+    boundary row) ranks first. Half-away rounding would lift them to
+    3e-6 and 5e-6 and rank them second."""
+    import duckdb
+    import pyarrow as pa
+
+    from vector_database_watermarking_spark.operators.similarity import _rerank
+    from vector_database_watermarking_spark.registry import _DIST_RANK
+
+    rows = [(1, 2.5e-6), (2, 2.2e-6), (3, 4.5e-6), (4, 4.1e-6)]
+    assert 2.5e-6 * 1e6 == 2.5 and 4.5e-6 * 1e6 == 4.5
+    cands = spark.createDataFrame(
+        [(0, d, 0, x) for d, x in rows], "src long, dst long, dq long, dist double"
+    )
+    engine = [r["dst"] for r in _rerank(cands, 4, 4).orderBy("rank").collect()]
+    con = duckdb.connect()
+    con.register(
+        "t",
+        pa.table(
+            {
+                "dst": pa.array([d for d, _ in rows], pa.int64()),
+                "dist": pa.array([x for _, x in rows], pa.float64()),
+            }
+        ),
+    )
+    oracle = [r[0] for r in con.execute(f"SELECT dst FROM t ORDER BY {_DIST_RANK}, dst").fetchall()]
+    con.close()
+    assert engine == oracle == [1, 2, 3, 4]
 
 
 def test_semantic_dedup_clusters_and_quality_policy(spark, sf_dir):

@@ -8,11 +8,23 @@ construction-order dependent; per SURVEY §4.1 the engine's reference
 semantics is the **exact kNN graph** (deterministic, oracle-checkable),
 with an LSH tier for scale.
 
-Tiers: :func:`broadcast_or_blocks` decides broadcast-or-blocks for
-the whole exact top-k family (``knn_join``, ``similarity.cosine_topk``,
-``sq_topk``, ``pq_topk``); ``knn_join`` runs it up to
-``MAX_EXACT_BASE_ROWS`` base rows and the LSH tier past it, and
-``knn_edges`` is its self-join.
+The exact top-k family (``knn_join``, ``similarity.cosine_topk``,
+``sq_topk``, ``pq_topk``) shares one frame:
+
+- :func:`broadcast_or_blocks` is the one tier decision (one broadcast,
+  or hash-split blocks and a merge by :func:`rank_key`);
+- :func:`broadcast_topk` is the one broadcast shell: base collect, id
+  sort, non-finite rows dropped, empty-base rule, broadcast, query
+  feed, chunk bound;
+- :func:`select_top_k` (behind :func:`top_k_cells` for full key
+  matrices) is the one per-row ``(key, dst)`` selection, and
+  :func:`fold_sq` the one sequential float64 ``Σ(q_i − b_i)²`` fold.
+
+A member passes only its base state and its per-chunk scorer: here
+:func:`_base_arrays` and :func:`_topk_chunk` (euclidean); cosine, SQ
+and PQ keep theirs in ``similarity``. ``knn_join`` runs the exact
+tiers up to ``MAX_EXACT_BASE_ROWS`` base rows and the LSH tier past
+it, and ``knn_edges`` is its self-join.
 
 Scale notes (100 TB): the exact tiers are O(n²) distance evaluations,
 correct up to ~1e6 rows per side; past that ``knn_join`` buckets with
@@ -140,9 +152,18 @@ def knn_join(
     if exact is not False:
 
         def block(part: DataFrame, rows: list | None, blocked: bool) -> DataFrame:
-            return _exact_knn_broadcast(
-                queries, part, k, exclude_self, emit_dist_sq=blocked, pre_rows=rows
+            out = broadcast_topk(
+                queries,
+                part,
+                rows,
+                k,
+                "src long, dst long, dist_sq double, rank int",
+                _base_arrays,
+                lambda state, q_ids, Q, kk: _topk_chunk(q_ids, Q, state, kk, exclude_self),
             )
+            if blocked:
+                return out
+            return out.select("src", "dst", F.sqrt("dist_sq").alias("dist"), "rank")
 
         def merge(union: DataFrame) -> DataFrame:
             dist = F.sqrt("dist_sq").alias("dist")
@@ -208,9 +229,7 @@ def knn_join(
     pairs = pairs.withColumn("dist_sq", squared_euclidean("q_emb", "b_emb"))
     # representative shortlist — rank() over the rounded distance alone
     # keeps whole tied groups at the cut (see docstring)
-    w_rep = Window.partitionBy("src").orderBy(
-        F.round(F.col("dist_sq"), _RANK_DECIMALS).asc()
-    )
+    w_rep = Window.partitionBy("src").orderBy(rank_key("dist_sq").asc())
     short = (
         pairs.withColumn("_rk", F.rank().over(w_rep))
         .filter(F.col("_rk") <= keep)
@@ -227,9 +246,7 @@ def knn_join(
     )
     if exclude_self:
         fanned = fanned.filter(F.col("src") != F.col("dst"))
-    w = Window.partitionBy("src").orderBy(
-        F.round(F.col("dist_sq"), _RANK_DECIMALS).asc(), F.col("dst").asc()
-    )
+    w = Window.partitionBy("src").orderBy(rank_key("dist_sq").asc(), F.col("dst").asc())
     return (
         fanned.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
@@ -317,21 +334,34 @@ def broadcast_or_blocks(
     return merge(functools.reduce(DataFrame.unionByName, parts))
 
 
-def _exact_knn_broadcast(
+#: the kernels' working-set bound: a few (chunk, n) float64 buffers
+#: are live per chunk, ~0.16 GB per task at 1e7 cells
+CHUNK_CELLS = 10_000_000
+
+
+def broadcast_topk(
     queries: DataFrame,
     base: DataFrame,
+    rows: list | None,
     k: int,
-    exclude_self: bool,
-    emit_dist_sq: bool = False,
-    pre_rows: list | None = None,
+    schema: str,
+    prepare: Callable,
+    score: Callable,
 ) -> DataFrame:
-    """Broadcast-base exact kNN via ``mapInPandas``; each Arrow batch
-    of queries runs :func:`_topk_chunk` against the broadcast base.
+    """The broadcast shell of the exact top-k family: one block of
+    :func:`broadcast_or_blocks` for ``knn_join``, ``cosine_topk``,
+    ``sq_topk`` and ``pq_topk``. A member passes only its base state
+    and its per-chunk scorer.
 
-    Scale notes: correct while the base side fits in a broadcast
-    (~1e6 × d floats); :func:`broadcast_or_blocks` falls back to the
-    blocked tier beyond that, and approximate workloads go through the
-    LSH tier.
+    The shell takes ``rows`` (the probe's ``(vec_id, embedding)``
+    collect) or collects them itself, sorts them by id and drops every
+    row with a non-finite value (its fold is non-finite: never a
+    neighbor), and returns an empty frame of ``schema`` when no row is
+    left. Otherwise the ``(ids, X)`` arrays are broadcast; each task
+    builds ``prepare(ids, X)`` once and yields ``score(state, q_ids, Q,
+    kk)`` — the columns of ``schema``, in order — per chunk of at most
+    ``CHUNK_CELLS`` query × base cells, with ``kk = min(k, n)``.
+
     The query side is repartitioned so a single-file scan still uses
     every core. A self-join (``queries is base``, as in ``knn_edges``)
     neither rescans nor shuffles it: task p of a ``range`` takes slice
@@ -340,53 +370,95 @@ def _exact_knn_broadcast(
     import numpy as np
     import pandas as pd
 
-    sess = queries.sparkSession
-    rows = pre_rows if pre_rows is not None else base.select("vec_id", "embedding").collect()
+    sess = base.sparkSession
+    if rows is None:
+        rows = base.select("vec_id", "embedding").collect()
     ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
     X = np.array([r["embedding"] for r in rows], dtype=np.float64)
     order = np.argsort(ids)
-    if len(ids):  # a non-finite vector's fold is non-finite: never a neighbor
+    if len(ids):
         order = order[np.isfinite(X[order]).all(axis=1)]
     ids, X = ids[order], X[order]
-    bc = sess.sparkContext.broadcast((ids, X))
-    # kk caps at the base size; self-exclusion is handled per row
-    # (masked entries sort last and are dropped), so a query absent
-    # from the base still gets all min(k, n) neighbors
+    # kk caps at the base size; the scorers drop self-hits per row, so
+    # a query absent from the base still gets all min(k, n) rows
     kk = min(k, len(ids))
-    col = "dist_sq" if emit_dist_sq else "dist"
-    if kk <= 0:  # base empty: no neighbors
-        return sess.createDataFrame(
-            [], schema=f"src long, dst long, {col} double, rank int"
-        )
-
+    if kk <= 0:
+        return sess.createDataFrame([], schema=schema)
+    bc = sess.sparkContext.broadcast((ids, X))
+    names = [field.split()[0] for field in schema.split(",")]
     nparts = sess.sparkContext.defaultParallelism
     self_join = queries is base
 
-    def topk(batches):
+    def run(batches):
         b_ids, b_X = bc.value
-        state = _base_arrays(b_ids, b_X)
-        # bound working-set memory: two (chunk, n) float64 buffers are
-        # live in the filter, ~0.16 GB per task at 1e7 cells
+        state = prepare(b_ids, b_X)
         n = len(b_ids)
-        chunk = max(1, int(1e7 // n))
+        chunk = max(1, CHUNK_CELLS // n)
         for pdf in batches:
             if self_join:
                 sl = [slice(p * n // nparts, (p + 1) * n // nparts) for p in pdf["id"]]
                 all_ids = np.concatenate([b_ids[s] for s in sl])
                 all_Q = np.concatenate([b_X[s] for s in sl])
-            else:
+            elif len(pdf):
                 all_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
                 all_Q = np.array(list(pdf["embedding"]), dtype=np.float64)
+            else:
+                continue
             for s in range(0, len(all_ids), chunk):
-                src, dst, val, rank = _topk_chunk(
-                    all_ids[s : s + chunk], all_Q[s : s + chunk], state, kk, exclude_self
-                )
-                val = val if emit_dist_sq else np.sqrt(val)
-                yield pd.DataFrame({"src": src, "dst": dst, col: val, "rank": rank})
+                cols = score(state, all_ids[s : s + chunk], all_Q[s : s + chunk], kk)
+                yield pd.DataFrame(dict(zip(names, cols)))
 
-    q = queries.select("vec_id", "embedding").repartition(nparts)
-    feed = sess.range(0, nparts, 1, nparts) if self_join else q
-    return feed.mapInPandas(topk, schema=f"src long, dst long, {col} double, rank int")
+    if self_join:
+        feed = sess.range(0, nparts, 1, nparts)
+    else:
+        feed = queries.select("vec_id", "embedding").repartition(nparts)
+    return feed.mapInPandas(run, schema=schema)
+
+
+def fold_sq(Q_T, b_T, rows, cols):
+    """``Σ (q_i − b_i)²`` of each cell ``(rows[j], cols[j])``, folded
+    dimension by dimension in float64 — the DuckDB oracle's
+    ``list_sum(list_transform(...))`` arithmetic, bit for bit.
+    ``Q_T`` and ``b_T`` are the transposed query and base matrices."""
+    import numpy as np
+
+    acc = np.zeros(len(rows))
+    diff = np.empty(len(rows))
+    for i in range(len(Q_T)):
+        np.subtract(Q_T[i][rows], b_T[i][cols], out=diff)
+        diff *= diff
+        acc += diff
+    return acc
+
+
+def select_top_k(rows, key, dst, m, kk):
+    """Per-row top-``kk`` of shortlisted cells by ``(key, dst)``:
+    ``rows`` ascending (as ``np.nonzero`` yields them) over ``m`` query
+    rows. Returns the kept cells' indices in ``(row, key, dst)`` order
+    and their 1-based ranks; a non-finite key never ranks, so ranks
+    stay contiguous."""
+    import numpy as np
+
+    order = np.lexsort((dst, key, rows))
+    # rows[order] == rows, so a cell's rank is its offset in its row
+    counts = np.bincount(rows, minlength=m)
+    rank = np.arange(len(rows)) - np.repeat(np.cumsum(counts) - counts, counts)
+    keep = (rank < kk) & np.isfinite(key[order])
+    return order[keep], (rank[keep] + 1).astype(np.int32)
+
+
+def top_k_cells(K, kk):
+    """Per-row top-``kk`` cells of a full ``(m, n)`` key matrix whose
+    columns are in ascending ``dst`` order: every cell at or below its
+    row's ``kk``-th smallest key is shortlisted (a tie-safe superset;
+    a row whose ``kk``-th key is NaN keeps all), then
+    :func:`select_top_k` ranks them. Returns ``(rows, cols, rank)``."""
+    import numpy as np
+
+    h = np.partition(K, kk - 1, axis=1)[:, kk - 1]
+    rows, cols = np.nonzero(~(K > h[:, None]))
+    sel, rank = select_top_k(rows, K[rows, cols], cols, len(K), kk)
+    return rows[sel], cols[sel], rank
 
 
 def _base_arrays(b_ids, b_X):
@@ -424,9 +496,10 @@ def _topk_chunk(q_ids, Q, base, kk, exclude_self):
     own float error (≤ 5u·H): every column with ``g ≤ H + 2E + 2e-6 +
     16u·|H|`` is kept, a superset of the top kk.
 
-    Refine: the fold is recomputed on the shortlisted pairs only (the
-    same IEEE operations element by element, so the same bits), and one
-    ``lexsort`` on (row, key, dst) takes the first kk per row. A row
+    Refine: :func:`fold_sq` recomputes the fold on the shortlisted
+    pairs only (the same IEEE operations element by element, so the
+    same bits), and :func:`select_top_k` takes the first kk per row by
+    (key, dst). A row
     with a non-finite ``g``, ``E`` or ``H`` (a non-finite or
     overflowing query, fewer than kk other columns) is not certified
     and shortlists every column: the full fold.
@@ -451,24 +524,13 @@ def _topk_chunk(q_ids, Q, base, kk, exclude_self):
     shortlist[~certified] = True
     rows, cols = np.nonzero(shortlist)
 
-    Q_T = Q.T
-    acc = np.zeros(len(rows))
-    diff = np.empty(len(rows))
-    for i in range(d):  # the fold, dimension by dimension
-        np.subtract(Q_T[i][rows], b_T[i][cols], out=diff)
-        diff *= diff
-        acc += diff
+    acc = fold_sq(Q.T, b_T, rows, cols)
     key = np.round(acc, _RANK_DECIMALS)
     dst = b_ids[cols]
     if exclude_self:
         key[q_ids[rows] == dst] = np.inf
-    order = np.lexsort((dst, key, rows))
-    # nonzero yields rows ascending, so rows[order] == rows
-    counts = np.bincount(rows, minlength=m)
-    rank = np.arange(len(rows)) - np.repeat(np.cumsum(counts) - counts, counts)
-    keep = (rank < kk) & np.isfinite(key[order])
-    sel = order[keep]
-    return q_ids[rows[sel]], dst[sel], acc[sel], (rank[keep] + 1).astype(np.int32)
+    sel, rank = select_top_k(rows, key, dst, m, kk)
+    return q_ids[rows[sel]], dst[sel], acc[sel], rank
 
 
 def _with_features(df: DataFrame, emb_col: str) -> DataFrame:

@@ -1,13 +1,27 @@
 """Similarity search over embedding columns (north-star extension —
-SURVEY §7 M6): brute-force cosine top-k as the exact baseline, an
-IVF (inverted-file) variant as the scale path, and a cosine near-dup
-threshold join.
+SURVEY §7 M6): brute-force cosine top-k as the exact baseline, SQ and
+PQ quantized top-k, an IVF (inverted-file) variant as the scale path,
+and a cosine near-dup threshold join.
 
-Scale notes: brute-force broadcasts the base side (same contract as
-``operators.knn``); IVF cuts the candidate set to ``nprobe`` clusters
-of the base — the assignment join is an equi-join on cluster id, which
+Cosine, SQ and PQ are members of the exact top-k family of
+``operators.knn``: ``knn.broadcast_or_blocks`` picks the tier and
+``knn.broadcast_topk`` runs the broadcast (base collect, id sort,
+empty-base rule, broadcast, query feed, chunking). Each member here
+passes only its base state and its per-chunk scorer:
+
+- cosine: the base norms and the sequential dot-product fold;
+- SQ: the uint8 codes (:func:`sq_codes`) and the integer code metric;
+- PQ: the codebook, the encoded base and the per-query ADC tables.
+
+All three select through ``knn.top_k_cells``; SQ and PQ rerank their
+candidates with ``knn.fold_sq``, the exact kernel's own fold.
+
+Scale notes: IVF cuts the candidate set to ``nprobe`` clusters of the
+base — the assignment join is an equi-join on cluster id, which
 Catalyst shuffles by key (skew-split by AQE), so the O(n²) pair space
-never materializes. Centroids come from MLlib KMeans (seeded).
+never materializes. Centroids come from a keyed hash sample
+(:func:`ivf_build_fixed`) or MLlib KMeans (:func:`ivf_build`, seeded);
+:func:`ivf_search_fixed` routes natively over either.
 """
 
 from __future__ import annotations
@@ -20,8 +34,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.distance import cosine
-
-_RANK_DECIMALS = 6
+from .knn import (
+    _RANK_DECIMALS,
+    broadcast_or_blocks,
+    broadcast_topk,
+    fold_sq,
+    merge_top_k,
+    rank_key,
+    top_k_cells,
+)
 
 
 def cosine_topk(
@@ -39,93 +60,47 @@ def cosine_topk(
     them by ``knn.rank_key`` — the block kernel's own ``np.round`` key,
     so both tiers return the same rows.
     """
-    from .knn import broadcast_or_blocks, merge_top_k, rank_key
-
     return broadcast_or_blocks(
         base,
-        lambda part, rows, _: _cosine_topk_broadcast(
-            queries, part, k, exclude_self, pre_rows=rows
+        lambda part, rows, _: broadcast_topk(
+            queries,
+            part,
+            rows,
+            k,
+            "src long, dst long, cos_sim double, rank int",
+            _cosine_state,
+            lambda state, q_ids, Q, kk: _cosine_chunk(state, q_ids, Q, kk, exclude_self),
         ),
         lambda union: merge_top_k(union, k, rank_key("cos_sim").desc(), "cos_sim"),
     )
 
 
-def _cosine_topk_broadcast(
-    queries: DataFrame,
-    base: DataFrame,
-    k: int,
-    exclude_self: bool,
-    pre_rows: list | None = None,
-) -> DataFrame:
-    """Broadcast-base cosine top-k via ``mapInPandas``; per-dim
-    sequential accumulation keeps parity with the SQL fold."""
-    sess = queries.sparkSession
-    rows = (
-        pre_rows
-        if pre_rows is not None
-        else base.select("vec_id", "embedding").collect()
-    )
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    order = np.argsort(ids)
-    ids, X = ids[order], X[order]
-    bc = sess.sparkContext.broadcast((ids, X))
-    # self-hits are masked per row (−inf key, sorts last, dropped), so
-    # kk caps at the base size and disjoint queries keep min(k, n)
-    kk = min(k, len(ids))
-    if kk <= 0:
-        return sess.createDataFrame(
-            [], schema="src long, dst long, cos_sim double, rank int"
-        )
+def _cosine_state(b_ids, b_X):
+    """Cosine base state: ids, the transposed base and its norms, each
+    a sequential per-dim fold (parity with the SQL fold)."""
+    b_T = np.ascontiguousarray(b_X.T)
+    bn = np.zeros(len(b_ids))
+    for col in b_T:
+        bn += col * col
+    return b_ids, b_T, np.sqrt(bn)
 
-    def topk(batches):
-        b_ids, b_X = bc.value
-        n, d = b_X.shape
-        chunk = max(1, int(2e7 // max(n, 1)))  # bound (chunk, n) buffers
-        bn = np.zeros((1, n))
-        for i in range(d):
-            bn[0, :] += b_X[:, i] * b_X[:, i]
-        bnorm = np.sqrt(bn)
-        for pdf in batches:
-            all_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            all_Q = np.array(list(pdf["embedding"]), dtype=np.float64)
-            for s in range(0, len(all_ids), chunk):
-                q_ids = all_ids[s : s + chunk]
-                Q = all_Q[s : s + chunk]
-                m = len(q_ids)
-                dot = np.zeros((m, n))
-                qn = np.zeros((m, 1))
-                for i in range(d):  # sequential fold parity with SQL
-                    dot += Q[:, i : i + 1] * b_X[:, i][None, :]
-                    qn[:, 0] += Q[:, i] * Q[:, i]
-                cos = dot / (np.sqrt(qn) * bnorm)
-                r6 = np.round(cos, _RANK_DECIMALS)
-                if exclude_self:
-                    r6[q_ids[:, None] == b_ids[None, :]] = -np.inf
-                out_src = np.repeat(q_ids, kk)
-                out_dst = np.empty(m * kk, dtype=np.int64)
-                out_cos = np.empty(m * kk, dtype=np.float64)
-                out_key = np.empty(m * kk, dtype=np.float64)
-                out_rank = np.tile(np.arange(1, kk + 1, dtype=np.int32), m)
-                for r in range(m):
-                    sel = np.lexsort((b_ids, -r6[r]))[:kk]
-                    out_dst[r * kk : (r + 1) * kk] = b_ids[sel]
-                    out_cos[r * kk : (r + 1) * kk] = cos[r, sel]
-                    out_key[r * kk : (r + 1) * kk] = r6[r, sel]
-                keep = np.isfinite(out_key)
-                yield pd.DataFrame(
-                    {
-                        "src": out_src[keep],
-                        "dst": out_dst[keep],
-                        "cos_sim": out_cos[keep],
-                        "rank": out_rank[keep],
-                    }
-                )
 
-    nparts = sess.sparkContext.defaultParallelism
-    return queries.select("vec_id", "embedding").repartition(nparts).mapInPandas(
-        topk, schema="src long, dst long, cos_sim double, rank int"
-    )
+def _cosine_chunk(state, q_ids, Q, kk, exclude_self):
+    """One chunk's cosine top-``kk``: the dot products and query norms
+    folded dim by dim, ranked by ``(−round(cos, 6), dst)``; self-hits
+    under ``exclude_self`` never rank."""
+    b_ids, b_T, bnorm = state
+    dot = np.zeros((len(q_ids), len(b_ids)))
+    qn = np.zeros((len(q_ids), 1))
+    for i, col in enumerate(b_T):  # sequential fold parity with SQL
+        dot += Q[:, i : i + 1] * col[None, :]
+        qn[:, 0] += Q[:, i] * Q[:, i]
+    cos = dot / (np.sqrt(qn) * bnorm)
+    key = -np.round(cos, _RANK_DECIMALS)
+    if exclude_self:
+        key[q_ids[:, None] == b_ids[None, :]] = np.inf
+    rows, cols, rank = top_k_cells(key, kk)
+    return q_ids[rows], b_ids[cols], cos[rows, cols], rank
 
 
 def cosine_near_dups(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
@@ -647,67 +622,6 @@ def ivf_build(
     return assigned, centroids
 
 
-def ivf_search(
-    queries: DataFrame,
-    assigned: DataFrame,
-    centroids: np.ndarray,
-    k: int,
-    nprobe: int = 4,
-) -> DataFrame:
-    """IVF probe: route each query to its ``nprobe`` nearest centroids,
-    then exact top-k within those clusters only.
-
-    The query→cluster fan-out is tiny (nprobe rows per query); the
-    candidate join is an equi-join on ``cluster``; the final top-k is a
-    per-query window. At 1000 executors this is the textbook ANN
-    sharding: clusters ≈ partitions, probes touch nprobe/n_clusters of
-    the data.
-    """
-    sess = queries.sparkSession
-    bc = sess.sparkContext.broadcast(centroids)
-
-    def route(batches):
-        C = bc.value
-        for pdf in batches:
-            q_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            Q = np.array(list(pdf["embedding"]), dtype=np.float64)
-            d2 = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(-1)
-            # deterministic probe set (review round 12): a bare argsort
-            # leaves exactly-equidistant centroids in introsort-
-            # unspecified order across numpy versions; key on the
-            # 6-decimal-rounded distance with the cluster index as the
-            # tiebreak, the same (dist, cluster) rule ivf_route_fixed
-            # orders by. The key stays float64 (ADVICE round 12: an
-            # int64 cast overflows for d2 > ~9.2e12, garbling probe
-            # order for large-magnitude embeddings) — floor(x*1e6+0.5)
-            # as a float is the same half-away micro quantization,
-            # monotone at every magnitude, and past 2^53 micro-units
-            # the oracle's round(dist, 6) DOUBLE quantizes identically
-            key = np.floor(d2 * 1e6 + 0.5)
-            cols = np.arange(d2.shape[1], dtype=np.int64)
-            probes = np.stack(
-                [np.lexsort((cols, key[r]))[:nprobe] for r in range(len(Q))]
-            )
-            out = pd.DataFrame(
-                {
-                    "vec_id": np.repeat(q_ids, nprobe),
-                    "cluster": probes.reshape(-1).astype(np.int32),
-                }
-            )
-            emb_rep = [e for e in pdf["embedding"] for _ in range(nprobe)]
-            out["embedding"] = emb_rep
-            yield out
-
-    # echo the input embedding type (review round 12): pinning
-    # array<float> silently truncated float64 queries before the
-    # cosine ranking, degrading ranks relative to ivf_search_fixed
-    emb_type = queries.schema["embedding"].dataType.simpleString()
-    routed = queries.select("vec_id", "embedding").mapInPandas(
-        route, schema=f"vec_id long, cluster int, embedding {emb_type}"
-    )
-    return _ivf_rank_candidates(routed, assigned, k)
-
-
 def ivf_search_fixed(
     queries: DataFrame,
     assigned: DataFrame,
@@ -715,10 +629,18 @@ def ivf_search_fixed(
     k: int,
     nprobe: int = 4,
 ) -> DataFrame:
-    """IVF probe over the deterministic index (:func:`ivf_build_fixed`):
-    all-native routing (explode + per-query window) feeding the same
-    cluster equi-join + per-query top-k as the KMeans tier — the whole
-    path is cross-engine reproducible and oracle-checked."""
+    """IVF probe: route each query to its ``nprobe`` nearest centroids
+    (:func:`ivf_route_fixed`, all native: explode + per-query window),
+    then exact cosine top-k within those clusters only.
+
+    Serves both index builders: the hash-sampled
+    :func:`ivf_build_fixed` (the whole path is cross-engine
+    reproducible and oracle-checked) and the KMeans :func:`ivf_build`.
+    The query→cluster fan-out is tiny (nprobe rows per query); the
+    candidate join is an equi-join on ``cluster``; the final top-k is a
+    per-query window. At 1000 executors this is the textbook ANN
+    sharding: clusters ≈ partitions, probes touch nprobe/n_clusters of
+    the data."""
     routed = ivf_route_fixed(queries, centroids, nprobe)
     return _ivf_rank_candidates(routed, assigned, k)
 
@@ -727,8 +649,6 @@ def _ivf_rank_candidates(routed: DataFrame, assigned: DataFrame, k: int) -> Data
     """Shared IVF tail: candidate equi-join on cluster id, exact cosine
     on candidates only, per-query top-k window (rank-limit pushed
     map-side by WindowGroupLimit), ranked by ``knn.rank_key``."""
-    from .knn import rank_key
-
     cand = routed.alias("q").join(
         assigned.select(
             F.col("vec_id").alias("dst"),
@@ -766,7 +686,8 @@ def sq_bounds(
     ``with_count=True`` folds the row count into the same aggregation
     job (the single home of these expressions — ``sq_topk``'s fused
     bounds+count probe and the tests both call here, so the oracle's
-    replay can never drift from a second copy)."""
+    replay can never drift from a second copy). An empty ``emb`` has
+    no bounds and gives the degenerate ``(0.0, 0.0)``."""
     aggs = [
         F.min(F.array_min(F.col(emb_col).cast("array<double>"))).alias("lo"),
         F.max(F.array_max(F.col(emb_col).cast("array<double>"))).alias("hi"),
@@ -774,36 +695,29 @@ def sq_bounds(
     if with_count:
         aggs.append(F.count(F.lit(1)).alias("n"))
     row = emb.agg(*aggs).head()
+    lo, hi = (0.0 if row[c] is None else float(row[c]) for c in ("lo", "hi"))
     if with_count:
-        return float(row["lo"]), float(row["hi"]), int(row["n"])
-    return float(row["lo"]), float(row["hi"])
+        return lo, hi, int(row["n"])
+    return lo, hi
 
 
-def sq_codes(
-    emb_col: str, lo: float, hi: float
-):
-    """uint8 scalar quantization of a float vector column, fully
-    native: ``code = clamp(floor((x - lo) / (hi - lo) * 256), 0, 255)``.
-    ``floor`` (not round) keeps Spark and DuckDB bit-identical — round
-    ties break differently across engines. Returns array<int>.
+def sq_codes(X: np.ndarray, lo: float, hi: float) -> np.ndarray:
+    """uint8 scalar quantization of the rows of ``X``:
+    ``code = clamp(floor((x - lo) / (hi - lo) * 256), 0, 255)``, the
+    float64 operations the DuckDB oracle replays. ``floor`` (not round)
+    keeps the two engines bit-identical — round ties break differently
+    across engines.
 
-    Values outside [lo, hi] (queries that are not a subset of the base
-    the bounds came from) saturate at both ends — without the lower
-    clamp a below-range dim would go unboundedly negative and swamp
-    the integer metric. A degenerate corpus (hi == lo) quantizes to
-    all-zero codes (rng treated as 1) instead of dividing by zero;
-    candidate ranking then falls through to the deterministic dst
-    tie-break and the exact rerank still orders the output."""
+    The clamp comes before the integer cast, so a value outside
+    [lo, hi] (queries that are not a subset of the base the bounds came
+    from) saturates at 0 or 255 however far out it lies; a NaN codes as
+    0. A degenerate corpus (hi == lo) quantizes to all-zero codes (rng
+    treated as 1) instead of dividing by zero; candidate ranking then
+    falls through to the deterministic dst tie-break and the exact
+    rerank still orders the output."""
     rng = (hi - lo) or 1.0
-    return F.transform(
-        F.col(emb_col).cast("array<double>"),
-        lambda x: F.greatest(
-            F.least(
-                F.floor((x - F.lit(lo)) / F.lit(rng) * 256).cast("int"), F.lit(255)
-            ),
-            F.lit(0),
-        ),
-    )
+    codes = np.floor((X - lo) / rng * 256)
+    return np.clip(np.nan_to_num(codes, nan=0.0), 0, 255).astype(np.uint8)
 
 
 def sq_topk(
@@ -818,32 +732,35 @@ def sq_topk(
     keep the top ``refine`` per query, exact-rerank those in float64.
 
     Output: (src, dst, dist, rank) — rank 1-based by exact distance
-    (6-decimal rounded), ties by dst, over the refined candidate set.
+    (``knn.rank_key``), ties by dst, over the refined candidate set.
 
     Scale shape: the candidate scan reads d bytes per vector instead
     of 4d and adds/multiplies integers — on a 100 TB corpus this is
     the tier between IVF routing (prunes clusters) and the exact
     rerank (touches ``refine`` float vectors per query). The base
-    broadcasts at the SAME row threshold as the exact tier (review
-    round 12 corrected an earlier 4x cap: the broadcast must carry the
-    float64 vectors for the exact rerank alongside the uint8 codes, so
-    its bytes-per-row are ~1.1x the exact tier's, not a quarter); past
-    that, hash-split blocks each contribute their integer
+    broadcasts at the SAME row threshold as the exact tier (the
+    broadcast carries the float64 vectors for the exact rerank, and
+    each task derives the uint8 codes from them); past that,
+    hash-split blocks each contribute their integer
     top-``refine`` and a per-query window merges them — block-count
     invariant, never a whole-base collect. Both stages are
     deterministic pure arithmetic, so the DuckDB oracle replays the
     whole path bit-for-bit.
     """
-    from .knn import broadcast_or_blocks
-
     # bounds + count in ONE aggregation job — it stands in for the tier
     # probe, so the hot path scans the base once here and once in the
     # candidate stage, not three times
     lo, hi, cnt = sq_bounds(base, with_count=True)
     cands = broadcast_or_blocks(
         base,
-        lambda part, _rows, _: _sq_candidates_broadcast(
-            queries, part, lo, hi, refine, exclude_self
+        lambda part, rows, _: broadcast_topk(
+            queries,
+            part,
+            rows,
+            refine,
+            _CANDIDATES,
+            lambda b_ids, b_X: _sq_state(b_ids, b_X, lo, hi),
+            lambda state, q_ids, Q, kk: _sq_chunk(state, q_ids, Q, kk, exclude_self),
         ),
         n=cnt,
     )
@@ -853,12 +770,10 @@ def sq_topk(
 def _rerank(cands: DataFrame, refine: int, k: int) -> DataFrame:
     """The SQ and PQ merge, the same in both tiers: the global
     top-``refine`` candidates by the integer metric ``(dq, dst)``, then
-    the top ``k`` of those by exact distance — both windows
-    deterministic."""
+    the top ``k`` of those by exact distance (``knn.rank_key``, ties by
+    ``dst``) — both windows deterministic."""
     w_dq = Window.partitionBy("src").orderBy("dq", "dst")
-    w_ex = Window.partitionBy("src").orderBy(
-        F.round(F.col("dist"), _RANK_DECIMALS), F.col("dst")
-    )
+    w_ex = Window.partitionBy("src").orderBy(rank_key("dist"), F.col("dst"))
     return (
         cands.withColumn("crank", F.row_number().over(w_dq))
         .filter(F.col("crank") <= refine)
@@ -868,111 +783,47 @@ def _rerank(cands: DataFrame, refine: int, k: int) -> DataFrame:
     )
 
 
-def _sq_candidates_broadcast(
-    queries: DataFrame,
-    base: DataFrame,
-    lo: float,
-    hi: float,
-    refine: int,
-    exclude_self: bool,
-) -> DataFrame:
-    """One SQ block: broadcast the (ids, codes, floats) matrices, emit
-    each query's integer top-``refine`` with both the candidate metric
-    ``dq`` and the exact float64 distance (sequential per-dim fold —
-    ulp parity with the SQL replay)."""
-    sess = base.sparkSession
-    b = base.select("vec_id", sq_codes("embedding", lo, hi).alias("codes"), "embedding")
-    rows = b.collect()
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    # uint8, not int64 (review round 12): codes are 0..255 by
-    # construction, and the broadcast is the tier's memory budget —
-    # the int64 diff buffers below upcast per chunk, never the payload
-    C = np.array([r["codes"] for r in rows], dtype=np.uint8)
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    order = np.argsort(ids)
-    ids, C, X = ids[order], C[order], X[order]
-    bc = sess.sparkContext.broadcast((ids, C, X))
+#: SQ and PQ candidates: the integer metric ``dq`` next to the exact
+#: distance, so one merge (:func:`_rerank`) serves both tiers
+_CANDIDATES = "src long, dst long, dq long, dist double"
 
-    q = queries.select(
-        F.col("vec_id").alias("src"),
-        sq_codes("embedding", lo, hi).alias("qcodes"),
-        F.col("embedding").alias("qemb"),
-    )
+#: a self-hit's ``dq``: ranks after every real candidate, then dropped
+_NO_CANDIDATE = np.iinfo(np.int64).max
 
-    def search(batches):
-        # chunked batch-matrix form (same shape as _exact_knn_broadcast):
-        # the integer candidate metric is accumulated dim-by-dim over a
-        # (chunk, n) buffer for a whole chunk of queries at once, and
-        # the exact rerank distances for all selected candidates of the
-        # chunk are folded in one (Σ|sel|, d) pass — no per-query-row
-        # Python scan of the base. Working set is three (chunk, n)
-        # int64 buffers, bounded by the chunk size.
-        b_ids, b_C, b_X = bc.value
-        n, d = b_C.shape
-        chunk = max(1, int(2e7 // max(n, 1)))
-        sent = np.iinfo(np.int64).max  # self-exclusion sentinel
-        take = min(refine, n)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            all_src = pdf["src"].to_numpy(dtype=np.int64)
-            all_QC = np.array(list(pdf["qcodes"]), dtype=np.int64)
-            all_QE = np.array(list(pdf["qemb"]), dtype=np.float64)
-            for s in range(0, len(all_src), chunk):
-                src = all_src[s : s + chunk]
-                QC = all_QC[s : s + chunk]
-                QE = all_QE[s : s + chunk]
-                m = len(src)
-                dq = np.zeros((m, n), dtype=np.int64)
-                diff = np.empty((m, n), dtype=np.int64)
-                for i in range(d):
-                    np.subtract(QC[:, i][:, None], b_C[:, i][None, :], out=diff)
-                    diff *= diff
-                    dq += diff
-                keyed = (
-                    np.where(src[:, None] == b_ids[None, :], sent, dq)
-                    if exclude_self
-                    else dq
-                )
-                sel_rows: list = []
-                sel_cols: list = []
-                for r in range(m):
-                    row = keyed[r]
-                    if n > 4 * take:
-                        # tie-safe pre-select: keep everything ≤ the max
-                        # of the 2·take smallest so equal dq values still
-                        # resolve by the ascending-id tiebreak exactly
-                        part = np.argpartition(row, min(2 * take, n - 1))[
-                            : 2 * take
-                        ]
-                        part = np.nonzero(row <= row[part].max())[0]
-                    else:
-                        part = np.arange(n)
-                    # b_ids is globally ascending, so index order == id
-                    # order: lexsort (dq primary, index tiebreak) is the
-                    # same (dq, dst) key as the single-row path had
-                    part = part[np.lexsort((part, row[part]))][:take]
-                    part = part[row[part] != sent]
-                    sel_rows.append(np.full(len(part), r, dtype=np.int64))
-                    sel_cols.append(part)
-                rr = np.concatenate(sel_rows)
-                cc = np.concatenate(sel_cols)
-                E = b_X[cc]
-                Qe = QE[rr]
-                dist = np.zeros(len(cc))
-                for i in range(d):  # sequential fold parity
-                    dd = E[:, i] - Qe[:, i]
-                    dist += dd * dd
-                yield pd.DataFrame(
-                    {
-                        "src": src[rr],
-                        "dst": b_ids[cc],
-                        "dq": dq[rr, cc],
-                        "dist": np.sqrt(dist),
-                    }
-                )
 
-    return q.mapInPandas(search, schema="src long, dst long, dq long, dist double")
+def _candidates(dq, q_ids, Q, b_ids, b_T, kk, exclude_self):
+    """SQ and PQ's chunk tail: each query's top-``kk`` base rows by
+    ``(dq, dst)`` (``knn.top_k_cells``; self-hits under
+    ``exclude_self`` are never taken) with their exact distances, the
+    square root of ``knn.fold_sq``."""
+    if exclude_self:
+        dq[q_ids[:, None] == b_ids[None, :]] = _NO_CANDIDATE
+    rows, cols, _ = top_k_cells(dq, kk)
+    keep = dq[rows, cols] != _NO_CANDIDATE
+    rows, cols = rows[keep], cols[keep]
+    dist = np.sqrt(fold_sq(Q.T, b_T, rows, cols))
+    return q_ids[rows], b_ids[cols], dq[rows, cols], dist
+
+
+def _sq_state(b_ids, b_X, lo, hi):
+    """SQ base state: ids, the transposed base (rerank fold) and the
+    transposed uint8 codes (integer metric)."""
+    codes = sq_codes(b_X, lo, hi)
+    return b_ids, np.ascontiguousarray(b_X.T), np.ascontiguousarray(codes.T), lo, hi
+
+
+def _sq_chunk(state, q_ids, Q, kk, exclude_self):
+    """One chunk's SQ candidates: the integer squared code distance
+    ``dq``, accumulated dim by dim over a (chunk, n) int64 buffer."""
+    b_ids, b_T, c_T, lo, hi = state
+    QC = sq_codes(Q, lo, hi).astype(np.int64)
+    dq = np.zeros((len(q_ids), len(b_ids)), dtype=np.int64)
+    diff = np.empty_like(dq)
+    for i, col in enumerate(c_T):
+        np.subtract(QC[:, i][:, None], col[None, :], out=diff)
+        diff *= diff
+        dq += diff
+    return _candidates(dq, q_ids, Q, b_ids, b_T, kk, exclude_self)
 
 
 # ---------------------------------------------------------------- product quantization
@@ -1040,8 +891,8 @@ def _pq_encode(
 
 
 def _pq_query_mic(Q: "np.ndarray", cents: "np.ndarray", m: int):
-    """(m, nq, ksub) int64 query ADC tables — one Arrow batch of
-    queries, so the full stack is small."""
+    """(m, nq, ksub) int64 query ADC tables — one chunk of queries,
+    so the full stack is small."""
     return np.stack([_pq_subspace_mic(Q, cents, m, j) for j in range(m)])
 
 
@@ -1061,7 +912,7 @@ def pq_topk(
     integer top-``refine``, exact-rerank in float64.
 
     Output: (src, dst, dist, rank) — rank 1-based by exact distance
-    (6-decimal rounded), ties by dst, over the refined candidates.
+    (``knn.rank_key``), ties by dst, over the refined candidates.
 
     Scale shape: PQ is the memory-compression tier of the ANN family —
     m·nbits bits per vector (4 bytes here vs 256 for the raw floats),
@@ -1070,15 +921,13 @@ def pq_topk(
     (prune clusters, then ADC-scan the survivors, then rerank). The
     deterministic hash-sample codebook keeps every stage —
     quantization, ADC ranking, rerank — replayable by the DuckDB
-    oracle. Broadcast of (ids, codes, floats) while the base fits —
-    the SAME row threshold as the exact tier (review round 12: the
-    rerank floats dominate the payload, so the old 4x cap overstated
-    the compression's broadcast headroom); hash-split blocks with a
-    global (dq, dst) merge past it — block-count invariant, never a
-    whole-base collect.
+    oracle. The base floats broadcast while the base fits — the SAME
+    row threshold as the exact tier (the rerank floats dominate the
+    payload) — and each task encodes them once; hash-split blocks with
+    one global codebook and a global (dq, dst) merge past it —
+    block-count invariant, never a whole-base collect.
     """
     from ..functions.hashing import hash60
-    from .knn import broadcast_or_blocks
 
     ksub = 2**nbits
     if ksub > 256:
@@ -1105,99 +954,36 @@ def pq_topk(
         )
         return np.array([r["embedding"] for r in cent_rows], dtype=np.float64)
 
-    cands = broadcast_or_blocks(
-        base,
-        lambda part, rows, blocked: _pq_candidates_broadcast(
+    def block(part: DataFrame, rows: list | None, blocked: bool) -> DataFrame:
+        # each task encodes its broadcast base against the codebook once
+        cents = global_codebook() if blocked else pq_codebook(rows, m, ksub)
+        return broadcast_topk(
             queries,
             part,
-            global_codebook() if blocked else None,
-            m,
-            ksub,
+            rows,
             refine,
-            exclude_self,
-            pre_rows=rows,
-        ),
-    )
-    return _rerank(cands, refine, k)
+            _CANDIDATES,
+            lambda b_ids, b_X: (
+                b_ids,
+                np.ascontiguousarray(b_X.T),
+                _pq_encode(b_X, cents, m).T.astype(np.int64),
+            ),
+            lambda state, q_ids, Q, kk: _pq_chunk(state, cents, q_ids, Q, kk, exclude_self),
+        )
+
+    return _rerank(broadcast_or_blocks(base, block), refine, k)
 
 
-def _pq_candidates_broadcast(
-    queries: DataFrame,
-    base: DataFrame,
-    cents: "np.ndarray | None",
-    m: int,
-    ksub: int,
-    refine: int,
-    exclude_self: bool,
-    pre_rows: list | None = None,
-) -> DataFrame:
-    """One PQ block: encode the (broadcast) base against the codebook,
-    then each query batch builds its ADC table and emits its integer
-    top-``refine`` with the exact float64 distance alongside."""
-    sess = base.sparkSession
-    rows = (
-        pre_rows
-        if pre_rows is not None
-        else base.select("vec_id", "embedding").collect()
-    )
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    X = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    order = np.argsort(ids)
-    ids, X = ids[order], X[order]
-    if cents is None:
-        cents = pq_codebook(rows, m, ksub)
-    codes = _pq_encode(X, cents, m)
-    bc = sess.sparkContext.broadcast((ids, X, codes, cents))
-
-    q = queries.select(
-        F.col("vec_id").alias("src"), F.col("embedding").alias("qemb")
-    )
-
-    def search(batches):
-        b_ids, b_X, b_codes, b_cents = bc.value
-        mm = b_codes.shape[1]
-        n = len(b_ids)
-        # bound the vectorized (chunk, n) dq buffer like the SQ path
-        chunk = max(1, int(2e7 // max(n, 1)))
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Q = np.array(list(pdf["qemb"]), dtype=np.float64)
-            qmic = _pq_query_mic(Q, b_cents, mm)  # (m, nq, ksub)
-            srcs = pdf["src"].to_numpy(dtype=np.int64)
-            gathers = [b_codes[:, j].astype(np.int64) for j in range(mm)]
-            for s in range(0, len(srcs), chunk):
-                hi_ = min(s + chunk, len(srcs))
-                # ADC for the whole chunk in mm gathers instead of a
-                # per-query Python loop (review round 12) — integer
-                # adds accumulate j-major exactly as before
-                dq_c = qmic[0][s:hi_][:, gathers[0]]
-                for j in range(1, mm):
-                    dq_c += qmic[j][s:hi_][:, gathers[j]]
-                for qi in range(s, hi_):
-                    src = srcs[qi]
-                    dq = dq_c[qi - s]
-                    mask = np.ones(n, dtype=bool)
-                    if exclude_self:
-                        mask &= b_ids != src
-                    cand = np.nonzero(mask)[0]
-                    sel = cand[np.lexsort((b_ids[cand], dq[cand]))][:refine]
-                    E = b_X[sel]
-                    qe = Q[qi]
-                    dist = np.zeros(len(sel))
-                    for i in range(E.shape[1]):  # sequential fold parity
-                        diff = E[:, i] - qe[i]
-                        dist += diff * diff
-                    yield pd.DataFrame(
-                        {
-                            "src": np.full(len(sel), src, dtype=np.int64),
-                            "dst": b_ids[sel],
-                            "dq": dq[sel],
-                            "dist": np.sqrt(dist),
-                        }
-                    )
-
-    return q.mapInPandas(search, schema="src long, dst long, dq long, dist double")
+def _pq_chunk(state, cents, q_ids, Q, kk, exclude_self):
+    """One chunk's PQ candidates: ``dq`` by ADC, the query's per-subspace
+    micro-int tables gathered at the base codes and summed j-major
+    (integer adds: exact in any order)."""
+    b_ids, b_T, codes_T = state
+    qmic = _pq_query_mic(Q, cents, len(codes_T))  # (m, nq, ksub)
+    dq = qmic[0][:, codes_T[0]]
+    for j in range(1, len(codes_T)):
+        dq += qmic[j][:, codes_T[j]]
+    return _candidates(dq, q_ids, Q, b_ids, b_T, kk, exclude_self)
 
 
 def semantic_dedup(

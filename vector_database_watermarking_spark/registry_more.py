@@ -20,6 +20,7 @@ from .registry import (
     QUERIES,
     SEED,
     _COS_RANK,
+    _DIST_RANK,
     _ID,
     _components_oracle,
     _knn_cte,
@@ -1642,7 +1643,7 @@ ex AS (
   WHERE r.crank <= {_PQ_REFINE}
 )
 SELECT src, dst, round(dist, 6) AS dist,
-       CAST(row_number() OVER (PARTITION BY src ORDER BY round(dist, 6), dst) AS INTEGER) AS rank
+       CAST(row_number() OVER (PARTITION BY src ORDER BY {_DIST_RANK}, dst) AS INTEGER) AS rank
 FROM ex QUALIFY rank <= 5
 """,
 )
@@ -1674,7 +1675,7 @@ WITH b AS (
 codes AS (
   SELECT vec_id, embedding,
          list_transform(embedding,
-           x -> greatest(least(CAST(floor((CAST(x AS DOUBLE) - b.lo) / (b.hi - b.lo) * 256) AS INTEGER), 255), 0)) AS c
+           x -> CAST(greatest(least(floor((CAST(x AS DOUBLE) - b.lo) / (b.hi - b.lo) * 256), 255), 0) AS INTEGER)) AS c
   FROM embeddings, b
 ),
 cand AS (
@@ -1700,7 +1701,7 @@ ex AS (
   WHERE r.crank <= 20
 )
 SELECT src, dst, round(dist, 6) AS dist,
-       CAST(row_number() OVER (PARTITION BY src ORDER BY round(dist, 6), dst) AS INTEGER) AS rank
+       CAST(row_number() OVER (PARTITION BY src ORDER BY {_DIST_RANK}, dst) AS INTEGER) AS rank
 FROM ex QUALIFY rank <= 5
 """,
 )
