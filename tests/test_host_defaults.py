@@ -61,6 +61,14 @@ def test_session_codegen_cache_holds_a_pipeline(spark):
     assert int(got) == session.CODEGEN_CACHE_ENTRIES > 100
 
 
+def test_session_starts_python_workers_from_package_daemon(spark):
+    """Python workers start from the package's daemon module, which
+    drops Spark's zips from their path (tests/test_worker_daemon.py)."""
+    conf = spark.sparkContext.getConf().get("spark.python.daemon.module")
+    assert conf == session.WORKER_DAEMON == "vector_database_watermarking_spark._worker_daemon"
+    importlib.import_module(conf)
+
+
 def test_scratch_dir_under_spark_local_dirs(tmp_path, monkeypatch):
     """Query scratch lives under the first SPARK_LOCAL_DIRS entry, one
     dir per process; dirs left by dead processes are swept."""

@@ -107,6 +107,23 @@ def test_pq_topk_recall_codes_and_tiers(spark, sf_dir):
         pq_topk(queries, emb, k=5, refine=50, m=16, nbits=9)
 
 
+def test_pq_encode_large_magnitude_picks_true_argmin():
+    """At |x| ~ 1e7 the micro key floor(d² · 1e6 + 0.5) passes 2⁶³; an
+    int64 key wraps there, so the codes must come from a float key."""
+    import numpy as np
+
+    from vector_database_watermarking_spark.operators.similarity import _pq_encode
+
+    rng = np.random.default_rng(3)
+    X = rng.normal(scale=1e7, size=(60, 8))
+    cents = rng.normal(scale=1e7, size=(16, 8))
+    true = np.stack(
+        [((X[:, None, s] - cents[None, :, s]) ** 2).sum(axis=2).argmin(axis=1) for s in (slice(0, 4), slice(4, 8))],
+        axis=1,
+    )
+    assert (_pq_encode(X, cents, 2) == true).all()
+
+
 def test_ivf_route_large_magnitude_embeddings(spark):
     """The native IVF route keeps its probe order for large-magnitude
     embeddings over KMeans centroids. Vectors at |x| ~ 1e7 give d2 ~

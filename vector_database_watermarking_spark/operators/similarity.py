@@ -783,12 +783,13 @@ def _rerank(cands: DataFrame, refine: int, k: int) -> DataFrame:
     )
 
 
-#: SQ and PQ candidates: the integer metric ``dq`` next to the exact
+#: SQ and PQ candidates: the integer-valued metric ``dq`` (a float64,
+#: exact below 2⁵³ and never wrapping past it) next to the exact
 #: distance, so one merge (:func:`_rerank`) serves both tiers
-_CANDIDATES = "src long, dst long, dq long, dist double"
+_CANDIDATES = "src long, dst long, dq double, dist double"
 
 #: a self-hit's ``dq``: ranks after every real candidate, then dropped
-_NO_CANDIDATE = np.iinfo(np.int64).max
+_NO_CANDIDATE = np.inf
 
 
 def _candidates(dq, q_ids, Q, b_ids, b_T, kk, exclude_self):
@@ -814,10 +815,11 @@ def _sq_state(b_ids, b_X, lo, hi):
 
 def _sq_chunk(state, q_ids, Q, kk, exclude_self):
     """One chunk's SQ candidates: the integer squared code distance
-    ``dq``, accumulated dim by dim over a (chunk, n) int64 buffer."""
+    ``dq``, accumulated dim by dim over a (chunk, n) float64 buffer
+    (at most d·255², exact)."""
     b_ids, b_T, c_T, lo, hi = state
-    QC = sq_codes(Q, lo, hi).astype(np.int64)
-    dq = np.zeros((len(q_ids), len(b_ids)), dtype=np.int64)
+    QC = sq_codes(Q, lo, hi).astype(np.float64)
+    dq = np.zeros((len(q_ids), len(b_ids)))
     diff = np.empty_like(dq)
     for i, col in enumerate(c_T):
         np.subtract(QC[:, i][:, None], col[None, :], out=diff)
@@ -852,17 +854,20 @@ def pq_codebook(base_rows: list, m: int, ksub: int) -> "np.ndarray":
 
 def _pq_subspace_mic(X: "np.ndarray", cents: "np.ndarray", m: int, j: int):
     """One subspace's micro-int distance table between rows of ``X``
-    and the codebook: (n, ksub) int64 of floor(d² · 1e6 + 0.5) — the
+    and the codebook: (n, ksub) float64 of floor(d² · 1e6 + 0.5) — the
     half-away-from-zero 6-decimal key DuckDB's ``round`` uses
-    (distances are ≥ 0), so argmins and integer ADC sums agree with
-    the oracle bit-for-bit. Accumulation is sequential per dim inside
-    the subspace — fold parity with ``list_sum(list_transform(...))``."""
+    (distances are ≥ 0), so argmins and integer-valued ADC sums agree
+    with the oracle bit-for-bit. The key stays float64, like the IVF
+    probe key: an int64 cast wraps past d² ≈ 9.2e12 and would rank
+    large-magnitude vectors by garbage. Accumulation is sequential per
+    dim inside the subspace — fold parity with
+    ``list_sum(list_transform(...))``."""
     ds = X.shape[1] // m
     acc = np.zeros((X.shape[0], cents.shape[0]))
     for i in range(j * ds, (j + 1) * ds):  # sequential fold parity
         diff = X[:, i][:, None] - cents[None, :, i]
         acc += diff * diff
-    return np.floor(acc * 1e6 + 0.5).astype(np.int64)
+    return np.floor(acc * 1e6 + 0.5)
 
 
 def _pq_encode(
@@ -891,7 +896,7 @@ def _pq_encode(
 
 
 def _pq_query_mic(Q: "np.ndarray", cents: "np.ndarray", m: int):
-    """(m, nq, ksub) int64 query ADC tables — one chunk of queries,
+    """(m, nq, ksub) float64 query ADC tables — one chunk of queries,
     so the full stack is small."""
     return np.stack([_pq_subspace_mic(Q, cents, m, j) for j in range(m)])
 
@@ -977,7 +982,7 @@ def pq_topk(
 def _pq_chunk(state, cents, q_ids, Q, kk, exclude_self):
     """One chunk's PQ candidates: ``dq`` by ADC, the query's per-subspace
     micro-int tables gathered at the base codes and summed j-major
-    (integer adds: exact in any order)."""
+    (integer-valued adds: exact in any order below 2⁵³)."""
     b_ids, b_T, codes_T = state
     qmic = _pq_query_mic(Q, cents, len(codes_T))  # (m, nq, ksub)
     dq = qmic[0][:, codes_T[0]]

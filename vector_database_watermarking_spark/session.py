@@ -17,6 +17,8 @@ DRIVER_MEM_CAP_MB = 48 * 1024
 # needs, and each run recompiles 50-90 of them (Janino, then the JIT
 # from scratch), a count that varies with stage order.
 CODEGEN_CACHE_ENTRIES = 1000
+#: the Python worker daemon module (see :func:`get_spark`)
+WORKER_DAEMON = "vector_database_watermarking_spark._worker_daemon"
 
 
 def default_driver_memory() -> str:
@@ -64,6 +66,18 @@ def get_spark(app_name: str = "vdb_wm_spark", cpus: int | None = None) -> SparkS
     pipeline reuses its compiled stages. ``cpus`` defaults
     to :func:`default_cpus`; the driver heap is
     :func:`default_driver_memory` unless ``SPARK_DRIVER_MEM`` is set.
+
+    Python workers start from :data:`WORKER_DAEMON`
+    (``spark.python.daemon.module``). Stock workers import PySpark from
+    Spark's ``pyspark.zip``, and every task's
+    ``importlib.invalidate_caches()`` re-reads the 16 zip importers that
+    leaves: a fixed ~0.1 s per task of every ``mapInPandas`` and pandas
+    UDF. The daemon drops Spark's zip and jar entries from the workers'
+    ``sys.path`` when site-packages holds the same PySpark and py4j
+    (byte-equal ``version.py``), and leaves the path exactly as Spark
+    set it otherwise. Like the package's UDFs, which cloudpickle sends
+    by reference, it must be importable by the workers: from their
+    working directory or ``PYTHONPATH``.
     """
     if cpus is None:
         cpus = default_cpus()
@@ -84,6 +98,7 @@ def get_spark(app_name: str = "vdb_wm_spark", cpus: int | None = None) -> SparkS
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.daemon.module", WORKER_DAEMON)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
